@@ -80,8 +80,51 @@ def test_unparseable_entries_skip_but_all_failed_errors():
     assert got.error is not None  # uninterpretable_data analog
 
 
+def _zipcrypto_zip(name: str, payload: bytes, password: bytes) -> bytes:
+    """One stored entry under traditional PKWARE encryption (APPNOTE
+    6.1): a 12-byte encryption header, then the data, both run through
+    the CRC-32-keyed stream cipher; general-purpose flag bit 0 set."""
+    import struct
+    import zlib
+
+    table = []
+    for n in range(256):
+        c = n
+        for _ in range(8):
+            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
+        table.append(c)
+    keys = [0x12345678, 0x23456789, 0x34567890]
+
+    def update(b):
+        keys[0] = (keys[0] >> 8) ^ table[(keys[0] ^ b) & 0xFF]
+        keys[1] = ((keys[1] + (keys[0] & 0xFF)) * 134775813 + 1) & 0xFFFFFFFF
+        keys[2] = (keys[2] >> 8) ^ table[(keys[2] ^ (keys[1] >> 24)) & 0xFF]
+
+    for b in password:
+        update(b)
+    crc = zlib.crc32(payload)
+    plain = bytes(range(11)) + bytes([crc >> 24]) + payload
+    cipher = bytearray()
+    for b in plain:
+        t = keys[2] | 2
+        cipher.append(b ^ (((t * (t ^ 1)) >> 8) & 0xFF))
+        update(b)
+    fname = name.encode()
+    fixed = struct.pack("<HHHHHIII", 20, 0x1, 0, 0, 0, crc, len(cipher),
+                        len(payload))
+    local = b"PK\x03\x04" + fixed + struct.pack("<HH", len(fname), 0) + fname
+    central = (b"PK\x01\x02" + struct.pack("<H", 20) + fixed
+               + struct.pack("<HHHHHII", len(fname), 0, 0, 0, 0, 0, 0)
+               + fname)
+    end = struct.pack("<4sHHHHIIH", b"PK\x05\x06", 0, 0, 1, 1,
+                      len(central), len(local) + len(cipher), 0)
+    return local + bytes(cipher) + central + end
+
+
 def test_encrypted_zip_errors():
-    data = open("/root/reference/tests/1_with_password.zip", "rb").read()
+    data = _zipcrypto_zip("1.html", HTML, b"secret")
+    # a genuine encrypted archive: zipfile decrypts it with the password
+    assert zipfile.ZipFile(io.BytesIO(data)).read("1.html", pwd=b"secret") == HTML
     got = extract(data, url="1_with_password.zip")
     assert got.error is not None and "encrypted" in got.error.lower()
 

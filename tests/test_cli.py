@@ -47,9 +47,22 @@ def test_stdin_with_mime_pin():
     assert proc.stdout == b"from stdin\n"
 
 
-def test_metadata_export_runs():
-    proc = run_cli("--output_type", "metadata",
-                   os.path.join(REFERENCE_TESTS, "1.html"))
+@pytest.fixture()
+def corpus_page(tmp_path):
+    """A ``spark.corpus`` page (paragraphs, a link, maybe a list or
+    table) written to a file."""
+    import random
+
+    from docwire_spark.spark.corpus import make_page
+
+    html = make_page(random.Random(3), 3, "host0.example", False)[2]
+    path = tmp_path / "page.html"
+    path.write_bytes(html)
+    return str(path)
+
+
+def test_metadata_export_runs(corpus_page):
+    proc = run_cli("--output_type", "metadata", corpus_page)
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout  # metadata exporter always renders a block
 
@@ -75,12 +88,12 @@ def test_version():
     assert proc.stdout.startswith(b"docwire_spark ")
 
 
-def test_max_nodes_filter_truncates():
+def test_max_nodes_filter_truncates(corpus_page):
     """--max_nodes_number mirrors filterByMaxNodeNumber
     (continuation::stop after N nodes, standard_filter.h:58-62)."""
-    full = run_cli(os.path.join(REFERENCE_TESTS, "1.html"))
-    capped = run_cli("--max_nodes_number", "2",
-                     os.path.join(REFERENCE_TESTS, "1.html"))
+    full = run_cli(corpus_page)
+    capped = run_cli("--max_nodes_number", "2", corpus_page)
+    assert full.returncode == 0, full.stderr
     assert capped.returncode == 0, capped.stderr
     assert len(capped.stdout) < len(full.stdout)
 

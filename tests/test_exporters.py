@@ -7,28 +7,22 @@ document_parsing_tests.cpp metadata variants).
   rules from csv_writer.cpp:18-45)
 """
 
-import os
-
 import pytest
 
 from docwire_spark.kernel.api import extract_events
 from docwire_spark.kernel.csv_writer import render_csv
 from docwire_spark.kernel.html_writer import render_html
 from docwire_spark.kernel.meta_writer import render_metadata
-
-REF_TESTS = "/root/reference/tests"
+from tests.conftest import reference_fixture
 
 
 def _events_meta(name):
-    data = open(os.path.join(REF_TESTS, name), "rb").read()
-    return extract_events(data, url=name)
+    return extract_events(reference_fixture(name), url=name)
 
 
 @pytest.mark.parametrize("n", [1, 2, 3])
 def test_html_exporter_goldens(n):
-    golden = open(
-        os.path.join(REF_TESTS, f"{n}.html.out.html"), "rb"
-    ).read()
+    golden = reference_fixture(f"{n}.html.out.html")
     events, meta = _events_meta(f"{n}.html")
     assert render_html(events, meta) == golden
 
@@ -36,7 +30,7 @@ def test_html_exporter_goldens(n):
 @pytest.mark.parametrize("variant", ["created", "modified"])
 def test_metadata_exporter_goldens(variant):
     name = f"meta_libreoffice_3.5_{variant}.html"
-    golden = open(os.path.join(REF_TESTS, name + ".out"), "rb").read()
+    golden = reference_fixture(name + ".out")
     _events, meta = _events_meta(name)
     assert render_metadata(meta) == golden
 

@@ -29,11 +29,16 @@ def test_fuzz_never_raises():
 
 
 def test_truncated_real_files_never_raise():
+    from docwire_spark.ops import extraction_binary as eb
+
     rng = random.Random(99)
-    fixtures = ["1.doc", "1.xls", "1.ppt", "1.xlsb", "1.pages",
-                "1.docx", "1.odt", "first.eml", "1.rtf", "1.pdf"]
-    for name in fixtures:
-        data = open(f"/root/reference/tests/{name}", "rb").read()
+    text = "Quarterly report, 42 items shipped. " * 20
+    for fmt in ("doc", "xls", "ppt", "xlsb", "pages", "docx", "odt",
+                "eml", "rtf", "pdf"):
+        make = getattr(eb, f"make_{fmt}")
+        data = make(7, text) if fmt == "eml" else make(text)
+        name = f"1.{fmt}"
+        assert extract(data, url=name).error is None
         for _ in range(5):
             cut = rng.randrange(1, len(data))
             extract(data[:cut], url=name)  # must not raise
