@@ -21,6 +21,16 @@ as the reference's lexbor parse + ``fix_dom`` pass
   table-insertion-mode fix-up exactly (everything that is not
   caption/thead/tbody/tfoot/tr/td/th is moved to just before the
   table element, post-order)
+
+The DOM is private to this module and ``html_extract``, and shaped for
+speed on the per-token path: elements are :class:`Node` objects, text
+children are plain ``str`` (adjacent text merges into one string, as
+sibling text nodes would), :func:`tokenize` matches attribute-free tags
+with one compiled regex, and :meth:`TreeBuilder.feed` runs the common
+in-body cases inline — text outside table context, start tags whose
+only effect is close-``p``-if-closer then append then push, and end
+tags matching the current node — calling the general handlers only for
+the rest.
 """
 
 from __future__ import annotations
@@ -28,30 +38,26 @@ from __future__ import annotations
 import html as _htmlmod
 import re
 
-ELEMENT = 0
-TEXT = 1
-DOCUMENT_NODE = 2
-
 
 class Node:
-    __slots__ = ("type", "name", "attrs", "children", "parent", "text")
+    """An element; ``children`` holds Nodes and ``str`` text."""
 
-    def __init__(self, type_, name=None, attrs=None, text=None):
-        self.type = type_
+    __slots__ = ("name", "attrs", "children", "parent")
+
+    def __init__(self, name, attrs, parent=None):
         self.name = name
-        self.attrs = attrs or {}
+        self.attrs = attrs
         self.children = []
-        self.parent = None
-        self.text = text
+        self.parent = parent
 
     def append(self, child):
         child.parent = self
         self.children.append(child)
 
     def insert_before(self, child, ref):
-        child.parent = self
-        idx = self.children.index(ref)
-        self.children.insert(idx, child)
+        if type(child) is not str:
+            child.parent = self
+        self.children.insert(self.children.index(ref), child)
 
     def remove_child(self, child):
         self.children.remove(child)
@@ -62,29 +68,13 @@ class Node:
         stack = [self]
         while stack:
             n = stack.pop()
-            if n.type == TEXT:
-                out.append(n.text)
+            if type(n) is str:
+                out.append(n)
             else:
                 stack.extend(reversed(n.children))
         return "".join(out)
 
-    def find(self, name):
-        for n in self.iter_elements():
-            if n.name == name:
-                return n
-        return None
-
-    def iter_elements(self):
-        stack = list(reversed(self.children))
-        while stack:
-            n = stack.pop()
-            if n.type == ELEMENT:
-                yield n
-                stack.extend(reversed(n.children))
-
     def __repr__(self):  # debugging aid
-        if self.type == TEXT:
-            return f"#text{self.text!r}"
         return f"<{self.name} {len(self.children)} children>"
 
 
@@ -94,6 +84,7 @@ VOID_ELEMENTS = frozenset(
 )
 RAWTEXT_ELEMENTS = frozenset("script style xmp iframe noembed noframes".split())
 RCDATA_ELEMENTS = frozenset(("title", "textarea"))
+_RAW_OR_RCDATA = RAWTEXT_ELEMENTS | RCDATA_ELEMENTS
 
 # start tags that close an open <p> (WHATWG in-body rules)
 P_CLOSERS = frozenset(
@@ -111,8 +102,17 @@ TABLE_SCOPE_STOPS = frozenset(("table", "td", "th", "caption", "html"))
 TABLE_ONLY_TAGS = frozenset(
     "caption col colgroup tbody tfoot thead tr td th".split()
 )
+#: current-node names that put the builder in table context (the
+#: WHATWG condition for foster parenting)
+_TABLE_CONTEXT = frozenset(("table", "tr", "colgroup")) | TABLE_SECTIONS
+#: tags whose start or end is never a plain append/push or pop
+_ROOT_TAGS = frozenset(("html", "head", "body"))
+#: in-body start tags with a rule beyond close-p, append and push
+_IN_BODY_SPECIAL = TABLE_ONLY_TAGS | frozenset(("li", "dd", "dt", "a", "table"))
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\f />]*")
+#: an attribute-free start or end tag, e.g. ``<p>`` / ``</div>``
+_PLAIN_TAG_RE = re.compile(r"<(/?)([a-zA-Z][^\t\n\f />]*)>")
 _ATTR_RE = re.compile(
     r"""[\t\n\f\r /]*([^\t\n\f\r /><=][^\t\n\f\r /><=]*)"""
     r"""(?:[\t\n\f\r ]*=[\t\n\f\r ]*("[^"]*"|'[^']*'|[^\t\n\f\r >]*))?"""
@@ -125,9 +125,10 @@ def _unescape(s: str) -> str:
     return _htmlmod.unescape(s)
 
 
-#: token tuples (kind, payload): the tokenizer yields ~100 per page,
-#: so plain tuples with int kinds beat attribute-carrying objects
-#: (measured ~7% of kernel time in token alloc + string kind compares)
+#: token tuples (kind, value, attrs): TOK_TEXT -> (text, None),
+#: TOK_START -> (name, attrs dict), TOK_END -> (name, None).  Plain
+#: tuples with int kinds beat attribute-carrying objects on the
+#: ~100-tokens-per-page path.
 TOK_TEXT, TOK_START, TOK_END = 0, 1, 2
 
 
@@ -135,77 +136,90 @@ _RAWTEXT_CLOSE_RE: dict = {}
 
 
 def tokenize(s: str):
-    """Yield (kind, payload) token tuples; comments/doctypes/PIs\n    are skipped.  TOK_TEXT -> text str, TOK_START -> (name, attrs,\n    self_closing), TOK_END -> name."""
+    """Yield (kind, value, attrs) token tuples; comments/doctypes/PIs
+    are skipped."""
     i = 0
     n = len(s)
     text_start = 0
+    find = s.find
+    plain_tag = _PLAIN_TAG_RE.match
     while i < n:
-        lt = s.find("<", i)
+        lt = find("<", i)
         if lt == -1:
             break
-        nxt = s[lt + 1 : lt + 2]
-        if not (nxt.isalpha() or nxt in ("/", "!", "?")):
-            i = lt + 1
-            continue
-        if lt > text_start:
-            yield (TOK_TEXT, _unescape(s[text_start:lt]))
-        if nxt == "!":
-            if s.startswith("<!--", lt):
-                end = s.find("-->", lt + 4)
-                i = text_start = (end + 3) if end != -1 else n
-            else:
-                end = s.find(">", lt + 2)
-                i = text_start = (end + 1) if end != -1 else n
-            continue
-        if nxt == "?":
-            end = s.find(">", lt + 2)
-            i = text_start = (end + 1) if end != -1 else n
-            continue
-        if nxt == "/":
-            m = _TAG_NAME_RE.match(s, lt + 2)
-            if not m:
-                # bogus comment
-                end = s.find(">", lt + 2)
+        m = plain_tag(s, lt)
+        if m is not None:
+            if lt > text_start:
+                yield (TOK_TEXT, _unescape(s[text_start:lt]), None)
+            i = text_start = m.end()
+            slash, name = m.groups()
+            name = name.lower()
+            if slash:
+                yield (TOK_END, name, None)
+                continue
+            attrs = {}
+        else:
+            nxt = s[lt + 1 : lt + 2]
+            if not (nxt.isalpha() or nxt in ("/", "!", "?")):
+                i = lt + 1
+                continue
+            if lt > text_start:
+                yield (TOK_TEXT, _unescape(s[text_start:lt]), None)
+            if nxt == "!":
+                if s.startswith("<!--", lt):
+                    end = find("-->", lt + 4)
+                    i = text_start = (end + 3) if end != -1 else n
+                else:
+                    end = find(">", lt + 2)
+                    i = text_start = (end + 1) if end != -1 else n
+                continue
+            if nxt == "?":
+                end = find(">", lt + 2)
                 i = text_start = (end + 1) if end != -1 else n
                 continue
+            if nxt == "/":
+                m = _TAG_NAME_RE.match(s, lt + 2)
+                if not m:
+                    # bogus comment
+                    end = find(">", lt + 2)
+                    i = text_start = (end + 1) if end != -1 else n
+                    continue
+                end = find(">", m.end())
+                i = text_start = (end + 1) if end != -1 else n
+                yield (TOK_END, m.group(0).lower(), None)
+                continue
+            # start tag with attributes, a self-closing slash, or an
+            # unterminated tail
+            m = _TAG_NAME_RE.match(s, lt + 1)
             name = m.group(0).lower()
-            end = s.find(">", m.end())
-            i = text_start = (end + 1) if end != -1 else n
-            yield (TOK_END, name)
-            continue
-        # start tag
-        m = _TAG_NAME_RE.match(s, lt + 1)
-        name = m.group(0).lower()
-        j = m.end()
-        attrs = {}
-        self_closing = False
-        while j < n:
-            c = s[j]
-            if c == ">":
-                j += 1
-                break
-            if c == "/" and s[j + 1 : j + 2] == ">":
-                self_closing = True
-                j += 2
-                break
-            am = _ATTR_RE.match(s, j)
-            if am and am.group(1):
-                aname = am.group(1).lower()
-                aval = am.group(2)
-                if aval is None:
-                    aval = ""
-                elif aval[:1] in ('"', "'"):
-                    aval = aval[1:-1]
-                if aname not in attrs:
-                    attrs[aname] = _unescape(aval)
-                j = am.end()
+            j = m.end()
+            attrs = {}
+            while j < n:
+                c = s[j]
+                if c == ">":
+                    j += 1
+                    break
+                if c == "/" and s[j + 1 : j + 2] == ">":
+                    j += 2
+                    break
+                am = _ATTR_RE.match(s, j)
+                if am and am.group(1):
+                    aname = am.group(1).lower()
+                    aval = am.group(2)
+                    if aval is None:
+                        aval = ""
+                    elif aval[:1] in ('"', "'"):
+                        aval = aval[1:-1]
+                    if aname not in attrs:
+                        attrs[aname] = _unescape(aval)
+                    j = am.end()
+                else:
+                    j += 1
             else:
-                j += 1
-        else:
-            j = n
-        i = text_start = j
-        yield (TOK_START, (name, attrs, self_closing))
-        if name in RAWTEXT_ELEMENTS or name in RCDATA_ELEMENTS:
+                j = n
+            i = text_start = j
+        yield (TOK_START, name, attrs)
+        if name in _RAW_OR_RCDATA:
             close = _RAWTEXT_CLOSE_RE.get(name)
             if close is None:
                 close = _RAWTEXT_CLOSE_RE[name] = re.compile(
@@ -214,7 +228,7 @@ def tokenize(s: str):
             cm = close.search(s, i)
             if cm:
                 raw = s[i : cm.start()]
-                gt = s.find(">", cm.start() + 1)
+                gt = find(">", cm.start() + 1)
                 i = text_start = (gt + 1) if gt != -1 else n
             else:
                 raw = s[i:]
@@ -222,61 +236,28 @@ def tokenize(s: str):
             if raw:
                 if name in RCDATA_ELEMENTS:
                     raw = _unescape(raw)
-                yield (TOK_TEXT, raw)
-            yield (TOK_END, name)
+                yield (TOK_TEXT, raw, None)
+            yield (TOK_END, name, None)
     if text_start < n:
-        yield (TOK_TEXT, _unescape(s[text_start:]))
-
-
-
-class _OpenStack:
-    """Open-elements stack with per-name open counts, so unmatched
-    end tags short-circuit in O(1) instead of scanning the stack
-    (adversarial </x> floods on deep pages were O(n^2))."""
-
-    __slots__ = ("items", "counts")
-
-    def __init__(self, root):
-        self.items = [root]
-        self.counts = {root.name: 1}
-
-    def append(self, node):
-        c = self.counts
-        c[node.name] = c.get(node.name, 0) + 1
-        self.items.append(node)
-
-    def truncate(self, idx):
-        c = self.counts
-        for node in self.items[idx:]:
-            c[node.name] -= 1
-        del self.items[idx:]
-
-    def count(self, name):
-        return self.counts.get(name, 0)
-
-    def __len__(self):
-        return len(self.items)
-
-    def __getitem__(self, i):
-        return self.items[i]
-
-    def __iter__(self):
-        return iter(self.items)
-
-    def __reversed__(self):
-        return reversed(self.items)
+        yield (TOK_TEXT, _unescape(s[text_start:]), None)
 
 
 class TreeBuilder:
+    """Builds the DOM from tokens.  ``open`` is the stack of open
+    elements; ``open_counts`` holds per-name open counts, so unmatched
+    end tags short-circuit in O(1) instead of scanning the stack
+    (adversarial </x> floods on deep pages were O(n^2))."""
+
     def __init__(self):
-        self.root = Node(DOCUMENT_NODE, "#document")
-        self.html = Node(ELEMENT, "html")
-        self.head = Node(ELEMENT, "head")
-        self.body = Node(ELEMENT, "body")
+        self.root = Node("#document", {})
+        self.html = Node("html", {})
+        self.head = Node("head", {})
+        self.body = Node("body", {})
         self.root.append(self.html)
         self.html.append(self.head)
         self.html.append(self.body)
-        self.stack = _OpenStack(self.html)
+        self.open = [self.html]
+        self.open_counts = {"html": 1}
         self._p_indices = []       # open <p> stack indices (lazy-pruned)
         self._pscope_indices = []  # table/td/th/caption scope boundaries
         self.table_nodes = []      # document-order table-mode elements
@@ -286,27 +267,19 @@ class TreeBuilder:
         self.saw_body = False
 
     # -- helpers -------------------------------------------------------
-    def _top(self):
-        return self.stack.items[-1]
+    def _push(self, node):
+        c = self.open_counts
+        c[node.name] = c.get(node.name, 0) + 1
+        self.open.append(node)
 
-    def _append_text(self, target, text):
-        if target.children and target.children[-1].type == TEXT:
-            target.children[-1].text += text
-        else:
-            target.append(Node(TEXT, text=text))
-
-    def _table_context(self):
-        """Return the insertion-point element when it is directly in
-        table structure (current node is table/tbody/thead/tfoot/tr/
-        colgroup), else None — this is the WHATWG condition for foster
-        parenting."""
-        top = self.stack.items[-1]
-        if top.name in ("table", "tr", "colgroup") or top.name in TABLE_SECTIONS:
-            return top
-        return None
+    def _truncate(self, idx):
+        c = self.open_counts
+        for node in self.open[idx:]:
+            c[node.name] -= 1
+        del self.open[idx:]
 
     def _nearest_table(self):
-        for node in reversed(self.stack.items):
+        for node in reversed(self.open):
             if node.name == "table":
                 return node
         return None
@@ -315,19 +288,19 @@ class TreeBuilder:
         table = self._nearest_table()
         if table is not None and table.parent is not None:
             table.parent.insert_before(node, table)
+        elif type(node) is str:
+            self.body.children.append(node)
         else:
             self.body.append(node)
 
     def _pop_to(self, names, inclusive=False, stops=TABLE_SCOPE_STOPS):
         """Pop stack until top is one of ``names`` (then optionally pop
         it too). Returns True when found."""
-        items = self.stack.items
+        items = self.open
         for idx in range(len(items) - 1, 0, -1):
             nm = items[idx].name
             if nm in names:
-                self.stack.truncate(idx + 1)
-                if inclusive:
-                    self.stack.truncate(idx)
+                self._truncate(idx + 1 if not inclusive else idx)
                 return True
             if nm in stops and nm not in names:
                 return False
@@ -338,7 +311,7 @@ class TreeBuilder:
         # stopping at table/cell boundaries, but O(1) via tracked
         # indices — the naive walk is O(depth) per block tag and turns
         # deeply nested crawl pages into O(n^2) parses
-        stack_len = len(self.stack)
+        stack_len = len(self.open)
         p_idx = self._p_indices
         while p_idx and p_idx[-1] >= stack_len:
             p_idx.pop()
@@ -349,134 +322,113 @@ class TreeBuilder:
             b_idx.pop()
         last_b = b_idx[-1] if b_idx else 0
         if p_idx[-1] > last_b:
-            self.stack.truncate(p_idx.pop())
+            self._truncate(p_idx.pop())
 
     def _close_li_dd_dt(self, name):
         group = ("li",) if name == "li" else ("dd", "dt")
-        items = self.stack.items
+        items = self.open
         for idx in range(len(items) - 1, 0, -1):
             nm = items[idx].name
             if nm in group:
-                self.stack.truncate(idx)
+                self._truncate(idx)
                 return
             if nm in ("ul", "ol", "dl", "table", "td", "th", "caption", "html", "body", "div"):
                 return
 
-    def _insert(self, name, attrs, push=True, parent=None):
-        node = Node(ELEMENT, name, attrs)
-        (parent if parent is not None else self._top()).append(node)
+    def _insert(self, name, attrs, push=True):
+        node = Node(name, attrs)
+        self.open[-1].append(node)
         if name == "table" or name == "tr" or name in TABLE_SECTIONS:
             self.table_nodes.append(node)
         if push and name not in VOID_ELEMENTS:
-            if name == "p":
-                self._p_indices.append(len(self.stack))
-            elif name in ("table", "td", "th", "caption"):
-                self._pscope_indices.append(len(self.stack))
-            self.stack.append(node)
+            if name in ("table", "td", "th", "caption"):
+                self._pscope_indices.append(len(self.open))
+            self._push(node)
         return node
 
     def _ensure_body_phase(self):
         if not self.in_body_phase:
             self.in_body_phase = True
-            if len(self.stack) == 1:
-                self.stack.append(self.body)
+            if len(self.open) == 1:
+                self._push(self.body)
 
-    # -- token handlers ------------------------------------------------
+    # -- general token handlers (everything feed does not inline) ------
     def start_tag(self, name, attrs):
+        """Root tags, head-phase content and table context; returns
+        True when the tag is consumed, False when it is left to the
+        in-body insertion rules in :meth:`feed`."""
         if name == "html":
             if not self.saw_html:
                 self.saw_html = True
                 self.html.attrs.update(attrs)
-            return
+            return True
         if name == "head":
             self.saw_head = True
-            return
+            return True
         if name == "body":
             self.saw_body = True
             self.body.attrs.update(attrs)
             self._ensure_body_phase()
-            return
+            return True
         if not self.in_body_phase and name in HEAD_CONTENT:
-            node = Node(ELEMENT, name, attrs)
+            node = Node(name, attrs)
             self.head.append(node)
             if name not in VOID_ELEMENTS:
-                self.stack.append(node)
-            return
+                self._push(node)
+            return True
         self._ensure_body_phase()
 
-        tctx = self._table_context()
-        if tctx is not None:
-            if name == "caption":
+        if self.open[-1].name not in _TABLE_CONTEXT:
+            return False
+        if name == "caption" or name == "colgroup" or name in TABLE_SECTIONS:
+            self._pop_to(("table",))
+        elif name == "col":
+            if self.open[-1].name != "colgroup":
                 self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "colgroup":
+                self._insert("colgroup", {})
+        elif name == "tr":
+            if not self._pop_to(TABLE_SECTIONS):
                 self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "col":
-                if self._top().name != "colgroup":
-                    self._pop_to(("table",))
-                    self._insert("colgroup", {})
-                self._insert(name, attrs)
-                return
-            if name in TABLE_SECTIONS:
-                self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "tr":
+                self._insert("tbody", {})
+        elif name in ("td", "th"):
+            if not self._pop_to(("tr",)):
                 if not self._pop_to(TABLE_SECTIONS):
                     self._pop_to(("table",))
                     self._insert("tbody", {})
-                self._insert(name, attrs)
-                return
-            if name in ("td", "th"):
-                if not self._pop_to(("tr",)):
-                    if not self._pop_to(TABLE_SECTIONS):
-                        self._pop_to(("table",))
-                        self._insert("tbody", {})
-                    self._insert("tr", {})
-                self._insert(name, attrs)
-                return
-            if name in ("style", "script", "template"):
-                self._insert(name, attrs)
-                return
-            if name == "table":
-                # spec: implies </table>, new table as sibling
-                self._pop_to(("table",), inclusive=True, stops=("html",))
-                self._insert(name, attrs)
-                return
-            if name == "form":
-                return  # in-table form: insert+pop immediately; no effect on text
-            # anything else: foster parent, keep on open stack
-            node = Node(ELEMENT, name, attrs)
-            if name == "p" or name in P_CLOSERS:
-                pass  # p-closing irrelevant across foster boundary
+                self._insert("tr", {})
+        elif name == "table":
+            # spec: implies </table>, new table as sibling
+            self._pop_to(("table",), inclusive=True, stops=("html",))
+        elif name == "form":
+            return True  # in-table form: insert+pop immediately; no effect on text
+        elif name not in ("style", "script", "template"):
+            # anything else: foster parent, keep on open stack (no
+            # p-closing across the foster boundary)
+            node = Node(name, attrs)
             self._foster_parent(node)
             if name not in VOID_ELEMENTS:
-                self.stack.append(node)
-            return
+                self._push(node)
+            return True
+        self._insert(name, attrs)
+        return True
 
-        # normal in-body insertion
+    def start_in_body_special(self, name, attrs):
+        """In-body start tags of ``_IN_BODY_SPECIAL`` (after the
+        close-p step :meth:`feed` has applied)."""
         if name in TABLE_ONLY_TAGS:
             return  # spec: ignore stray table tags in body
-        if name in P_CLOSERS:
-            self._close_p()
-        if name == "li" or name in ("dd", "dt"):
+        if name == "li" or name == "dd" or name == "dt":
             self._close_li_dd_dt(name)
-        if name in ("a",):
+        elif name == "a":
             # crude adoption-agency: close an open <a> first (spec)
-            items = self.stack.items
+            items = self.open
             for idx in range(len(items) - 1, 0, -1):
                 nm = items[idx].name
                 if nm == "a":
-                    self.stack.truncate(idx)
+                    self._truncate(idx)
                     break
                 if nm in ("td", "th", "caption", "table", "html", "body", "div", "p"):
                     break
-        if name == "table":
-            self._insert(name, attrs)
-            return
         self._insert(name, attrs)
 
     def end_tag(self, name):
@@ -484,7 +436,7 @@ class TreeBuilder:
             self._ensure_body_phase()
             self._insert("br", {}, push=False)
             return
-        if name in ("html", "body", "head"):
+        if name in _ROOT_TAGS:
             return
         if name == "table":
             self._pop_to(("table",), inclusive=True, stops=("html",))
@@ -493,45 +445,84 @@ class TreeBuilder:
             self._pop_to((name,), inclusive=True)
             return
         # generic: find matching element without crossing table/cell bounds
-        if self.stack.count(name) == 0:
+        if self.open_counts.get(name, 0) == 0:
             return  # O(1) rejection of unmatched end tags
-        items = self.stack.items
+        items = self.open
         for idx in range(len(items) - 1, 0, -1):
             node = items[idx]
             if node.name == name:
-                self.stack.truncate(idx)
+                self._truncate(idx)
                 return
             if node.name in TABLE_SCOPE_STOPS:
                 return
 
     def text(self, text):
+        """Text before the body phase or in table context; returns
+        True when consumed, False when it belongs to the current node
+        (appended by :meth:`feed`)."""
         if not self.in_body_phase:
-            top = self._top()
-            if top is not self.html:
+            if self.open[-1] is not self.html:
                 # inside an explicit head element (title/style/script/...)
-                self._append_text(top, text)
-                return
+                return False
             if text.strip(" \t\n\r\f") == "":
-                return
+                return True
             self._ensure_body_phase()
-        tctx = self._table_context()
-        if tctx is not None and text.strip(" \t\n\r\f") != "":
-            node = Node(TEXT, text=text)
-            self._foster_parent(node)
-            return
-        self._append_text(self._top(), text)
+        if (self.open[-1].name in _TABLE_CONTEXT
+                and text.strip(" \t\n\r\f") != ""):
+            self._foster_parent(text)
+            return True
+        return False
 
     def feed(self, tokens):
-        text = self.text
-        start_tag = self.start_tag
-        end_tag = self.end_tag
-        for kind, payload in tokens:
+        """Build the tree from ``tokens``.  In the body phase outside
+        table context, text and plain start/end tags are handled here
+        inline; everything else goes through the general handlers."""
+        items = self.open
+        counts = self.open_counts
+        p_indices = self._p_indices
+        in_body = self.in_body_phase
+        for kind, value, attrs in tokens:
             if kind == TOK_TEXT:
-                text(payload)
+                top = items[-1]
+                if not in_body or top.name in _TABLE_CONTEXT:
+                    consumed = self.text(value)
+                    in_body = self.in_body_phase
+                    if consumed:
+                        continue
+                    top = items[-1]
+                children = top.children
+                if children and type(children[-1]) is str:
+                    children[-1] += value
+                else:
+                    children.append(value)
             elif kind == TOK_START:
-                start_tag(payload[0], payload[1])
+                if (not in_body or value in _ROOT_TAGS
+                        or items[-1].name in _TABLE_CONTEXT):
+                    consumed = self.start_tag(value, attrs)
+                    in_body = self.in_body_phase
+                    if consumed:
+                        continue
+                # in-body insertion
+                if p_indices and value in P_CLOSERS:
+                    self._close_p()
+                if value in _IN_BODY_SPECIAL:
+                    self.start_in_body_special(value, attrs)
+                    continue
+                top = items[-1]
+                node = Node(value, attrs, top)
+                top.children.append(node)
+                if value not in VOID_ELEMENTS:
+                    if value == "p":
+                        p_indices.append(len(items))
+                    counts[value] = counts.get(value, 0) + 1
+                    items.append(node)
             else:
-                end_tag(payload)
+                if items[-1].name == value and value not in _ROOT_TAGS:
+                    counts[value] -= 1
+                    items.pop()
+                else:
+                    self.end_tag(value)
+                    in_body = self.in_body_phase
         return self.root
 
 
@@ -539,7 +530,6 @@ class TreeBuilder:
 # fix_dom: reference src/html_parser.cpp:208-328 replicated exactly
 # ---------------------------------------------------------------------------
 
-_TABLE_OK = frozenset(("caption", "tbody", "tfoot", "thead", "td", "th", "tr"))
 _TBODY_OK = frozenset(("tr", "th", "td"))
 _TR_OK = frozenset(("th", "td"))
 
@@ -566,51 +556,32 @@ def _fix_in_table_row_mode(node, child):
     return _fix_in_table_mode(node, child)
 
 
-def _fix_one(node):
-    if node.type != ELEMENT:
-        return
-    name = node.name
-    if name == "table":
-        fixer = _fix_in_table_mode
-    elif name in TABLE_SECTIONS:
-        fixer = _fix_in_table_body_mode
-    elif name == "tr":
-        fixer = _fix_in_table_row_mode
-    else:
-        return
-    for child in list(node.children):
-        if child.type == ELEMENT:
-            fixer(node, child)
-
-
-def fix_dom(node, table_nodes=None):
-    """Post-order WHATWG table-mode fix-up (reference fix_dom);
-    iterative — crawl pages nest deeper than Python's recursion
-    limit.
+def fix_dom(table_nodes):
+    """Post-order WHATWG table-mode fix-up (reference fix_dom).
 
     Only table-mode elements (table / thead / tbody / tfoot / tr) can
-    be fixed, so when the builder hands over its document-order list
-    of exactly those nodes, the full-tree walk is skipped and the
-    list is processed in reverse (children precede parents in reverse
-    document order — the same order the post-order walk fixes them)."""
-    if table_nodes is not None:
-        for cur in reversed(table_nodes):
-            _fix_one(cur)
-        return
-    stack = [(node, False)]
-    while stack:
-        cur, processed = stack.pop()
-        if processed:
-            _fix_one(cur)
-            continue
-        stack.append((cur, True))
-        for child in reversed(cur.children):
-            stack.append((child, False))
+    be fixed, so the builder's document-order list of exactly those
+    nodes is processed in reverse (children precede parents in reverse
+    document order — the same order a post-order walk fixes them)."""
+    for node in reversed(table_nodes):
+        name = node.name
+        if name == "table":
+            fixer = _fix_in_table_mode
+        elif name == "tr":
+            fixer = _fix_in_table_row_mode
+        else:
+            fixer = _fix_in_table_body_mode
+        for child in list(node.children):
+            if type(child) is not str:
+                fixer(node, child)
 
 
-def parse_html(text: str) -> Node:
-    """Parse HTML text into a DOM, then apply the table fix-up."""
+def parse_html(text: str):
+    """Parse HTML text into a DOM, apply the table fix-up and return
+    the (head, body) elements.  They are the first ``head`` and
+    ``body`` in document order: the builder never creates another
+    element of either name."""
     builder = TreeBuilder()
-    root = builder.feed(tokenize(text))
-    fix_dom(root, builder.table_nodes)
-    return root
+    builder.feed(tokenize(text))
+    fix_dom(builder.table_nodes)
+    return builder.head, builder.body

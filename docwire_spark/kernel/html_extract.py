@@ -21,9 +21,12 @@ import re
 
 from docwire_spark.kernel import events as E
 from docwire_spark.kernel.dates import parse_iso8601_or_legacy
-from docwire_spark.kernel.dom import ELEMENT, TEXT, Node, parse_html
+from docwire_spark.kernel.dom import parse_html
 
-_ASCII_WS_RUN = re.compile(r"[ \t\n\r\f\v]+")
+#: runs of ASCII whitespace other than a lone space (collapsing a lone
+#: space to a space is a no-op, and skipping those matches makes the
+#: substitution ~2x cheaper on prose)
+_ASCII_WS_RUN = re.compile(r"[\t\n\r\f\v][ \t\n\r\f\v]*| [ \t\n\r\f\v]+")
 _ASCII_WS = " \t\n\r\f\v"
 
 BLOCK_LEVEL = frozenset(
@@ -79,28 +82,6 @@ def parse_css_list_style(style_text: str):
     return turn_off_ul, turn_off_ol
 
 
-class _Ctx:
-    __slots__ = (
-        "events", "turn_off_ul", "turn_off_ol", "in_head", "in_title",
-        "in_script", "in_style", "style_text", "buffered_text",
-        "last_char", "in_metadata", "meta",
-    )
-
-    def __init__(self):
-        self.events = []
-        self.turn_off_ul = False
-        self.turn_off_ol = False
-        self.in_head = False
-        self.in_title = False
-        self.in_script = False
-        self.in_style = False
-        self.style_text = []
-        self.buffered_text = ""
-        self.last_char = "\0"
-        self.in_metadata = False
-        self.meta = {}
-
-
 def decode_data_url(src):
     """Decode a base64 ``data:`` URL into (mime, bytes), or None.
 
@@ -131,16 +112,13 @@ def decode_data_url(src):
     return (mime or "application/octet-stream", data)
 
 
-def _emit(ctx, kind, payload=None):
-    ctx.events.append((kind, payload))
 
 
-def _styling(node):
-    """Capture (classes, id, style) from the element's attributes
+def _styling(attrs):
+    """Capture (classes, id, style) from an element's attributes
     (reference html_parser.cpp:50-71: class split on single spaces,
     style whitespace-trimmed).  None when all empty — the common case,
     keeping event tuples cheap inside Arrow batches."""
-    attrs = node.attrs
     class_str = attrs.get("class")
     classes = class_str.split(" ") if class_str else []
     id_ = attrs.get("id") or ""
@@ -150,200 +128,193 @@ def _styling(node):
     return (classes, id_, style)
 
 
-def _process_text(ctx, text):
-    if ctx.in_head and not ctx.in_style:
-        return
-    if ctx.in_style:
-        ctx.style_text.append(text)
-        return
-    text = _ASCII_WS_RUN.sub(" ", text)
-    last_was_space = ctx.last_char in _ASCII_WS
-    if last_was_space or ctx.last_char == "\0":
-        text = text.lstrip(_ASCII_WS)
-    if text:
-        ctx.last_char = text[-1]
-        ctx.buffered_text += text
-
-
-def _flush_buffer(ctx, tag_name):
-    if not ctx.buffered_text:
-        return
-    if tag_name in BLOCK_LEVEL or tag_name in TABLE_ELEMENTS:
-        ctx.buffered_text = ctx.buffered_text.rstrip(_ASCII_WS)
-        ctx.last_char = "\0"
-    if ctx.buffered_text:
-        _emit(ctx, E.TEXT, ctx.buffered_text)
-        ctx.buffered_text = ""
-
-
-def _handle_meta(ctx, attrs):
+def _handle_meta(meta, attrs):
     name = attrs.get("name")
     content = attrs.get("content")
     if not name or content is None:
         return
     lname = name.lower()
     if lname in ("author", "dcterms.creator"):
-        ctx.meta["author"] = content
+        meta["author"] = content
     elif lname in ("changedby", "dcterms.contributor"):
-        ctx.meta.setdefault("last_modified_by", content)
+        meta.setdefault("last_modified_by", content)
     elif lname in ("created", "dcterms.issued"):
         dt = parse_iso8601_or_legacy(content)
         if dt is not None:
-            ctx.meta["creation_date"] = dt
+            meta["creation_date"] = dt
     elif lname in ("changed", "dcterms.modified"):
-        if "last_modification_date" not in ctx.meta:
+        if "last_modification_date" not in meta:
             dt = parse_iso8601_or_legacy(content)
             if dt is not None:
-                ctx.meta["last_modification_date"] = dt
+                meta["last_modification_date"] = dt
 
 
-def _process_tag(ctx, node, closing):
-    name = node.name
-    _flush_buffer(ctx, name)
-    if closing:
-        if name == "style":
-            ctx.in_style = False
-            if not ctx.in_metadata:
-                _emit(ctx, E.STYLE, "".join(ctx.style_text))
-            ctx.style_text = []
-        elif name in PARAGRAPH_ELEMENTS:
-            _emit(ctx, E.CLOSE_PARAGRAPH)
-        elif name == "div":
-            _emit(ctx, E.CLOSE_SECTION)
-        elif name == "span":
-            _emit(ctx, E.CLOSE_SPAN)
-        elif name == "a":
-            _emit(ctx, E.CLOSE_LINK)
-        elif name == "table":
-            _emit(ctx, E.CLOSE_TABLE)
-        elif name == "caption":
-            _emit(ctx, E.CLOSE_CAPTION)
-        elif name == "tr":
-            _emit(ctx, E.CLOSE_TABLE_ROW)
-        elif name in ("td", "th"):
-            _emit(ctx, E.CLOSE_TABLE_CELL)
-        elif name == "title":
-            ctx.in_title = False
-        elif name in ("script", "iframe") and ctx.in_script:
-            ctx.in_script = False
-        elif name in ("ul", "ol"):
-            _emit(ctx, E.CLOSE_LIST)
-        elif name == "li":
-            _emit(ctx, E.CLOSE_LIST_ITEM)
-        elif name == "b":
-            _emit(ctx, E.CLOSE_BOLD)
-        elif name == "u":
-            _emit(ctx, E.CLOSE_UNDERLINE)
-        return
-    if name == "style":
-        ctx.in_style = True
-    elif name in PARAGRAPH_ELEMENTS:
-        _emit(ctx, E.PARAGRAPH, _styling(node))
-    elif name == "div":
-        _emit(ctx, E.SECTION, _styling(node))
-    elif name == "span":
-        _emit(ctx, E.SPAN, _styling(node))
-    elif name == "a":
-        url = node.attrs.get("href")
-        if url is not None:
-            if url[:1] == "#" or url.startswith("javascript"):
-                url = ""
-        else:
+def _link_event(attrs):
+    url = attrs.get("href")
+    if url is not None:
+        if url[:1] == "#" or url.startswith("javascript"):
             url = ""
-        _emit(ctx, E.LINK, (url, _styling(node)))
-    elif name == "img":
-        src = node.attrs.get("src")
-        ocr_text = None
-        decoded = decode_data_url(src)
-        if decoded is not None:
-            from docwire_spark.kernel.ocr import ocr_image
+    else:
+        url = ""
+    return (E.LINK, (url, _styling(attrs)))
 
-            ocr_text = ocr_image(decoded[1])
-        _emit(
-            ctx, E.IMAGE,
-            (node.attrs.get("alt"), ocr_text, src, _styling(node)),
-        )
-    elif name == "table":
-        _emit(ctx, E.TABLE, _styling(node))
-    elif name == "caption":
-        _emit(ctx, E.CAPTION, _styling(node))
-    elif name == "tr":
-        _emit(ctx, E.TABLE_ROW, _styling(node))
-    elif name in ("td", "th"):
-        _emit(ctx, E.TABLE_CELL, _styling(node))
-    elif name in ("ul", "ol"):
-        style_type_none = False
-        style_attr = node.attrs.get("style")
-        if style_attr is not None:
-            if "list-style: none" in style_attr:
-                style_type_none = True
-        elif name == "ol" and ctx.turn_off_ol:
+
+def _image_event(attrs):
+    src = attrs.get("src")
+    ocr_text = None
+    decoded = decode_data_url(src)
+    if decoded is not None:
+        from docwire_spark.kernel.ocr import ocr_image
+
+        ocr_text = ocr_image(decoded[1])
+    return (E.IMAGE, (attrs.get("alt"), ocr_text, src, _styling(attrs)))
+
+
+def _list_event(name, attrs, turn_off_ul, turn_off_ol):
+    style_type_none = False
+    style_attr = attrs.get("style")
+    if style_attr is not None:
+        if "list-style: none" in style_attr:
             style_type_none = True
-        elif name == "ul" and ctx.turn_off_ul:
-            style_type_none = True
-        list_type = "none" if style_type_none else ("decimal" if name == "ol" else "disc")
-        _emit(ctx, E.LIST, (list_type, _styling(node)))
-    elif name == "br":
-        ctx.last_char = "\0"
-        _emit(ctx, E.BREAK_LINE, _styling(node))
-    elif name == "li":
-        _emit(ctx, E.LIST_ITEM, _styling(node))
-    elif name == "title":
-        ctx.in_title = True
-    elif name in ("script", "iframe"):
-        ctx.in_script = True
-    elif name == "b":
-        _emit(ctx, E.BOLD, _styling(node))
-    elif name == "u":
-        _emit(ctx, E.UNDERLINE, _styling(node))
-    elif name == "meta":
-        _handle_meta(ctx, node.attrs)
+    elif name == "ol" and turn_off_ol:
+        style_type_none = True
+    elif name == "ul" and turn_off_ul:
+        style_type_none = True
+    list_type = "none" if style_type_none else ("decimal" if name == "ol" else "disc")
+    return (E.LIST, (list_type, _styling(attrs)))
 
 
-def _process_node(ctx, node):
-    """Iterative DOM walk (explicit stack): crawl pages nest
-    thousands of elements deep, far past Python's recursion limit —
-    the reference's lexbor walk is iterative too."""
-    if node is None:
-        return
-    stack = [(node, False)]
-    while stack:
-        cur, closing = stack.pop()
-        if closing:
-            _process_tag(ctx, cur, True)
-            continue
-        if cur.type == ELEMENT:
-            _process_tag(ctx, cur, False)
-            stack.append((cur, True))
-        elif cur.type == TEXT:
-            if not (ctx.in_metadata or ctx.in_title or ctx.in_script):
-                _process_text(ctx, cur.text)
-        for child in reversed(cur.children):
-            stack.append((child, False))
+#: elements whose opening is one (kind, styling) event
+_OPEN_KINDS = {
+    **dict.fromkeys(PARAGRAPH_ELEMENTS, E.PARAGRAPH),
+    "div": E.SECTION, "span": E.SPAN, "table": E.TABLE,
+    "caption": E.CAPTION, "tr": E.TABLE_ROW, "td": E.TABLE_CELL,
+    "th": E.TABLE_CELL, "li": E.LIST_ITEM, "b": E.BOLD, "u": E.UNDERLINE,
+}
+#: elements whose closing is one payload-free event (shared tuples)
+_CLOSE_EVENTS = {
+    name: (kind, None)
+    for name, kind in {
+        **dict.fromkeys(PARAGRAPH_ELEMENTS, E.CLOSE_PARAGRAPH),
+        "div": E.CLOSE_SECTION, "span": E.CLOSE_SPAN, "a": E.CLOSE_LINK,
+        "table": E.CLOSE_TABLE, "caption": E.CLOSE_CAPTION,
+        "tr": E.CLOSE_TABLE_ROW, "td": E.CLOSE_TABLE_CELL,
+        "th": E.CLOSE_TABLE_CELL, "ul": E.CLOSE_LIST, "ol": E.CLOSE_LIST,
+        "li": E.CLOSE_LIST_ITEM, "b": E.CLOSE_BOLD, "u": E.CLOSE_UNDERLINE,
+    }.items()
+}
+#: tags at which buffered text is right-trimmed and the inline
+#: formatting context reset
+_BLOCK_FLUSH = BLOCK_LEVEL | TABLE_ELEMENTS
+#: last characters after which a text node is left-trimmed ("\0" = the
+#: inline formatting context is empty)
+_LSTRIP_AFTER = _ASCII_WS + "\0"
+
+# walk markers: the children of the innermost open element are done /
+# the walk leaves <head>
+_CLOSE = object()
+_END_HEAD = object()
 
 
 def html_to_events(text: str):
     """Parse HTML (already UTF-8 text) and return (events, meta dict).
 
     Event stream mirrors reference html_parser::parse:
-    document ... close_document.
+    document ... close_document.  The DOM walk is iterative (a stack
+    of children iterators): crawl pages nest thousands of elements
+    deep, far past Python's recursion limit — the reference's lexbor
+    walk is iterative too.  Walk state lives in locals, and simple
+    open/close events dispatch from the tables above.
     """
-    root = parse_html(text)
-    head = root.find("head")
-    body = root.find("body")
+    head, body = parse_html(text)
+    turn_off_ul = turn_off_ol = False
+    head_text = head.text_content()
+    if head_text:
+        turn_off_ul, turn_off_ol = parse_css_list_style(head_text)
 
-    ctx = _Ctx()
-    if head is not None:
-        head_text = head.text_content()
-        if head_text:
-            ctx.turn_off_ul, ctx.turn_off_ol = parse_css_list_style(head_text)
-
-    _emit(ctx, E.DOCUMENT)
-    if head is not None:
-        ctx.in_head = True
-        _process_node(ctx, head)
-        ctx.in_head = False
-    if body is not None:
-        _process_node(ctx, body)
-    _emit(ctx, E.CLOSE_DOCUMENT)
-    return ctx.events, ctx.meta
+    events = [(E.DOCUMENT, None)]
+    emit = events.append
+    meta = {}
+    in_head = True
+    in_title = in_script = in_style = False
+    style_text = []
+    buffered = ""
+    last_char = "\0"
+    open_names = []
+    parents = []  # children iterators of the open elements
+    children = iter((head, _END_HEAD, body))
+    while True:
+        for cur in children:
+            if type(cur) is str:
+                if in_title or in_script:
+                    continue
+                if in_style:
+                    style_text.append(cur)
+                    continue
+                if in_head:
+                    continue
+                cur = _ASCII_WS_RUN.sub(" ", cur)
+                if last_char in _LSTRIP_AFTER:
+                    cur = cur.lstrip(_ASCII_WS)
+                if cur:
+                    last_char = cur[-1]
+                    buffered += cur
+            elif cur is _END_HEAD:
+                in_head = False
+            else:
+                break
+        else:
+            cur = _CLOSE
+        if cur is _CLOSE:
+            if not parents:
+                break
+            children = parents.pop()
+            name = open_names.pop()
+        else:
+            name = cur.name
+        if buffered:
+            if name in _BLOCK_FLUSH:
+                buffered = buffered.rstrip(_ASCII_WS)
+                last_char = "\0"
+            if buffered:
+                emit((E.TEXT, buffered))
+                buffered = ""
+        if cur is _CLOSE:
+            ev = _CLOSE_EVENTS.get(name)
+            if ev is not None:
+                emit(ev)
+            elif name == "style":
+                in_style = False
+                emit((E.STYLE, "".join(style_text)))
+                style_text = []
+            elif name == "title":
+                in_title = False
+            elif name == "script" or name == "iframe":
+                in_script = False
+            continue
+        attrs = cur.attrs
+        kind = _OPEN_KINDS.get(name)
+        if kind is not None:
+            emit((kind, _styling(attrs) if attrs else None))
+        elif name == "a":
+            emit(_link_event(attrs))
+        elif name == "br":
+            last_char = "\0"
+            emit((E.BREAK_LINE, _styling(attrs) if attrs else None))
+        elif name == "ul" or name == "ol":
+            emit(_list_event(name, attrs, turn_off_ul, turn_off_ol))
+        elif name == "img":
+            emit(_image_event(attrs))
+        elif name == "style":
+            in_style = True
+        elif name == "title":
+            in_title = True
+        elif name == "script" or name == "iframe":
+            in_script = True
+        elif name == "meta":
+            _handle_meta(meta, attrs)
+        open_names.append(name)
+        parents.append(children)
+        children = iter(cur.children)
+    emit((E.CLOSE_DOCUMENT, None))
+    return events, meta

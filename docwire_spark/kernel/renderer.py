@@ -218,124 +218,179 @@ class PlainTextRenderer:
             self.level += 1
         if self.level > 0:
             return
-        self._dispatch(kind, payload)
+        handler = _HANDLERS.get(kind)
+        if handler is not None:
+            handler(self, payload)
 
     def feed_all(self, event_list):
-        for ev in event_list:
-            self.feed(ev)
+        """``feed`` each event; outside tables, events other than table
+        open/close go straight to their handler (kinds without one
+        render nothing)."""
+        feed = self.feed
+        handlers = _HANDLERS
+        table, close_table = E.TABLE, E.CLOSE_TABLE
+        for event in event_list:
+            kind = event[0]
+            if self.level or kind == table or kind == close_table:
+                feed(event)
+            else:
+                handler = handlers.get(kind)
+                if handler is not None:
+                    handler(self, event[1])
         return self
 
-    def _dispatch(self, kind, payload):
+    # -- per-kind handlers ---------------------------------------------
+    def _on_text(self, payload):
+        self._write(payload.encode("utf-8", "surrogateescape"), kind="text")
+
+    def _on_eol(self, payload):
+        self._write(self.eol)
+
+    def _on_close_block(self, payload):
+        if not self.list_mode:
+            self._write(self.eol)
+
+    def _on_link(self, payload):
+        url = payload[0] if isinstance(payload, tuple) else payload
+        self._write(_format_link_opening(url), kind="link")
+
+    def _on_image(self, payload):
+        alt, ocr_text = (payload[0], payload[1]) if payload else (None, None)
+        text = ocr_text or ""
+        if not text and alt:
+            text = alt
+        if text:
+            self._write(text.encode("utf-8", "surrogateescape"), kind="image")
+
+    def _on_list(self, payload):
+        self.list_mode = True
+        self.list_counter = 1
+        lt = payload[0] if isinstance(payload, tuple) else payload
+        self.list_type = lt or ""
+        self._write(self.eol)
+
+    def _on_close_list(self, payload):
+        self.list_mode = False
+        self.list_counter = 1
+
+    def _on_list_item(self, payload):
+        lt = self.list_type
+        if lt == "none":
+            pass
+        elif lt == "decimal":
+            self._write(
+                str(self.list_counter).encode() + b". ", kind="list_item"
+            )
+        elif lt == "disc":
+            self._write(b"* ", kind="list_item")
+        else:
+            self._write(
+                lt.encode("utf-8", "surrogateescape"), kind="list_item"
+            )
+
+    def _on_close_list_item(self, payload):
+        self.list_counter += 1
+        self._write(self.eol)
+
+    def _on_comment(self, payload):
         eol = self.eol
-        if kind == E.TEXT:
-            self._write(payload.encode("utf-8", "surrogateescape"), kind="text")
-        elif kind == E.BREAK_LINE:
-            self._write(eol)
-        elif kind in (E.CLOSE_PARAGRAPH, E.CLOSE_SECTION):
-            if not self.list_mode:
-                self._write(eol)
-        elif kind == E.LINK:
-            url = payload[0] if isinstance(payload, tuple) else payload
-            self._write(_format_link_opening(url), kind="link")
-        elif kind == E.CLOSE_LINK:
-            pass  # default closing formatter renders ""
-        elif kind == E.IMAGE:
-            alt, ocr_text = (payload[0], payload[1]) if payload else (None, None)
-            text = ocr_text or ""
-            if not text and alt:
-                text = alt
-            if text:
-                self._write(text.encode("utf-8", "surrogateescape"), kind="image")
-        elif kind == E.LIST:
-            self.list_mode = True
-            self.list_counter = 1
-            lt = payload[0] if isinstance(payload, tuple) else payload
-            self.list_type = lt or ""
-            self._write(eol)
-        elif kind == E.CLOSE_LIST:
-            self.list_mode = False
-            self.list_counter = 1
-        elif kind == E.LIST_ITEM:
-            lt = self.list_type
-            if lt == "none":
-                pass
-            elif lt == "decimal":
-                self._write(
-                    str(self.list_counter).encode() + b". ", kind="list_item"
-                )
-            elif lt == "disc":
-                self._write(b"* ", kind="list_item")
-            else:
-                self._write(
-                    lt.encode("utf-8", "surrogateescape"), kind="list_item"
-                )
-        elif kind == E.CLOSE_LIST_ITEM:
-            self.list_counter += 1
-            self._write(eol)
-        elif kind == E.COMMENT:
-            author, ctime, comment = payload if payload else (None, None, None)
-            text = eol + b"[[["
-            if author:
-                text += b"COMMENT BY " + author.encode("utf-8", "surrogateescape")
-            if ctime:
-                text += b" (" + ctime.encode("utf-8", "surrogateescape") + b")"
-            text += b"]]]" + eol
-            if comment is not None:
-                cbytes = comment.encode("utf-8", "surrogateescape")
-                text += cbytes
-                if not cbytes or not cbytes.endswith(b"\n"):
-                    text += eol
-            text += b"[[[---]]]" + eol
-            self._write(text, kind="comment")
-        elif kind == E.HEADER:
-            self.header_mode = True
-        elif kind == E.CLOSE_HEADER:
-            self.header_mode = False
-            self._write(eol)
-        elif kind == E.FOOTER:
-            self.footer_mode = True
-            self._footer_chunks = []
-        elif kind == E.CLOSE_FOOTER:
-            self.footer_mode = False
-        elif kind == E.CLOSE_PAGE:
-            self._write(eol)
-        elif kind == E.DOCUMENT:
-            self.nested_docs += 1
-        elif kind == E.CLOSE_DOCUMENT:
-            self.nested_docs -= 1
-            if self.nested_docs == 0:
-                footer = b"".join(self._footer_chunks)
-                if footer:
-                    footer += eol
-                self._write(eol + footer)
-        elif kind == E.MAIL:
-            subject, date, level = payload if payload else (None, None, None)
-            text = b"\t" * (level or 0)
-            text += b"mail: "
-            if subject:
-                text += subject.encode("utf-8", "surrogateescape")
-            if date:
-                stamp = _time.strftime(
-                    "%Y-%m-%d %I:%M:%S %p", _time.gmtime(date)
-                ).encode()
-                text += b" creation time: " + stamp + eol
-            self._write(text, kind="mail")
-        elif kind == E.CLOSE_MAIL_BODY or kind == E.CLOSE_ATTACHMENT:
-            self._write(eol)
-        elif kind == E.ATTACHMENT:
-            text = eol + eol + b"attachment: "
-            if payload:
-                text += payload.encode("utf-8", "surrogateescape")
-            text += eol + eol
-            self._write(text, kind="attachment")
-        elif kind == E.FOLDER:
-            name, level = payload if payload else (None, None)
-            text = b"\t" * (level or 0) + b"folder: "
-            if name:
-                text += name.encode("utf-8", "surrogateescape") + eol
-            self._write(text, kind="folder")
-        # all other kinds (paragraph/section/span/bold/underline opens,
-        # style, page open, caption outside tables, ...) render nothing
+        author, ctime, comment = payload if payload else (None, None, None)
+        text = eol + b"[[["
+        if author:
+            text += b"COMMENT BY " + author.encode("utf-8", "surrogateescape")
+        if ctime:
+            text += b" (" + ctime.encode("utf-8", "surrogateescape") + b")"
+        text += b"]]]" + eol
+        if comment is not None:
+            cbytes = comment.encode("utf-8", "surrogateescape")
+            text += cbytes
+            if not cbytes or not cbytes.endswith(b"\n"):
+                text += eol
+        text += b"[[[---]]]" + eol
+        self._write(text, kind="comment")
+
+    def _on_header(self, payload):
+        self.header_mode = True
+
+    def _on_close_header(self, payload):
+        self.header_mode = False
+        self._write(self.eol)
+
+    def _on_footer(self, payload):
+        self.footer_mode = True
+        self._footer_chunks = []
+
+    def _on_close_footer(self, payload):
+        self.footer_mode = False
+
+    def _on_document(self, payload):
+        self.nested_docs += 1
+
+    def _on_close_document(self, payload):
+        self.nested_docs -= 1
+        if self.nested_docs == 0:
+            footer = b"".join(self._footer_chunks)
+            if footer:
+                footer += self.eol
+            self._write(self.eol + footer)
+
+    def _on_mail(self, payload):
+        subject, date, level = payload if payload else (None, None, None)
+        text = b"\t" * (level or 0)
+        text += b"mail: "
+        if subject:
+            text += subject.encode("utf-8", "surrogateescape")
+        if date:
+            stamp = _time.strftime(
+                "%Y-%m-%d %I:%M:%S %p", _time.gmtime(date)
+            ).encode()
+            text += b" creation time: " + stamp + self.eol
+        self._write(text, kind="mail")
+
+    def _on_attachment(self, payload):
+        eol = self.eol
+        text = eol + eol + b"attachment: "
+        if payload:
+            text += payload.encode("utf-8", "surrogateescape")
+        text += eol + eol
+        self._write(text, kind="attachment")
+
+    def _on_folder(self, payload):
+        name, level = payload if payload else (None, None)
+        text = b"\t" * (level or 0) + b"folder: "
+        if name:
+            text += name.encode("utf-8", "surrogateescape") + self.eol
+        self._write(text, kind="folder")
+
+
+#: event kind -> handler; every other kind (paragraph/section/span/
+#: bold/underline opens, link close, style, page open, caption outside
+#: tables, ...) renders nothing
+_HANDLERS = {
+    E.TEXT: PlainTextRenderer._on_text,
+    E.BREAK_LINE: PlainTextRenderer._on_eol,
+    E.CLOSE_PARAGRAPH: PlainTextRenderer._on_close_block,
+    E.CLOSE_SECTION: PlainTextRenderer._on_close_block,
+    E.LINK: PlainTextRenderer._on_link,
+    E.IMAGE: PlainTextRenderer._on_image,
+    E.LIST: PlainTextRenderer._on_list,
+    E.CLOSE_LIST: PlainTextRenderer._on_close_list,
+    E.LIST_ITEM: PlainTextRenderer._on_list_item,
+    E.CLOSE_LIST_ITEM: PlainTextRenderer._on_close_list_item,
+    E.COMMENT: PlainTextRenderer._on_comment,
+    E.HEADER: PlainTextRenderer._on_header,
+    E.CLOSE_HEADER: PlainTextRenderer._on_close_header,
+    E.FOOTER: PlainTextRenderer._on_footer,
+    E.CLOSE_FOOTER: PlainTextRenderer._on_close_footer,
+    E.CLOSE_PAGE: PlainTextRenderer._on_eol,
+    E.DOCUMENT: PlainTextRenderer._on_document,
+    E.CLOSE_DOCUMENT: PlainTextRenderer._on_close_document,
+    E.MAIL: PlainTextRenderer._on_mail,
+    E.CLOSE_MAIL_BODY: PlainTextRenderer._on_eol,
+    E.CLOSE_ATTACHMENT: PlainTextRenderer._on_eol,
+    E.ATTACHMENT: PlainTextRenderer._on_attachment,
+    E.FOLDER: PlainTextRenderer._on_folder,
+}
 
 
 def render_plain_text(event_list, eol: bytes = b"\n"):
