@@ -155,6 +155,8 @@ class PipelineServer:
                 self.send_response(status)
                 self.send_header("Content-Type", ctype)
                 self.send_header("Content-Length", str(len(body)))
+                if self.close_connection:
+                    self.send_header("Connection", "close")
                 self.end_headers()
                 self.wfile.write(body)
 
@@ -176,7 +178,21 @@ class PipelineServer:
                 if pipeline is None:
                     self._fail(404, "Not Found")
                     return
-                length = int(self.headers.get("Content-Length") or 0)
+                # the body's end is known only from Content-Length
+                # (a chunked body has none): answer without reading it
+                # and close, as the unread bytes would be taken for the
+                # next request
+                raw_length = self.headers.get("Content-Length")
+                if raw_length is None:
+                    self.close_connection = True
+                    self._fail(411, "Length Required")
+                    return
+                raw_length = raw_length.strip()
+                if not raw_length.isdigit():
+                    self.close_connection = True
+                    self._fail(400, "Bad Request: malformed Content-Length")
+                    return
+                length = int(raw_length)
                 if length > server.body_limit:
                     # can't safely drain an oversized body; close after
                     self.close_connection = True

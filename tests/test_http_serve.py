@@ -118,6 +118,45 @@ def test_body_limit_413(server):
     assert exc_info.value.code == 413
 
 
+def _raw_post(server, headers, body):
+    import http.client
+
+    conn = http.client.HTTPConnection(server.address, server.port, timeout=10)
+    try:
+        conn.putrequest("POST", "/extract")
+        for name, value in headers:
+            conn.putheader(name, value)
+        conn.endheaders()
+        conn.send(body)
+        resp = conn.getresponse()
+        return resp.status, resp.read(), resp.getheader("Connection")
+    finally:
+        conn.close()
+
+
+def test_chunked_body_without_length_411(server):
+    """No Content-Length (here a chunked body): the body's size is
+    unknown, so the server answers 411 instead of extracting an empty
+    body."""
+    status, body, connection = _raw_post(
+        server, [("Transfer-Encoding", "chunked")],
+        b"8\r\n<p>x</p>\r\n0\r\n\r\n",
+    )
+    assert status == 411
+    assert body == b"Length Required"
+    assert connection == "close"
+
+
+@pytest.mark.parametrize("value", ["abc", "-5", "1e3", ""])
+def test_malformed_content_length_400(server, value):
+    status, body, connection = _raw_post(
+        server, [("Content-Length", value)], b"<p>x</p>"
+    )
+    assert status == 400
+    assert b"Content-Length" in body
+    assert connection == "close"
+
+
 def test_handler_crash_500(server):
     with pytest.raises(urllib.error.HTTPError) as exc_info:
         _post(server.url + "/boom", b"x")
