@@ -4,7 +4,7 @@
 from SURVEY.md §2 plus the training-data ops (dedup, similarity
 search, text analysis, multimodal plumbing).  The ``extract_*``
 queries run the REAL distributed extraction pipeline (url-hash
-sharding -> mapInPandas kernel) and their oracles reconstruct the
+bucketing -> mapInArrow kernel) and their oracles reconstruct the
 expected bytes analytically — a byte-identity gate through DuckDB.
 """
 
@@ -24,8 +24,8 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 def _ship(spark: SparkSession) -> None:
-    """Make docwire_spark importable on executors (mapInPandas body
-    imports the kernel there)."""
+    """Make docwire_spark importable on executors (the mapInArrow
+    body imports the kernel there)."""
     try:
         from docwire_spark.spark.session import ship_package
 
@@ -37,8 +37,8 @@ def _ship(spark: SparkSession) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline (sniff -> charset -> HTML5
     DOM -> whitespace machine -> plain-text render) over a pages table
-    synthesized from sf0.001 documents, via oversize-split + url-hash
-    sharding + mapInPandas."""
+    synthesized from sf0.001 documents, via url-hash bucketing +
+    mapInArrow."""
     _ship(spark)
     from pyspark.sql import functions as F
 

@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
+nproc) and prints
 ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -124,7 +125,7 @@ def _burn(n):
     return s
 
 
-def cpu_calibration(width: int = 32, n: int = 20_000_000):
+def cpu_calibration(width: int | None = None, n: int = 20_000_000):
     """Measure the box itself so per-round numbers are comparable.
 
     This sandbox's VM shows heavy, time-varying CPU contention
@@ -135,6 +136,9 @@ def cpu_calibration(width: int = 32, n: int = 20_000_000):
     slower" from "the box got slower" across rounds."""
     import multiprocessing as mp
 
+    from docwire_spark.spark.session import default_cpus
+
+    width = width or default_cpus()
     t0 = time.time()
     _burn(n)
     single = time.time() - t0
@@ -151,7 +155,9 @@ def cpu_calibration(width: int = 32, n: int = 20_000_000):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from docwire_spark.spark.session import build_session, default_cpus
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     cpu_single_s, cpu_eff_cores = cpu_calibration()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -159,12 +165,11 @@ def main():
         sf = None
 
     import __spark_entry__ as ENTRY
-    from docwire_spark.spark.session import build_session
 
     spark = build_session(
         master=f"local[{cpus}]",
         app_name="docwire_spark-bench",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
+        shuffle_partitions=int(cpus) if cpus.isdigit() else default_cpus(),
     )
     qs = ENTRY.queries()
 
@@ -242,7 +247,7 @@ def main():
         "n_docs": n_docs,
         # box calibration (see cpu_calibration docstring):
         # single-thread seconds for a fixed integer burn, and
-        # measured effective cores at width 32
+        # measured effective cores at width nproc
         "cpu_ref_single_s": cpu_single_s,
         "cpu_eff_cores": cpu_eff_cores,
     }

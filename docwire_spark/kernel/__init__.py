@@ -2,7 +2,7 @@
 
 These implement the per-document semantics of the reference
 (silver-byte/docwire) and are executed inside Arrow-batched
-``mapInPandas`` UDFs by :mod:`docwire_spark.spark`.
+``mapInArrow`` UDFs by :mod:`docwire_spark.spark`.
 """
 
 from docwire_spark.kernel.api import ExtractResult, extract  # noqa: F401

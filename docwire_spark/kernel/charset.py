@@ -329,8 +329,3 @@ def to_utf8_text(data: bytes, label) -> str:
 def ensure_html_utf8(data: bytes) -> str:
     label = determine_html_encoding(data)
     return to_utf8_text(data, label or "UTF-8")
-
-
-def encode_utf8(text: str) -> bytes:
-    """Inverse of the surrogateescape round-trip used above."""
-    return text.encode("utf-8", "surrogateescape")

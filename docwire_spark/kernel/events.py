@@ -69,16 +69,6 @@ CLOSE_ATTACHMENT = 42
 FOLDER = 43
 CLOSE_FOLDER = 44
 
-KIND_NAMES = {
-    v: k
-    for k, v in list(globals().items())
-    if isinstance(v, int) and not k.startswith("_")
-}
-
-
-def ev(kind, payload=None):
-    return (kind, payload)
-
 
 # -- optional child capture (extract_tree) ----------------------------------
 

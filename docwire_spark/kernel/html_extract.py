@@ -13,6 +13,12 @@ Replicates the reference's DOM walk and whitespace state machine
 - head text suppressed except <style>; <title>/<script>/<iframe>
   content suppressed; CSS ``list-style: none`` on ol/ul/li disables
   list enumeration (the LibreOffice export quirk)
+
+The walk runs over ``dom``'s private DOM (elements are ``dom.Node``,
+text children plain ``str``) in one loop with its state in locals;
+payload-free closes and (kind, styling) opens come from lookup tables,
+and only links, lists, images, line breaks, meta and the suppressing
+elements take named branches.
 """
 
 from __future__ import annotations

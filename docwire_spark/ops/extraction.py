@@ -3,8 +3,8 @@
 Each query synthesizes the north-rule pages table
 ``(url, html BINARY, ...)`` from ``documents.text`` with a known HTML
 template, runs the REAL distributed pipeline
-(``extract.extract_pages``: oversize split -> url-hash repartition ->
-mapInPandas kernel), and the DuckDB oracle reconstructs the expected
+(``extract.extract_pages``: scan splits + url-hash bucket column ->
+mapInArrow kernel), and the DuckDB oracle reconstructs the expected
 extracted bytes analytically from the template + the reference's
 rendering rules (SURVEY.md §2.5.1) — so the driver's hash compare is a
 byte-identity gate on the whole Spark extraction path:

@@ -101,11 +101,8 @@ def _result_schema(
     return StructType(fields)
 
 
-#: pyarrow types per result column (must mirror RESULT_SCHEMA)
-_PA_SPAN = None  # built lazily on the executor (pyarrow import)
-
-
 def _pa_types():
+    """pyarrow types per result column (must mirror RESULT_SCHEMA)."""
     import pyarrow as pa
 
     span = pa.list_(pa.struct([
@@ -250,10 +247,6 @@ def _make_extract_batches(
             yield pa.RecordBatch.from_arrays(arrays, col_names)
 
     return _extract_batches
-
-
-# default-shape body (no binary column) for callers that import it
-_extract_batches = _make_extract_batches(with_binary=False)
 
 
 def extract_pages(

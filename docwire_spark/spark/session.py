@@ -47,13 +47,19 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(package_zip())
 
 
+def default_cpus() -> int:
+    """Cores this process may run on (``nproc``): the default local
+    master width when ``SPARK_GRAFT_CPUS`` is unset."""
+    return len(os.sched_getaffinity(0))
+
+
 def build_session(
     master: str | None = None,
     app_name: str = "docwire_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(default_cpus())
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         # PYSPARK_GATEWAY_PORT is set only when spark-submit's
         # PythonRunner launched this process — there, --master arrived
@@ -61,7 +67,7 @@ def build_session(
         # job.py` still defaults to local[N]
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else default_cpus()
     b = SparkSession.builder.appName(app_name)
     if master is not None:
         b = b.master(master)

@@ -3,8 +3,8 @@
     spark-submit --master local[8] --py-files dist/docwire_spark.zip \
         jobs/extract_job.py --n-docs 20000 --out /tmp/out
 
-Reads/creates the Common-Crawl-style pages table, runs the sharded
-mapInPandas extraction, writes results + per-partition metrics through
+Reads/creates the Common-Crawl-style pages table, runs the
+mapInArrow extraction, writes results + per-partition metrics through
 the checkpointed writer, and prints a JSON summary line (wall time,
 docs/sec, failures).
 
@@ -61,7 +61,7 @@ def main():
         },
     )
     # AQE only inserts materialization barriers here — the extraction
-    # pipeline is scan -> repartition -> mapInPandas -> agg with no
+    # pipeline is scan -> mapInArrow -> agg with no
     # joins or skewed aggregations to re-plan (measured: 69s -> 42s on
     # a 600k-doc run at local[16] with it off)
     spark.conf.set("spark.sql.adaptive.enabled", "false")

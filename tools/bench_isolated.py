@@ -26,12 +26,17 @@ sys.path.insert(0, REPO)
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default="32")
+    ap.add_argument("--cpus", default=None,
+                    help="local[N] width (default: nproc)")
     ap.add_argument("--repeats", type=int, default=3,
                     help="timed repeats per query; the MIN is reported "
                     "(least-contended observation on a noisy box)")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
+
+    from docwire_spark.spark.session import default_cpus
+
+    args.cpus = args.cpus or str(default_cpus())
 
     from bench import cpu_calibration
 
