@@ -111,8 +111,9 @@ _ROOT_TAGS = frozenset(("html", "head", "body"))
 _IN_BODY_SPECIAL = TABLE_ONLY_TAGS | frozenset(("li", "dd", "dt", "a", "table"))
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\f />]*")
-#: an attribute-free start or end tag, e.g. ``<p>`` / ``</div>``
-_PLAIN_TAG_RE = re.compile(r"<(/?)([a-zA-Z][^\t\n\f />]*)>")
+#: the next ``<``; groups 1-3 are set when it opens an attribute-free
+#: start or end tag, e.g. ``<p>`` / ``</div>``
+_LT_RE = re.compile(r"<(?:(/?)([a-zA-Z][^\t\n\f />]*)(>)?)?")
 _ATTR_RE = re.compile(
     r"""[\t\n\f\r /]*([^\t\n\f\r /><=][^\t\n\f\r /><=]*)"""
     r"""(?:[\t\n\f\r ]*=[\t\n\f\r ]*("[^"]*"|'[^']*'|[^\t\n\f\r >]*))?"""
@@ -142,17 +143,17 @@ def tokenize(s: str):
     n = len(s)
     text_start = 0
     find = s.find
-    plain_tag = _PLAIN_TAG_RE.match
+    next_lt = _LT_RE.search
     while i < n:
-        lt = find("<", i)
-        if lt == -1:
+        m = next_lt(s, i)
+        if m is None:
             break
-        m = plain_tag(s, lt)
-        if m is not None:
+        lt = m.start()
+        slash, name, gt = m.groups()
+        if gt is not None:
             if lt > text_start:
                 yield (TOK_TEXT, _unescape(s[text_start:lt]), None)
             i = text_start = m.end()
-            slash, name = m.groups()
             name = name.lower()
             if slash:
                 yield (TOK_END, name, None)

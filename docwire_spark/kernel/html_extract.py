@@ -259,12 +259,13 @@ def html_to_events(text: str):
                     continue
                 if in_head:
                     continue
-                cur = _ASCII_WS_RUN.sub(" ", cur)
                 if last_char in _LSTRIP_AFTER:
                     cur = cur.lstrip(_ASCII_WS)
-                if cur:
-                    last_char = cur[-1]
-                    buffered += cur
+                    if not cur:
+                        continue
+                cur = _ASCII_WS_RUN.sub(" ", cur)
+                last_char = cur[-1]
+                buffered += cur
             elif cur is _END_HEAD:
                 in_head = False
             else:
