@@ -51,7 +51,8 @@ class Node:
         self.parent = parent
 
     def append(self, child):
-        child.parent = self
+        if type(child) is not str:
+            child.parent = self
         self.children.append(child)
 
     def insert_before(self, child, ref):
@@ -250,11 +251,9 @@ class TreeBuilder:
     (adversarial </x> floods on deep pages were O(n^2))."""
 
     def __init__(self):
-        self.root = Node("#document", {})
         self.html = Node("html", {})
         self.head = Node("head", {})
         self.body = Node("body", {})
-        self.root.append(self.html)
         self.html.append(self.head)
         self.html.append(self.body)
         self.open = [self.html]
@@ -264,8 +263,6 @@ class TreeBuilder:
         self.table_nodes = []      # document-order table-mode elements
         self.in_body_phase = False
         self.saw_html = False
-        self.saw_head = False
-        self.saw_body = False
 
     # -- helpers -------------------------------------------------------
     def _push(self, node):
@@ -289,8 +286,6 @@ class TreeBuilder:
         table = self._nearest_table()
         if table is not None and table.parent is not None:
             table.parent.insert_before(node, table)
-        elif type(node) is str:
-            self.body.children.append(node)
         else:
             self.body.append(node)
 
@@ -345,7 +340,6 @@ class TreeBuilder:
             if name in ("table", "td", "th", "caption"):
                 self._pscope_indices.append(len(self.open))
             self._push(node)
-        return node
 
     def _ensure_body_phase(self):
         if not self.in_body_phase:
@@ -364,10 +358,8 @@ class TreeBuilder:
                 self.html.attrs.update(attrs)
             return True
         if name == "head":
-            self.saw_head = True
             return True
         if name == "body":
-            self.saw_body = True
             self.body.attrs.update(attrs)
             self._ensure_body_phase()
             return True
@@ -509,6 +501,8 @@ class TreeBuilder:
                 if value in _IN_BODY_SPECIAL:
                     self.start_in_body_special(value, attrs)
                     continue
+                # a plain element: _insert + _push without their
+                # table/scope bookkeeping, which no plain name needs
                 top = items[-1]
                 node = Node(value, attrs, top)
                 top.children.append(node)
@@ -524,7 +518,6 @@ class TreeBuilder:
                 else:
                     self.end_tag(value)
                     in_body = self.in_body_phase
-        return self.root
 
 
 # ---------------------------------------------------------------------------

@@ -11,9 +11,9 @@ snapshot, then timed on the same documents in alternating chunks of
 ``--chunk`` documents (the order flips every chunk), so box-speed
 drift between runs falls on both trees alike: back-to-back runs of one
 kernel in separate processes differ by far more than the changes being
-measured.  Every document's plain-text extraction (text, spans,
-n_events, meta, mime, error) must digest equal in both trees, or the
-tool exits 1.
+measured.  Every document's plain-text extraction must digest equal
+in both trees (``tests/kernel_inputs.digest``: text, spans, n_events,
+meta, mime, error), or the tool exits 1.
 
 Inputs (``--input``):
 - ``crawl_html``: the benchmark's crawl pages (``perfbench.inputs``
@@ -42,7 +42,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 PKG = "docwire_spark"
+
+from tests import kernel_inputs as K  # noqa: E402  (imports no docwire_spark)
 
 
 def _pkg_modules() -> dict:
@@ -78,32 +81,17 @@ class Tree:
 
 
 def _rows(args) -> list:
-    sys.path.insert(0, REPO)
-    try:
-        if args.input == "crawl_html":
-            from perfbench.inputs import _crawl_rows
+    """(url, bytes) inputs; imported from this checkout before either
+    tree is activated (activation drops these modules again)."""
+    if args.input == "crawl_html":
+        from perfbench.inputs import _crawl_rows
 
-            return [(u, h) for u, h, *_ in _crawl_rows(args.n, args.seed)]
-        from tests import kernel_inputs as K
-
-        if args.input == "random":
-            return list(K.random_rows(args.n, seed=args.seed))
-        if args.input == "attrs":
-            return list(K.random_rows(args.n, seed=args.seed, attr_heavy=True))
-        return list(K.all_rows())
-    finally:
-        sys.path.remove(REPO)
-
-
-def _digest(res) -> tuple:
-    import hashlib
-
-    h = hashlib.sha256()
-    for part in (res.text, repr(res.spans), repr(res.n_events),
-                 json.dumps(res.meta, default=str, sort_keys=True),
-                 res.mime, repr(res.error)):
-        h.update(part if isinstance(part, bytes) else part.encode())
-    return h.hexdigest()
+        return [(u, h) for u, h, *_ in _crawl_rows(args.n, args.seed)]
+    if args.input == "random":
+        return list(K.random_rows(args.n, seed=args.seed))
+    if args.input == "attrs":
+        return list(K.random_rows(args.n, seed=args.seed, attr_heavy=True))
+    return list(K.all_rows())
 
 
 #: TreeBuilder methods outside the inline fast branches of ``feed``
@@ -168,7 +156,7 @@ def run(args) -> dict:
                 tree.deactivate()
                 if rnd == 0:
                     for (url, _), res in zip(chunk, out):
-                        digests[t][url] = _digest(res)
+                        digests[t][url] = K.digest(res)
     mismatched = sorted(u for u in digests[0] if digests[0][u] != digests[1][u])
     secs = [sum(t) / args.rounds for t in took]
     n_chunks = len(took[0]) // args.rounds
