@@ -118,8 +118,6 @@ def decode_data_url(src):
     return (mime or "application/octet-stream", data)
 
 
-
-
 def _styling(attrs):
     """Capture (classes, id, style) from an element's attributes
     (reference html_parser.cpp:50-71: class split on single spaces,
