@@ -1,7 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
-nproc) and prints
-ONE JSON line:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
+ONE JSON line ($SPARK_GRAFT_CPUS defaults to the nproc core count):
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
