@@ -259,8 +259,11 @@ def html_to_events(text: str):
                     continue
                 if last_char in _LSTRIP_AFTER:
                     cur = cur.lstrip(_ASCII_WS)
-                    if not cur:
-                        continue
+                if not cur:
+                    # empty after the trim, or empty from the start
+                    # (a char ref to an invalid code point unescapes
+                    # to "")
+                    continue
                 cur = _ASCII_WS_RUN.sub(" ", cur)
                 last_char = cur[-1]
                 buffered += cur

@@ -194,3 +194,19 @@ def test_script_iframe_title_suppressed():
     evs = events_of(html)
     texts = [p for k, p in evs if k == E.TEXT]
     assert texts == ["visible"]
+
+
+def test_char_ref_to_invalid_code_point_is_empty_text():
+    # html.unescape turns refs to invalid code points (&#1;, &#127;,
+    # &#xFFFF;, ...) into "", so the walk meets empty text children
+    # after an inline element, where no left-trim applies
+    from docwire_spark.kernel.api import extract
+
+    for html, text in (
+        (b"<p>a<span>x</span>&#1;</p>", b"ax\n\n"),
+        (b"<p>a<span>x</span>&#1;&#127; y</p>", b"ax y\n\n"),
+        (b"<p>a<b>x</b>&#xFFFF;</p><p>b</p>", b"ax\nb\n\n"),
+    ):
+        res = extract(html, url="t.html")
+        assert res.error is None
+        assert res.text == text
