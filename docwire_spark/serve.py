@@ -188,7 +188,8 @@ class PipelineServer:
                     self._fail(411, "Length Required")
                     return
                 raw_length = raw_length.strip()
-                if not raw_length.isdigit():
+                # headers decode as latin-1: isdigit alone admits "\xb2"
+                if not (raw_length.isascii() and raw_length.isdigit()):
                     self.close_connection = True
                     self._fail(400, "Bad Request: malformed Content-Length")
                     return

@@ -147,7 +147,7 @@ def test_chunked_body_without_length_411(server):
     assert connection == "close"
 
 
-@pytest.mark.parametrize("value", ["abc", "-5", "1e3", ""])
+@pytest.mark.parametrize("value", ["abc", "-5", "1e3", "", "\u00b2"])
 def test_malformed_content_length_400(server, value):
     status, body, connection = _raw_post(
         server, [("Content-Length", value)], b"<p>x</p>"
