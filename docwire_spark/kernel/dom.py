@@ -471,7 +471,6 @@ class TreeBuilder:
         table context, text and plain start/end tags are handled here
         inline; everything else goes through the general handlers."""
         items = self.open
-        counts = self.open_counts
         p_indices = self._p_indices
         in_body = self.in_body_phase
         for kind, value, attrs in tokens:
@@ -501,20 +500,18 @@ class TreeBuilder:
                 if value in _IN_BODY_SPECIAL:
                     self.start_in_body_special(value, attrs)
                     continue
-                # a plain element: _insert + _push without their
-                # table/scope bookkeeping, which no plain name needs
+                # a plain element: _insert without its table/scope
+                # bookkeeping, which no plain name needs
                 top = items[-1]
                 node = Node(value, attrs, top)
                 top.children.append(node)
                 if value not in VOID_ELEMENTS:
                     if value == "p":
                         p_indices.append(len(items))
-                    counts[value] = counts.get(value, 0) + 1
-                    items.append(node)
+                    self._push(node)
             else:
                 if items[-1].name == value and value not in _ROOT_TAGS:
-                    counts[value] -= 1
-                    items.pop()
+                    self._truncate(len(items) - 1)
                 else:
                     self.end_tag(value)
                     in_body = self.in_body_phase

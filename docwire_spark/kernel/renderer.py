@@ -223,20 +223,8 @@ class PlainTextRenderer:
             handler(self, payload)
 
     def feed_all(self, event_list):
-        """``feed`` each event; outside tables, events other than table
-        open/close go straight to their handler (kinds without one
-        render nothing)."""
-        feed = self.feed
-        handlers = _HANDLERS
-        table, close_table = E.TABLE, E.CLOSE_TABLE
-        for event in event_list:
-            kind = event[0]
-            if self.level or kind == table or kind == close_table:
-                feed(event)
-            else:
-                handler = handlers.get(kind)
-                if handler is not None:
-                    handler(self, event[1])
+        for ev in event_list:
+            self.feed(ev)
         return self
 
     # -- per-kind handlers ---------------------------------------------
