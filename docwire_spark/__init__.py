@@ -6,10 +6,11 @@ DocWire SDK (reference: silver-byte/docwire), re-expressed Spark-first:
 - ``kernel``   — pure-Python, dependency-light extraction kernels
   (HTML5 tokenizer + DOM + whitespace machine, plain-text renderer,
   charset normalization, MIME sniffing, TXT/XML/PDF parsers).  These run
-  *inside* vectorized ``mapInPandas`` UDFs; no Spark imports here.
-- ``spark``    — the distributed shell: url-hash sharding, skew salting,
-  oversize-row isolation, per-partition lineage/metrics, idempotent
-  checkpointed writes, synthetic Common-Crawl-style corpus generator.
+  *inside* vectorized ``mapInArrow`` UDFs; no Spark imports here.
+- ``spark``    — the distributed shell: byte-bounded scan splits,
+  url-hash bucketing, skew salting, per-partition lineage/metrics,
+  idempotent checkpointed writes, synthetic Common-Crawl-style corpus
+  generator.
 - ``functions``— training-data-pipeline operators over extracted text:
   dedup (exact / minhash-LSH / simhash / n-gram jaccard), similarity
   search over embeddings, language id, quality scoring, tokenization,

@@ -11,7 +11,7 @@ Properties:
 - zipf-ish host distribution so a few hosts are heavily skewed
   (exercises salting)
 - charset variants: utf-8, cp1250+meta, cp1250+xml-decl, iso-8859-2
-- ~1% oversized rows (body repeated past the oversize threshold)
+- ~1% oversized rows (~300-450 KiB of html)
 - boilerplate chrome (script/style/nav links) around the main content
 """
 
@@ -43,7 +43,7 @@ def make_page(rng: random.Random, doc_id: int, host: str, oversized: bool):
 
     charset_variant = rng.randrange(4)
     if oversized:
-        n_paras = 1500  # ~300-450 KiB of html: above OVERSIZE_BYTES
+        n_paras = 1500  # ~300-450 KiB of html
         paras = [_sentence(rng, rng.randint(20, 40)) for _ in range(n_paras)]
     else:
         n_paras = rng.randint(1, 5)

@@ -3,13 +3,10 @@
 Pipeline (north-rule shape):
 
     pages(url, warc_ts, html, text, lang)
-      -> byte-bounded scan splits (maxPartitionBytes; no pre-shuffle —
-         url-hash sharding is the computed ``bucket`` column, applied
-         physically at the commit boundary; opt-in repartition for
-         pathological inputs)
-         [optional oversize split: length(html) > threshold -> own branch]
+      -> byte-bounded scan splits (maxPartitionBytes; no pre-shuffle
+         — url-hash sharding is the computed ``bucket`` column, applied
+         physically at the commit boundary)
       -> mapInArrow(extract_batch)    # Arrow batches, no per-row Python
-      -> union(oversize branch)
       -> results(url, mime, mime_confidence, extracted_text, spans,
                  meta, error, n_events, bytes_in, partition_id, bucket)
       -> metrics = groupBy(partition_id) aggregation
@@ -23,10 +20,8 @@ Scale notes (100 TB posture):
 - only ``html`` + ``url`` are read by the extraction scan (column
   pruning: select before mapInArrow so parquet never materializes
   unused columns)
-- oversized rows: uniformly spread by the url-hash shuffle by default;
-  the opt-in oversize branch isolates extreme rows on their own full
-  shard fanout when the size distribution demands it (see
-  extract_pages docstring for the measured cost rationale)
+- oversized rows: the byte-bounded scan splits spread them, since a
+  split holds fewer rows the bigger they are
 - mapInArrow streams batches; per-batch Python cost is amortized over
   the Arrow transfer (no per-row pickling)
 """
@@ -41,7 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-OVERSIZE_BYTES = 262_144  # 256 KiB: rows above this get the low-fanout branch
 DEFAULT_SHARDS = 128
 
 SPAN_TYPE = ArrayType(
@@ -137,7 +131,7 @@ def _make_extract_batches(
     requested — emitting it unconditionally doubles the Arrow transfer
     per row and the JVM-side conversion cost, which at high task
     concurrency starves the python workers (measured 4x end-to-end
-    slowdown on the oversized-row branch).
+    slowdown on a branch of oversized rows).
 
     Imports live inside so the function ships cleanly to executors via
     --py-files.
@@ -252,11 +246,9 @@ def _make_extract_batches(
 def extract_pages(
     pages: DataFrame,
     n_shards: int = DEFAULT_SHARDS,
-    oversize_bytes: int | None = None,
     with_binary: bool = False,
     with_main_content: bool = False,
     exports: tuple = (),
-    shuffle: bool = False,
     counters: dict | None = None,
 ) -> DataFrame:
     """Run the extraction pipeline; returns the results DataFrame.
@@ -264,24 +256,17 @@ def extract_pages(
     ``bucket`` is a deterministic url-hash bucket (stable across runs
     and cluster sizes) used by the checkpointed writer for resume.
 
-    url-hash sharding is LOGICAL by default: the bucket is a computed
-    column (pmod(xxhash64(url), n_shards)) and the commit boundary
+    url-hash sharding is LOGICAL: the bucket is a computed column
+    (pmod(xxhash64(url), n_shards)) and the commit boundary
     (CheckpointedWriter) shards on it — no physical pre-shuffle.  The
     parquet/Iceberg scan already yields byte-bounded splits
     (maxPartitionBytes), which balances per-task extraction cost
-    BETTER than row-count-balanced hash shards, and it never moves the
-    raw html bytes across the cluster (measured: the 1.9 GB shuffle of
-    a 600k-doc corpus cost more wall time than the entire 16-core
-    extraction; at 100 TB the pre-shuffle would be the single largest
-    I/O in the job).  Pass ``shuffle=True`` to force the physical
-    repartition when the input's partitioning is pathological (a few
-    giant unsplittable files, or severely size-skewed splits).
-
-    Oversized-row handling: scan splits spread the rare giant rows by
-    byte budget already.  Pass ``oversize_bytes`` to additionally
-    route rows above the threshold through their own branch (a second
-    scan + filter) when the size distribution is so extreme that one
-    row dominates an Arrow batch.
+    BETTER than row-count-balanced hash shards, spreads the rare giant
+    rows by byte budget, and never moves the raw html bytes across the
+    cluster (measured: the 1.9 GB shuffle of a 600k-doc corpus cost
+    more wall time than the entire 16-core extraction).  A repartition
+    into ``n_shards`` would also give fixed-count partitions, which AQE
+    does not coalesce, each paying the per-task cost.
     """
     src = pages.select(
         "url", "html",
@@ -292,36 +277,7 @@ def extract_pages(
     batch_fn = _make_extract_batches(
         with_binary, with_main_content, exports, counters
     )
-
-    if oversize_bytes is None:
-        sharded = (
-            src.repartition(n_shards, F.xxhash64(F.col("url")))
-            if shuffle else src
-        )
-        extracted = sharded.mapInArrow(batch_fn, schema)
-    else:
-        # coalesce: NULL html must not evaporate from both branches
-        # (NULL predicate is neither true nor false) — it belongs in
-        # the normal branch (error/empty-text path of the kernel)
-        is_oversized = (
-            F.coalesce(F.length(F.col("html")), F.lit(0))
-            > F.lit(oversize_bytes)
-        )
-        normal = src.filter(~is_oversized)
-        # oversized rows are individually 50-100x more expensive to
-        # parse: spread the FEW of them over the full shard budget so
-        # no task accumulates a fat tail (this branch is tiny, so its
-        # repartition moves almost no bytes)
-        oversized = src.filter(is_oversized).repartition(
-            n_shards, F.xxhash64(F.col("url"))
-        )
-        if shuffle:
-            normal = normal.repartition(n_shards, F.xxhash64(F.col("url")))
-        extracted = normal.mapInArrow(batch_fn, schema).unionByName(
-            oversized.mapInArrow(batch_fn, schema)
-        )
-
-    return extracted
+    return src.mapInArrow(batch_fn, schema)
 
 
 def salted_host_key(df: DataFrame, host_col: str = "host",

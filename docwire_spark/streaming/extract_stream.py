@@ -1,7 +1,7 @@
 """Structured Streaming extraction: continuous ingest of page batches.
 
 The batch pipeline's exact transformation (``extract_pages`` —
-byte-bounded splits, mapInPandas kernel, computed url-hash bucket)
+byte-bounded splits, mapInArrow kernel, computed url-hash bucket)
 applied to a streaming DataFrame: new parquet drops under the source
 path are discovered per micro-batch, extracted, and appended to the
 sink partitioned by commit bucket-group, with the stream checkpoint
