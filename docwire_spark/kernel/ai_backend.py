@@ -40,13 +40,6 @@ from urllib.parse import urlsplit
 #: coerces them to 1 exactly as chat.cpp:121 does
 GPT5_FAMILY = ("gpt-5", "gpt-5-mini", "gpt-5-nano")
 
-#: embeddings models (embed.cpp:58-64)
-EMBED_MODELS = (
-    "text-embedding-3-small",
-    "text-embedding-3-large",
-    "text-embedding-ada-002",
-)
-
 CHAT_PATH = "/v1/chat/completions"   # chat.cpp:133
 EMBED_PATH = "/v1/embeddings"        # embed.cpp:85
 

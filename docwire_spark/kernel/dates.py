@@ -1,16 +1,15 @@
 """Date parsing helpers (reference: src/convert_chrono.cpp).
 
-Supports the three formats the reference consumes:
+Parses the two formats the extractors here consume:
 - ISO-8601: ``2007-08-09T23:26:06`` (optional Z/offset, fractional secs)
 - OpenOffice legacy: ``20070809;23260600`` (YYYYMMDD;HHMMSSff)
-- ASN.1 / PDF: ``YYYYMMDDHHMMSS`` with optional timezone suffix
 All results are naive UTC ``datetime`` objects.
 """
 
 from __future__ import annotations
 
 import re
-from datetime import datetime, timedelta, timezone
+from datetime import datetime, timedelta
 
 _ISO_RE = re.compile(
     r"^(\d{4})-(\d{2})-(\d{2})[T ](\d{2}):(\d{2})(?::(\d{2}))?"
@@ -20,10 +19,6 @@ _ISO_RE = re.compile(
 # two fractional-second digits must be present, and are ignored;
 # convert_chrono.cpp:62-76)
 _LEGACY_RE = re.compile(r"^(\d{4})(\d{2})(\d{2});(\d{2})(\d{2})(\d{2})\d\d")
-_ASN1_RE = re.compile(
-    r"^(\d{4})(\d{2})?(\d{2})?(\d{2})?(\d{2})?(\d{2})?"
-    r"(?:(Z)|([+-])(\d{2})'?(\d{2})?'?)?"
-)
 
 
 def _apply_offset(dt: datetime, sign: str, hh: str, mm) -> datetime:
@@ -59,28 +54,3 @@ def parse_openoffice_legacy(s: str):
 
 def parse_iso8601_or_legacy(s: str):
     return parse_iso8601(s) or parse_openoffice_legacy(s)
-
-
-def parse_asn1(s: str):
-    """PDF date format after the D: prefix is stripped
-    (reference pdf_parser.cpp:570-587 strips non-digits first)."""
-    m = _ASN1_RE.match(s.strip())
-    if not m or m.group(1) is None:
-        return None
-    y = int(m.group(1))
-    mo = int(m.group(2) or 1)
-    d = int(m.group(3) or 1)
-    h = int(m.group(4) or 0)
-    mi = int(m.group(5) or 0)
-    sec = int(m.group(6) or 0)
-    try:
-        dt = datetime(y, mo, d, h, mi, sec)
-    except ValueError:
-        return None
-    if m.group(8):
-        dt = _apply_offset(dt, m.group(8), m.group(9), m.group(10))
-    return dt
-
-
-def to_epoch_seconds(dt: datetime) -> int:
-    return int(dt.replace(tzinfo=timezone.utc).timestamp())

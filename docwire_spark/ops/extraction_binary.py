@@ -531,15 +531,6 @@ def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     )
 
 
-def _roundtrip_sql(mime: str, tail: str) -> str:
-    return f"""
-SELECT doc_id, '{mime}' AS mime,
-       text || {tail} AS extracted_text,
-       CAST(NULL AS VARCHAR) AS error
-FROM documents
-"""
-
-
 # ---------------------------------------------------------------------------
 # grouped multi-format roundtrips (round 4): the driver's correctness
 # window is finite, so one query per PARSER FAMILY replaces one per
@@ -550,7 +541,7 @@ FROM documents
 # ---------------------------------------------------------------------------
 
 #: expected extracted-text tail per format (paragraph close /
-#: close_document rules — same constants the per-format oracles used)
+#: close_document rules)
 _FMT_TAIL = {
     "pdf": "chr(10) || chr(10)",
     "docx": "chr(10) || chr(10)",
@@ -679,193 +670,6 @@ EXTRACT_OOXML_SQL = _group_sql(GROUP_OOXML)
 EXTRACT_ODF_IWORK_SQL = _group_sql(GROUP_ODF_IWORK)
 EXTRACT_MS_BINARY_SQL = _group_sql(GROUP_MS_BINARY)
 EXTRACT_DOCSTREAM_SQL = _group_sql(GROUP_DOCSTREAM)
-
-
-def extract_pdf_roundtrip(spark, sf_dir):
-    """PDF parser through the distributed path (content-stream parse,
-    reading order, xref walk — kernel/pdfminer_lite.py, kernel/pdf.py;
-    reference src/pdf_parser.cpp)."""
-    return _roundtrip(spark, sf_dir, "pdf")
-
-
-def extract_docx_roundtrip(spark, sf_dir):
-    """OOXML parser through the distributed path (ZIP container ->
-    word/document.xml -> paragraph render — kernel/docx_extract.py;
-    reference src/odf_ooxml_parser.cpp)."""
-    return _roundtrip(spark, sf_dir, "docx")
-
-
-def extract_rtf_roundtrip(spark, sf_dir):
-    """RTF parser through the distributed path (group/control-word
-    machine — kernel/rtf_extract.py; reference src/rtf_parser.cpp)."""
-    return _roundtrip(spark, sf_dir, "rtf")
-
-
-def extract_eml_roundtrip(spark, sf_dir):
-    """EML parser through the distributed path (RFC-822 headers +
-    text/plain body — kernel/eml_extract.py; reference
-    src/eml_parser.cpp)."""
-    return _roundtrip(spark, sf_dir, "eml")
-
-
-def extract_archive_roundtrip(spark, sf_dir):
-    """ZIP archive parser through the distributed path (central
-    directory walk -> member dispatch -> txt parser — kernel/
-    archive_extract.py; reference src/archives_parser.cpp)."""
-    return _roundtrip(spark, sf_dir, "zip")
-
-
-# expected bytes per format, reconstructed analytically: the builders
-# emit the document text verbatim (no collapsible whitespace paths in
-# these parsers for [a-z0-9 .,] payloads); paragraph close adds "\n\n"
-# (pdf/docx/rtf/zip-member-txt), the eml body render ends at the
-# body's own newline
-EXTRACT_PDF_SQL = _roundtrip_sql("application/pdf", "chr(10) || chr(10)")
-EXTRACT_DOCX_SQL = _roundtrip_sql(DOCX_MIME, "chr(10) || chr(10)")
-EXTRACT_RTF_SQL = _roundtrip_sql("application/rtf", "chr(10) || chr(10)")
-EXTRACT_EML_SQL = _roundtrip_sql("message/rfc822", "chr(10)")
-EXTRACT_ZIP_SQL = _roundtrip_sql("application/zip", "chr(10) || chr(10)")
-
-
-def extract_xlsx_roundtrip(spark, sf_dir):
-    """XLSX parser through the distributed path (ZIP -> workbook rels
-    -> sharedStrings indirection -> sheet cells -> table-grid render —
-    kernel/xlsx_extract.py; reference src/odf_ooxml_parser.cpp
-    spreadsheet branch)."""
-    return _roundtrip(spark, sf_dir, "xlsx")
-
-
-def extract_pptx_roundtrip(spark, sf_dir):
-    """PPTX parser through the distributed path (slide spTree text
-    runs — kernel/docx_extract.py pptx branch)."""
-    return _roundtrip(spark, sf_dir, "pptx")
-
-
-def extract_odt_roundtrip(spark, sf_dir):
-    """ODF parser through the distributed path (mimetype member sniff
-    -> content.xml paragraphs — kernel/odf_extract.py; reference
-    src/odf_ooxml_parser.cpp + odfxml)."""
-    return _roundtrip(spark, sf_dir, "odt")
-
-
-# xlsx renders the 2-cell grid: global col width w = max(len(text),
-# len('7')) = len(text); A1 right-padded to w plus the 2-space gutter,
-# B1 ('7') right-padded to w (plain_text_writer grid rules, verified
-# against the extract_table golden path)
-EXTRACT_XLSX_SQL = f"""
-SELECT doc_id, '{XLSX_MIME}' AS mime,
-       rpad(text, CAST(length(text) + 2 AS INT), ' ')
-         || rpad('7', CAST(length(text) AS INT), ' ')
-         || chr(10) || chr(10) AS extracted_text,
-       CAST(NULL AS VARCHAR) AS error
-FROM documents
-"""
-EXTRACT_PPTX_SQL = _roundtrip_sql(PPTX_MIME, "chr(10) || chr(10)")
-EXTRACT_ODT_SQL = _roundtrip_sql(ODT_MIME, "chr(10) || chr(10)")
-
-
-def extract_xls_roundtrip(spark, sf_dir):
-    """Binary XLS (BIFF8) through the distributed path: own CFB
-    container reader -> Workbook stream -> BOF/LABEL/EOF records —
-    kernel/cfb.py + kernel/xls_extract.py; reference src/
-    xls_parser.cpp.  The OLE sniff refines application/x-ole-storage
-    to the concrete office mime by directory stream names."""
-    return _roundtrip(spark, sf_dir, "xls")
-
-
-def extract_doc_roundtrip(spark, sf_dir):
-    """Binary Word97 DOC through the distributed path: CFB ->
-    WordDocument FIB -> CLX piece table in 0Table -> cp1252 pieces —
-    kernel/doc_extract.py; reference src/doc_parser.cpp (wv2)."""
-    return _roundtrip(spark, sf_dir, "doc")
-
-
-def extract_ppt_roundtrip(spark, sf_dir):
-    """Binary PowerPoint through the distributed path: CFB ->
-    'PowerPoint Document' record tree -> TextBytesAtom —
-    kernel/ppt_extract.py; reference src/ppt_parser.cpp."""
-    return _roundtrip(spark, sf_dir, "ppt")
-
-
-EXTRACT_XLS_SQL = _roundtrip_sql(
-    "application/vnd.ms-excel", "chr(10) || chr(10)"
-)
-EXTRACT_DOC_SQL = _roundtrip_sql(
-    "application/msword", "chr(10) || chr(10)"
-)
-EXTRACT_PPT_SQL = _roundtrip_sql(
-    "application/vnd.ms-powerpoint", "chr(10) || chr(10)"
-)
-
-
-def extract_xlsb_roundtrip(spark, sf_dir):
-    """XLSB (BIFF12) through the distributed path: ZIP -> varint
-    record reader -> row/cell records — kernel/xlsb_extract.py;
-    reference src/xlsb_parser.cpp."""
-    return _roundtrip(spark, sf_dir, "xlsb")
-
-
-def extract_rar_roundtrip(spark, sf_dir):
-    """RAR5 archive through the distributed path: Rar! magic sniff ->
-    kernel/rar5.py walk -> stored member re-enters the chain as txt —
-    kernel/archive_extract.py; reference src/archives_parser.cpp."""
-    return _roundtrip(spark, sf_dir, "rar")
-
-
-EXTRACT_RAR_SQL = _roundtrip_sql(RAR_MIME, "chr(10) || chr(10)")
-
-
-def extract_iwork_roundtrip(spark, sf_dir):
-    """iWork Pages through the distributed path: zip-member sniff
-    (index.xml <sl:document> -> pages) -> SAX text-storage walk —
-    kernel/iwork_extract.py; reference src/iwork_parser.cpp +
-    content_type_iwork.cpp."""
-    return _roundtrip(spark, sf_dir, "pages")
-
-
-# xlsb: "\n\n" after every sheet + close_document newline
-EXTRACT_XLSB_SQL = _roundtrip_sql(
-    XLSB_MIME, "chr(10) || chr(10) || chr(10)"
-)
-EXTRACT_PAGES_SQL = _roundtrip_sql(PAGES_MIME, "chr(10)")
-
-
-def extract_fodt_roundtrip(spark, sf_dir):
-    """Flat-ODF through the distributed path: the office:mimetype
-    sniff refinement (content_type_odf_flat.cpp:17-37) must route the
-    single-file XML to the ODF parser.  The payload is built entirely
-    in Catalyst (pure XML), no Python builder involved."""
-    docs = load(spark, sf_dir, "documents", parallelize=True)
-    pages = docs.select(
-        F.concat(F.lit(_URL_PREFIX), F.col("doc_id").cast("string"),
-                 F.lit(".fodt")).alias("url"),
-        F.encode(
-            F.concat(
-                F.lit(
-                    '<?xml version="1.0" encoding="UTF-8"?>'
-                    '<office:document xmlns:office="urn:oasis:names:tc:'
-                    'opendocument:xmlns:office:1.0" xmlns:text="urn:oasis:'
-                    'names:tc:opendocument:xmlns:text:1.0"'
-                    ' office:mimetype="application/vnd.oasis.opendocument'
-                    '.text"><office:body><office:text><text:p>'
-                ),
-                F.col("text"),
-                F.lit("</text:p></office:text></office:body>"
-                      "</office:document>"),
-            ),
-            "UTF-8",
-        ).alias("html"),
-    )
-    res = extract_pages(pages, n_shards=16)
-    return res.select(
-        F.regexp_extract("url", r"/(\d+)\.", 1).cast("bigint").alias("doc_id"),
-        "mime",
-        "extracted_text",
-        "error",
-    )
-
-
-EXTRACT_FODT_SQL = _roundtrip_sql(FODT_MIME, "chr(10) || chr(10)")
 
 
 def binary_dispatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
