@@ -42,7 +42,9 @@ from __future__ import annotations
 
 import http.server
 import re
+import socket
 import threading
+import time
 import urllib.error
 import urllib.request
 import uuid
@@ -56,6 +58,13 @@ USER_AGENT = f"docwire-spark/{__version__}"
 #: http::body_limit default (http_server.h uses httplib's default;
 #: we pick an explicit bound so the 413 path is always defined)
 DEFAULT_BODY_LIMIT = 128 * 1024 * 1024
+
+#: lingering close of a refused request: after the answer, read and
+#: discard at most this many body bytes for at most this many seconds
+#: before closing, so a client still sending gets the answer instead of
+#: a reset connection
+LINGER_BYTES = 8 * 1024 * 1024
+LINGER_S = 2.0
 
 _NO_OUTPUT_MSG = (
     "Error: The processing pipeline did not produce any output message."
@@ -163,6 +172,30 @@ class PipelineServer:
             def _fail(self, status: int, message: str):
                 self._respond(status, message.encode(), "text/plain")
 
+            def _refuse(self, status: int, message: str):
+                """Answer without reading the body, then close.  Closing
+                with body bytes unread would reset the connection, and a
+                client still sending would lose the answer, so half-close
+                and drain first (a lingering close)."""
+                self.close_connection = True
+                self._fail(status, message)
+                sock = self.connection
+                try:
+                    sock.shutdown(socket.SHUT_WR)
+                    deadline = time.monotonic() + LINGER_S
+                    left = LINGER_BYTES
+                    while left > 0:
+                        wait = deadline - time.monotonic()
+                        if wait <= 0:
+                            break
+                        sock.settimeout(wait)
+                        chunk = sock.recv(min(left, 65536))
+                        if not chunk:
+                            break
+                        left -= len(chunk)
+                except OSError:  # includes the drain's timeout
+                    pass
+
             def do_GET(self):  # only POST handlers exist -> 404
                 self._fail(404, "Not Found")
 
@@ -184,20 +217,16 @@ class PipelineServer:
                 # next request
                 raw_length = self.headers.get("Content-Length")
                 if raw_length is None:
-                    self.close_connection = True
-                    self._fail(411, "Length Required")
+                    self._refuse(411, "Length Required")
                     return
                 raw_length = raw_length.strip()
                 # headers decode as latin-1: isdigit alone admits "\xb2"
                 if not (raw_length.isascii() and raw_length.isdigit()):
-                    self.close_connection = True
-                    self._fail(400, "Bad Request: malformed Content-Length")
+                    self._refuse(400, "Bad Request: malformed Content-Length")
                     return
                 length = int(raw_length)
                 if length > server.body_limit:
-                    # can't safely drain an oversized body; close after
-                    self.close_connection = True
-                    self._fail(413, "Payload Too Large")
+                    self._refuse(413, "Payload Too Large")
                     return
                 body = self.rfile.read(length) if length else b""
                 mime_hint = _media_type(self.headers.get("Content-Type"))

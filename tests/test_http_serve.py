@@ -12,6 +12,7 @@ multipart POST shapes, Bearer auth, and non-2xx -> error.
 
 import http.server
 import re
+import socket
 import threading
 import urllib.error
 import urllib.request
@@ -116,6 +117,27 @@ def test_body_limit_413(server):
     with pytest.raises(urllib.error.HTTPError) as exc_info:
         _post(server.url + "/extract", b"x" * ((1 << 20) + 1))
     assert exc_info.value.code == 413
+
+
+def test_413_drains_the_body_before_closing(server):
+    """The server answers 413 with body bytes still unread.  It must
+    half-close and discard the body (lingering close): closing at once
+    resets the connection, and a client still sending its body gets a
+    broken pipe instead of the answer."""
+    body = b"x" * ((1 << 20) + 1)
+    head = (b"POST /extract HTTP/1.1\r\nHost: t\r\n"
+            b"Content-Length: %d\r\n\r\n" % len(body))
+    with socket.create_connection((server.address, server.port),
+                                  timeout=10) as sock:
+        sock.sendall(head + body[:65536])
+        answer = b""
+        while not answer.endswith(b"Payload Too Large"):
+            chunk = sock.recv(4096)
+            assert chunk, answer
+            answer += chunk
+        assert answer.startswith(b"HTTP/1.1 413")
+        assert sock.recv(1) == b""  # half-closed, not reset
+        sock.sendall(body[65536:])
 
 
 def _raw_post(server, headers, body):
