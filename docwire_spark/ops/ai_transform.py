@@ -52,6 +52,8 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, StringType, StructField, StructType,
 )
 
+from docwire_spark.spark.session import drop_zip_importers
+
 from .bloom import hash_expr
 from .common import (
     STOP_EN, TOKENS_EXPR, TOKENS_SQL, let_expr, load, with_tokens,
@@ -90,6 +92,7 @@ def chat_transform(
     )
 
     def _complete_batches(batches):
+        drop_zip_importers()
         backend = backend_factory()
         try:
             for batch in batches:
@@ -135,6 +138,7 @@ def embed_transform(
     )
 
     def _embed_batches(batches):
+        drop_zip_importers()
         backend = backend_factory()
         try:
             for batch in batches:

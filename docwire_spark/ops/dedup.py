@@ -73,6 +73,7 @@ from docwire_spark.ops.common import (
     persist_tracked,
     with_tokens,
 )
+from docwire_spark.spark.session import drop_zip_importers
 
 NUM_HASHES = 125
 BAND_SIZE = 5          # r: rows per band
@@ -136,6 +137,7 @@ def _minhash_batches(iterator):
     125 affine permutations (uint64 wraparound) -> column mins -> 25
     per-band 60-bit md5 keys.  One (T x 125) numpy multiply per doc;
     token hashes are cached across the batch (Zipfian token reuse)."""
+    drop_zip_importers()
     import hashlib
     import re
 
@@ -474,6 +476,7 @@ def _simhash_batches_fn(n_bits: int):
     n_hex = n_bits // 4
 
     def batches(iterator):
+        drop_zip_importers()
         import hashlib
         import re
 
@@ -774,6 +777,7 @@ def _emb_band_batches(iterator):
     """Sign-LSH band keys: 96 ±1 projections per vector (one numpy
     product per row-chunk), left-fold (cumsum) accumulation so the
     projection sign matches DuckDB's sequential list_sum exactly."""
+    drop_zip_importers()
     import numpy as np
     import pandas as pd
 

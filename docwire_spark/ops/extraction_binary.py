@@ -35,6 +35,7 @@ from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from docwire_spark.ops.common import load
 from docwire_spark.spark.extract import extract_pages
+from docwire_spark.spark.session import drop_zip_importers
 
 _URL_PREFIX = "https://synth.local/d/"
 
@@ -503,6 +504,7 @@ def _builder_batches(iterator):
     """Arrow-batched payload builder: (doc_id, text, fmt) -> (url,
     html BINARY).  Runs on executors; per-batch Python, no per-row
     pickling."""
+    drop_zip_importers()
     import pandas as pd
 
     for pdf in iterator:
@@ -766,6 +768,7 @@ _TREE_SCHEMA = (
 
 
 def _tree_batches(iterator):
+    drop_zip_importers()
     import pandas as pd
 
     from docwire_spark.kernel.api import extract_tree

@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 
 from docwire_spark.kernel import media_headers as MH
 from docwire_spark.ops.common import load
+from docwire_spark.spark.session import drop_zip_importers
 
 META_SCHEMA = StructType(
     [
@@ -79,6 +80,7 @@ def build_media_blob(doc_id: int, payload: bytes) -> bytes:
 
 
 def _blob_batches(iterator):
+    drop_zip_importers()
     import pandas as pd
 
     for pdf in iterator:
@@ -94,6 +96,7 @@ def _blob_batches(iterator):
 
 
 def _media_batches(iterator):
+    drop_zip_importers()
     import pandas as pd
 
     for pdf in iterator:
@@ -203,6 +206,7 @@ def sample_frames(blob: bytes, duration_ms: int):
 
 
 def _frame_batches(iterator):
+    drop_zip_importers()
     import pandas as pd
 
     for pdf in iterator:

@@ -3,9 +3,10 @@
 Pipeline (north-rule shape):
 
     pages(url, warc_ts, html, text, lang)
-      -> byte-bounded scan splits (maxPartitionBytes; no pre-shuffle
-         — url-hash sharding is the computed ``bucket`` column, applied
-         physically at the commit boundary)
+      -> byte-bounded scan splits (maxPartitionBytes and a small
+         per-file open cost, see session.py; no pre-shuffle — url-hash
+         sharding is the computed ``bucket`` column, applied physically
+         at the commit boundary)
       -> mapInArrow(extract_batch)    # Arrow batches, no per-row Python
       -> results(url, mime, mime_confidence, extracted_text, spans,
                  meta, error, n_events, bytes_in, partition_id, bucket)
@@ -35,6 +36,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
+
+from docwire_spark.spark.session import drop_zip_importers
 
 DEFAULT_SHARDS = 128
 
@@ -142,6 +145,7 @@ def _make_extract_batches(
     ]
 
     def _extract_batches(iterator):
+        drop_zip_importers()
         import pyarrow as pa
         from pyspark import TaskContext
 

@@ -22,6 +22,7 @@ from urllib.parse import urlsplit
 # NOT serve.USER_AGENT: importing serve would drag the whole
 # extraction kernel into every executor that only delivers rows
 from docwire_spark import __version__
+from docwire_spark.spark.session import drop_zip_importers
 
 USER_AGENT = f"docwire-spark/{__version__}"
 
@@ -52,6 +53,7 @@ def post_rows(
         path = f"{path}?{parts.query}"
 
     def _send_partition(rows):
+        drop_zip_importers()
         import http.client
 
         conn_cls = (

@@ -38,6 +38,8 @@ import pandas as pd
 _EPOCH = _dt.datetime(1970, 1, 1)
 from pyspark.sql import DataFrame, SparkSession
 
+from docwire_spark.spark.session import drop_zip_importers
+
 READ_SCHEMA = (
     "warc_file string, warc_offset bigint, warc_length bigint, "
     "warc_type string, url string, warc_ts timestamp, http_status int, "
@@ -83,6 +85,7 @@ def read_warc(spark: SparkSession, path: str,
     keep = set(keep_types)
 
     def scan(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from docwire_spark.kernel.warc import (
             iter_warc_records, split_http_response,
         )
@@ -140,6 +143,7 @@ def _export(df: DataFrame, out_dir: str, n_files: int, kind: str,
     part = df.repartition(n_files, "url").sortWithinPartitions("url")
 
     def write_part(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from pyspark import TaskContext
 
         from docwire_spark.kernel.warc import (

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     ArrayType, StringType, StructField, StructType,
 )
 
+from docwire_spark.spark.session import drop_zip_importers
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("host", StringType()),
@@ -61,6 +63,7 @@ MAX_STATE_PER_GROUP = 100_000
 
 
 def _dedup_state_fn(key, pdf_iter, state):
+    drop_zip_importers()
     import pandas as pd
 
     host = key[0]
