@@ -3,8 +3,8 @@
 ``queries()`` / ``oracle_sql()`` pairs cover the operator inventory
 from SURVEY.md §2 plus the training-data ops (dedup, similarity
 search, text analysis, multimodal plumbing).  The ``extract_*``
-queries run the REAL distributed extraction pipeline (url-hash
-bucketing -> mapInArrow kernel) and their oracles reconstruct the
+queries run the REAL distributed extraction pipeline (byte-bounded
+scan splits -> mapInArrow kernel) and their oracles reconstruct the
 expected bytes analytically — a byte-identity gate through DuckDB.
 """
 
@@ -31,19 +31,20 @@ def _ship(spark: SparkSession) -> None:
 
         ship_package(spark)
     except Exception:
-        pass  # already shipped, or PYTHONPATH already covers the repo
+        pass  # executors may still import it from PYTHONPATH
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline (sniff -> charset -> HTML5
     DOM -> whitespace machine -> plain-text render) over a pages table
-    synthesized from sf0.001 documents, via url-hash bucketing +
-    mapInArrow."""
+    synthesized from sf0.001 documents, via mapInArrow, with each row's
+    url-hash ``bucket`` over 16 shards (``lineage.url_bucket``)."""
     _ship(spark)
     from pyspark.sql import functions as F
 
     from docwire_spark.ops.common import load
     from docwire_spark.spark.extract import extract_pages
+    from docwire_spark.spark.lineage import url_bucket
 
     docs = load(spark, DEFAULT_SF_DIR, "documents")
     pages = docs.select(
@@ -58,10 +59,10 @@ def entry(spark: SparkSession) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.select(
         "url", "mime", "mime_confidence", "extracted_text", "n_events",
-        "bytes_in", "bucket", "error",
+        "bytes_in", url_bucket(16).alias("bucket"), "error",
     )
 
 

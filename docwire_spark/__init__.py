@@ -8,8 +8,8 @@ DocWire SDK (reference: silver-byte/docwire), re-expressed Spark-first:
   charset normalization, MIME sniffing, TXT/XML/PDF parsers).  These run
   *inside* vectorized ``mapInArrow`` UDFs; no Spark imports here.
 - ``spark``    — the distributed shell: byte-bounded scan splits,
-  url-hash bucketing, skew salting, per-partition lineage/metrics,
-  idempotent checkpointed writes, synthetic Common-Crawl-style corpus
+  skew salting, per-partition lineage/metrics, idempotent checkpointed
+  writes sharded by url hash, synthetic Common-Crawl-style corpus
   generator.
 - ``functions``— training-data-pipeline operators over extracted text:
   dedup (exact / minhash-LSH / simhash / n-gram jaccard), similarity

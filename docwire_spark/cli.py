@@ -32,14 +32,7 @@ import argparse
 import sys
 
 from docwire_spark import __version__
-
-#: --output_type value -> (extract() exports entry, ExtractResult field)
-_OUTPUT_TYPES = {
-    "plain_text": (None, "text"),
-    "html": ("html", "html"),
-    "csv": ("csv", "csv"),
-    "metadata": ("meta_text", "meta_text"),
-}
+from docwire_spark.kernel.api import OUTPUT_TYPES, extract
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -55,7 +48,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     parser.add_argument(
         "--output_type",
-        choices=sorted(_OUTPUT_TYPES),
+        choices=sorted(OUTPUT_TYPES),
         default="plain_text",
         help="exporter to render the event stream with "
         "(default: plain_text)",
@@ -176,8 +169,6 @@ def _ai_chain(args) -> list:
 
 
 def main(argv: list | None = None) -> int:
-    from docwire_spark.kernel.api import extract
-
     args = build_parser().parse_args(argv)
 
     # always-fatal option combinations are rejected BEFORE any work —
@@ -208,7 +199,7 @@ def main(argv: list | None = None) -> int:
             return 1
         url = args.input_file
 
-    export, out_field = _OUTPUT_TYPES[args.output_type]
+    export, out_field, out_mime = OUTPUT_TYPES[args.output_type]
     res = extract(
         data,
         url=url,
@@ -237,9 +228,6 @@ def main(argv: list | None = None) -> int:
     if args.http_post:
         from docwire_spark.serve import HttpPost
 
-        out_mime = "text/html" if args.output_type == "html" \
-            else "text/csv" if args.output_type == "csv" \
-            else "text/plain"
         try:
             out, _ = HttpPost(args.http_post)(out, mime=out_mime)
         except (RuntimeError, OSError) as exc:

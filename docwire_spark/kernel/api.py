@@ -102,6 +102,18 @@ class ExtractResult:
     csv: bytes | None = None
 
 
+#: output type -> (``extract()`` exports entry, ExtractResult field,
+#: media type): the reference CLI's four exporters
+#: (docwire.cpp:314-328), for the CLI's --output_type and the HTTP
+#: server's routes
+OUTPUT_TYPES = {
+    "plain_text": (None, "text", "text/plain"),
+    "html": ("html", "html", "text/html"),
+    "csv": ("csv", "csv", "text/csv"),
+    "metadata": ("meta_text", "meta_text", "text/plain"),
+}
+
+
 def extract(
     data: bytes,
     url: str = "",
@@ -422,10 +434,7 @@ def _extract_archive(
             if sub.main_content:
                 mains.append(sub.main_content)
             for name_ in exports:
-                rendered = getattr(
-                    sub, {"html": "html", "meta_text": "meta_text",
-                          "csv": "csv"}[name_]
-                )
+                rendered = getattr(sub, name_)
                 if rendered:
                     renders[name_].append(rendered)
         if n_entries and n_failed == n_entries:

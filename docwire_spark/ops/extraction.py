@@ -28,7 +28,7 @@ _URL_PREFIX = "https://synth.local/d/"
 
 
 def _run_kernel(pages: DataFrame, extra_cols=()) -> DataFrame:
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.select(
         F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
         *extra_cols,
@@ -187,7 +187,7 @@ def extract_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    res = extract_pages(pages, n_shards=16, with_main_content=True)
+    res = extract_pages(pages, with_main_content=True)
     return res.select(
         F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
         "main_content",
@@ -218,7 +218,7 @@ def extract_html_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    res = extract_pages(pages, n_shards=16, exports=("html", "meta_text"))
+    res = extract_pages(pages, exports=("html", "meta_text"))
     return res.select(
         F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
         "extracted_html",
@@ -274,7 +274,7 @@ def extract_csv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    res = extract_pages(pages, n_shards=16, exports=("csv",))
+    res = extract_pages(pages, exports=("csv",))
     return res.select(
         F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
         "table_csv",
@@ -322,7 +322,7 @@ def format_dispatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit(_URL_PREFIX), did, F.lit("."), ext).alias("url"),
         F.encode(body, "UTF-8").alias("html"),
     )
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.groupBy("mime").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.length("extracted_text")).alias("total_chars"),
@@ -383,7 +383,7 @@ def extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return (
         res.select(
             F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),

@@ -524,7 +524,7 @@ def _synth_pages(docs: DataFrame, fmt_col) -> DataFrame:
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", parallelize=True)
     pages = _synth_pages(docs, F.lit(fmt))
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.select(
         F.regexp_extract("url", r"/(\d+)\.", 1).cast("bigint").alias("doc_id"),
         "mime",
@@ -589,7 +589,7 @@ def _group_roundtrip(spark: SparkSession, sf_dir: str,
         F.explode(F.array(*[F.lit(f) for f in fmts])).alias("fmt"),
     )
     pages = _synth_pages(docs, F.col("fmt"))
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.select(
         F.regexp_extract("url", r"/(\d+)\.", 1).cast("bigint").alias("doc_id"),
         F.regexp_extract("url", r"\.([a-z0-9]+)$", 1).alias("fmt"),
@@ -690,7 +690,7 @@ def binary_dispatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("zip"))
     )
     pages = _synth_pages(docs, fmt)
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     return res.groupBy("mime").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.length("extracted_text")).alias("total_chars"),

@@ -211,7 +211,7 @@ def link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS STRING) || '\">b</a> y</p>"
         "</body></html>', 'UTF-8') AS html",
     )
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     links = res.selectExpr(
         "regexp_extract(url, '^https?://([^/]+)', 1) AS src_host",
         "transform(filter(spans, p -> p.kind = 'link'),"
@@ -301,7 +301,7 @@ def anchor_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         " || '</a> y</p>"
         "</body></html>', 'UTF-8') AS html",
     )
-    res = extract_pages(pages, n_shards=16)
+    res = extract_pages(pages)
     pairs = res.selectExpr(
         "regexp_extract(url, '^https?://([^/]+)', 1) AS src_host",
         "extracted_text AS t",

@@ -2,8 +2,8 @@
 
 ``extract_stream_plain`` runs the REAL streaming path end-to-end:
 synthesized pages written to a parquet drop directory -> file-source
-``readStream`` -> the batch-identical extraction transformation
-(``streaming.extract_stream``) -> memory sink drained with
+``readStream`` -> the batch extraction transformation itself
+(``spark.extract.extract_pages``) -> memory sink drained with
 ``availableNow`` -> the sink table returned as the query result.  The
 DuckDB oracle is the same analytic reconstruction the batch
 ``extract_plain`` query uses — proving the streaming mode is
@@ -35,7 +35,7 @@ def _cleanup(*dirs: str) -> None:
 
 
 def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docwire_spark.streaming.extract_stream import extract_stream
+    from docwire_spark.spark.extract import extract_pages
 
     docs = load(spark, sf_dir, "documents")
     pages = docs.select(
@@ -67,7 +67,7 @@ def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(drop_dir)
     )
-    extracted = extract_stream(stream_pages, n_shards=16)
+    extracted = extract_pages(stream_pages)
     sink = f"stream_oracle_sink_{next(_SINK_IDS)}_{os.getpid()}"
     try:
         q = (
@@ -313,7 +313,7 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream == batch for the composed pipeline too."""
     from docwire_spark.ops.corpus_filter import redact_pii_column
     from docwire_spark.ops.common import TOKENS_EXPR
-    from docwire_spark.streaming.extract_stream import extract_stream
+    from docwire_spark.spark.extract import extract_pages
 
     docs = load(spark, sf_dir, "documents")
     pages = docs.select(
@@ -338,7 +338,7 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(drop_dir)
     )
     cleaned = redact_pii_column(
-        extract_stream(stream_pages, n_shards=16)
+        extract_pages(stream_pages)
         .withColumn("text", F.col("extracted_text"))
         .withColumn(
             "n_tok",

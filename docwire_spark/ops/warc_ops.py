@@ -184,7 +184,7 @@ def warc_extract_wet(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested = read_warc(spark, warc_dir).filter(
         "warc_type = 'response'"
     ).selectExpr("url", "payload AS html")
-    extracted = extract_pages(ingested, n_shards=16).selectExpr(
+    extracted = extract_pages(ingested).selectExpr(
         "url",
         # ts re-derived from the url's trailing doc_id (shuffle-free)
         "timestampadd(SECOND,"

@@ -50,7 +50,7 @@ import urllib.request
 import uuid
 
 from docwire_spark import __version__
-from docwire_spark.kernel.api import extract
+from docwire_spark.kernel.api import OUTPUT_TYPES, extract
 from docwire_spark.kernel.sniff import to_extension
 
 USER_AGENT = f"docwire-spark/{__version__}"
@@ -75,17 +75,6 @@ class PipelineError(RuntimeError):
     """A pipeline produced an error message instead of output
     (the reference's ``std::exception_ptr`` message branch,
     http_server.cpp:176-181)."""
-
-
-#: --output_type / route exporter -> (extract() exports entry,
-#: ExtractResult field, response media type) — the reference CLI's
-#: four exporters (docwire.cpp:314-328)
-OUTPUT_TYPES = {
-    "plain_text": (None, "text", "text/plain"),
-    "html": ("html", "html", "text/html"),
-    "csv": ("csv", "csv", "text/csv"),
-    "metadata": ("meta_text", "meta_text", "text/plain"),
-}
 
 
 def extraction_pipeline(output_type: str = "plain_text",

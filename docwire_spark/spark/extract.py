@@ -4,14 +4,15 @@ Pipeline (north-rule shape):
 
     pages(url, warc_ts, html, text, lang)
       -> byte-bounded scan splits (maxPartitionBytes and a small
-         per-file open cost, see session.py; no pre-shuffle — url-hash
-         sharding is the computed ``bucket`` column, applied physically
-         at the commit boundary)
+         per-file open cost, see session.py; no pre-shuffle)
       -> mapInArrow(extract_batch)    # Arrow batches, no per-row Python
       -> results(url, mime, mime_confidence, extracted_text, spans,
-                 meta, error, n_events, bytes_in, partition_id, bucket)
+                 meta, error, n_events, bytes_in, partition_id)
       -> metrics = groupBy(partition_id) aggregation
-      -> checkpointed idempotent write sharded by bucket (lineage.py)
+      -> checkpointed idempotent write sharded by url hash (lineage.py
+         derives ``bucket`` from ``url`` at the commit boundary)
+
+The same transform serves batch and streaming DataFrames.
 
 Skew handling: a host-level salt key helper for host-grouped
 operations (extraction itself shards by url hash, which is uniform;
@@ -37,9 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docwire_spark.spark.lineage import DEFAULT_SHARDS  # noqa: F401
 from docwire_spark.spark.session import drop_zip_importers
-
-DEFAULT_SHARDS = 128
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -62,7 +62,6 @@ _BASE_FIELDS = [
     StructField("n_events", IntegerType()),
     StructField("bytes_in", LongType()),
     StructField("partition_id", IntegerType()),
-    StructField("bucket", IntegerType()),
 ]
 
 RESULT_SCHEMA = StructType(_BASE_FIELDS)
@@ -98,27 +97,6 @@ def _result_schema(
     return StructType(fields)
 
 
-def _pa_types():
-    """pyarrow types per result column (must mirror RESULT_SCHEMA)."""
-    import pyarrow as pa
-
-    span = pa.list_(pa.struct([
-        pa.field("start", pa.int64()),
-        pa.field("end", pa.int64()),
-        pa.field("kind", pa.string()),
-    ]))
-    return {
-        "url": pa.string(), "mime": pa.string(),
-        "mime_confidence": pa.string(), "extracted_text": pa.string(),
-        "extracted_bytes": pa.binary(), "main_content": pa.string(),
-        "extracted_html": pa.string(), "meta_text": pa.string(),
-        "table_csv": pa.string(), "spans": span, "meta_json": pa.string(),
-        "error": pa.string(), "n_events": pa.int32(),
-        "bytes_in": pa.int64(), "partition_id": pa.int32(),
-        "bucket": pa.int32(),
-    }
-
-
 def _make_extract_batches(
     with_binary: bool,
     with_main_content: bool = False,
@@ -139,19 +117,17 @@ def _make_extract_batches(
     Imports live inside so the function ships cleanly to executors via
     --py-files.
     """
-    col_names = [
-        f.name for f in _result_schema(with_binary, with_main_content,
-                                       exports).fields
-    ]
+    schema = _result_schema(with_binary, with_main_content, exports)
 
     def _extract_batches(iterator):
         drop_zip_importers()
         import pyarrow as pa
         from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from docwire_spark.kernel.api import extract
 
-        pa_types = _pa_types()
+        arrow_schema = to_arrow_schema(schema)
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
 
@@ -159,32 +135,8 @@ def _make_extract_batches(
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
             n = len(urls)
-            # bucket is computed JVM-side on the NARROW input (url
-            # only) and passed through as the original Arrow array —
-            # zero conversion cost
-            names = batch.schema.names
-            bucket_arr = (
-                batch.column("bucket").cast(pa.int32())
-                if "bucket" in names else pa.nulls(n, pa.int32())
-            )
-            out = {
-                "mime": [],
-                "mime_confidence": [],
-                "extracted_text": [],
-                "main_content": [],
-                "extracted_bytes": [],
-                "spans": [],
-                "meta_json": [],
-                "error": [],
-                "n_events": [],
-                "bytes_in": [],
-            }
-            for name in exports:
-                out[EXPORT_COLUMNS[name]] = []
-            if not with_binary:
-                del out["extracted_bytes"]
-            if not with_main_content:
-                del out["main_content"]
+            out = {f.name: [] for f in arrow_schema if f.name != "url"}
+            out["partition_id"] = [pid] * n
             for url, html in zip(urls, htmls):
                 data = html if html is not None else b""
                 res = extract(
@@ -200,10 +152,7 @@ def _make_extract_batches(
                 if with_main_content:
                     out["main_content"].append(res.main_content)
                 for name in exports:
-                    rendered = getattr(
-                        res, {"html": "html", "meta_text": "meta_text",
-                              "csv": "csv"}[name]
-                    )
+                    rendered = getattr(res, name)
                     out[EXPORT_COLUMNS[name]].append(
                         rendered.decode("utf-8", "replace")
                         if rendered is not None else None
@@ -230,53 +179,38 @@ def _make_extract_batches(
                 counters["failed"].add(
                     sum(1 for e in out["error"] if e is not None)
                 )
-            arrays = []
-            for cname in col_names:
-                if cname == "url":
-                    arrays.append(batch.column("url").cast(pa.string()))
-                elif cname == "partition_id":
-                    arrays.append(
-                        pa.array([pid] * n, pa.int32())
-                    )
-                elif cname == "bucket":
-                    arrays.append(bucket_arr)
-                else:
-                    arrays.append(pa.array(out[cname], pa_types[cname]))
-            yield pa.RecordBatch.from_arrays(arrays, col_names)
+            arrays = [
+                batch.column("url").cast(f.type) if f.name == "url"
+                else pa.array(out[f.name], f.type)
+                for f in arrow_schema
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     return _extract_batches
 
 
 def extract_pages(
     pages: DataFrame,
-    n_shards: int = DEFAULT_SHARDS,
     with_binary: bool = False,
     with_main_content: bool = False,
     exports: tuple = (),
     counters: dict | None = None,
 ) -> DataFrame:
-    """Run the extraction pipeline; returns the results DataFrame.
+    """Run the extraction pipeline over a batch or streaming
+    ``pages(url, html, ...)`` DataFrame; returns the results DataFrame.
 
-    ``bucket`` is a deterministic url-hash bucket (stable across runs
-    and cluster sizes) used by the checkpointed writer for resume.
-
-    url-hash sharding is LOGICAL: the bucket is a computed column
-    (pmod(xxhash64(url), n_shards)) and the commit boundary
-    (CheckpointedWriter) shards on it — no physical pre-shuffle.  The
-    parquet/Iceberg scan already yields byte-bounded splits
-    (maxPartitionBytes), which balances per-task extraction cost
+    No physical pre-shuffle: url-hash sharding is applied at the commit
+    boundary (``lineage.CheckpointedWriter`` derives ``bucket`` from
+    ``url``).  The parquet/Iceberg scan already yields byte-bounded
+    splits (maxPartitionBytes), which balances per-task extraction cost
     BETTER than row-count-balanced hash shards, spreads the rare giant
     rows by byte budget, and never moves the raw html bytes across the
     cluster (measured: the 1.9 GB shuffle of a 600k-doc corpus cost
     more wall time than the entire 16-core extraction).  A repartition
-    into ``n_shards`` would also give fixed-count partitions, which AQE
+    into hash shards would also give fixed-count partitions, which AQE
     does not coalesce, each paying the per-task cost.
     """
-    src = pages.select(
-        "url", "html",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_shards))
-        .cast("int").alias("bucket"),
-    )
+    src = pages.select("url", "html")
     schema = _result_schema(with_binary, with_main_content, exports)
     batch_fn = _make_extract_batches(
         with_binary, with_main_content, exports, counters

@@ -6,7 +6,10 @@ the same contract with atomic parquet staging + a commit log
 ``MERGE``-based implementation on a real cluster — the interface and
 the resume semantics are identical):
 
-- documents carry a deterministic ``bucket`` = xxhash64(url) % N
+- the writer stamps each document with a deterministic ``bucket``
+  (:func:`url_bucket`, the one url-hash sharding rule) derived from its
+  url with the writer's own ``n_shards``; a ``bucket`` the input
+  carries is replaced, so no caller has to agree on ``n_shards``
 - buckets are processed in ``groups`` commit units; one
   dynamic-partition pass stages every uncommitted group (this is where
   the url-hash sharding becomes physical — at the commit boundary, not
@@ -25,7 +28,24 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+DEFAULT_SHARDS = 128
+
+
+def url_bucket(n_shards: int, key_col: str = "url") -> Column:
+    """The url-hash shard of ``key_col``: pmod(xxhash64(key), n_shards),
+    stable across runs and cluster sizes."""
+    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int")
+
+
+def with_commit_group(df: DataFrame, n_shards: int, groups: int,
+                      key_col: str = "url") -> DataFrame:
+    """Stamp ``bucket`` from ``key_col`` (replacing any carried one) and
+    its commit unit ``commit_group`` = bucket % groups."""
+    return df.withColumn("bucket", url_bucket(n_shards, key_col)).withColumn(
+        "commit_group", F.pmod(F.col("bucket"), F.lit(groups)).cast("int")
+    )
 
 
 def _parquet_row_count(dir_path: str) -> int:
@@ -40,7 +60,8 @@ def _parquet_row_count(dir_path: str) -> int:
 
 
 class CheckpointedWriter:
-    def __init__(self, out_dir: str, n_shards: int, groups: int = 16):
+    def __init__(self, out_dir: str, n_shards: int = DEFAULT_SHARDS,
+                 groups: int = 16):
         self.out_dir = out_dir
         self.n_shards = n_shards
         self.groups = groups
@@ -68,66 +89,39 @@ class CheckpointedWriter:
             os.fsync(f.fileno())
 
     # -- write -----------------------------------------------------------
-    def run(
-        self,
-        extracted: DataFrame,
-        batch_id: str | None = None,
-        mode: str = "single_pass",
-    ) -> dict:
-        """Write ``extracted`` (must have a ``bucket`` column) in
+    def run(self, extracted: DataFrame, batch_id: str | None = None) -> dict:
+        """Write ``extracted`` (must have a ``url`` column) in
         ``groups`` independent commit units; resume-safe.
 
-        ``single_pass`` (default): ONE extraction pass writes all
-        uncommitted groups via a dynamic-partition write to a staging
-        dir, then each group is atomically renamed + logged.  Row
-        counts come from the staged parquet footers — no second action
-        over the pipeline.  At 100 TB this is the only sane shape: the
-        per-group variant re-runs the scan+extract once per commit
-        unit (the Iceberg equivalent of single_pass is one MERGE per
-        group over a cached/staged intermediate).
-
-        ``per_group``: one spark job per commit unit — finer-grained
-        commit points (a kill mid-run loses at most one group's work)
-        at the cost of re-running the upstream pipeline per group.
-        Use when the upstream is cheap or cached.
+        ONE pass writes all uncommitted groups via a dynamic-partition
+        write to a staging dir, then each group is atomically renamed +
+        logged.  Row counts come from the staged parquet footers — no
+        second action over the pipeline, so the scan+extract upstream
+        runs once (the Iceberg equivalent is one MERGE per group over a
+        cached/staged intermediate).
         """
         batch_id = batch_id or uuid.uuid4().hex
         done = self.committed_groups()
         stats = {"groups_total": self.groups, "groups_skipped": len(done)}
-        df = extracted.withColumn(
-            "commit_group",
-            F.pmod(F.col("bucket"), F.lit(self.groups)).cast("int"),
-        )
         todo = [g for g in range(self.groups) if g not in done]
         if not todo:
             stats["groups_written"] = 0
             return stats
 
-        if mode == "per_group":
-            for g in todo:
-                part = df.filter(
-                    F.col("commit_group") == g
-                ).drop("commit_group")
-                staging = os.path.join(
-                    self.out_dir, f"_staging_{g}_{batch_id}"
-                )
-                n_rows = part.count()
-                part.write.mode("overwrite").parquet(staging)
-                self._commit_group(g, staging, n_rows, batch_id)
-        else:
-            staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")
-            keep = df.filter(F.col("commit_group").isin(todo))
-            keep.write.mode("overwrite").partitionBy("commit_group").parquet(
-                staging_root
+        df = with_commit_group(extracted, self.n_shards, self.groups)
+        staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")
+        keep = df.filter(F.col("commit_group").isin(todo))
+        keep.write.mode("overwrite").partitionBy("commit_group").parquet(
+            staging_root
+        )
+        for g in todo:
+            staged = os.path.join(staging_root, f"commit_group={g}")
+            if not os.path.exists(staged):
+                os.makedirs(staged)  # empty group still commits
+            self._commit_group(
+                g, staged, _parquet_row_count(staged), batch_id
             )
-            for g in todo:
-                staged = os.path.join(staging_root, f"commit_group={g}")
-                if not os.path.exists(staged):
-                    os.makedirs(staged)  # empty group still commits
-                self._commit_group(
-                    g, staged, _parquet_row_count(staged), batch_id
-                )
-            shutil.rmtree(staging_root, ignore_errors=True)
+        shutil.rmtree(staging_root, ignore_errors=True)
         stats["groups_written"] = len(todo)
         return stats
 
@@ -148,25 +142,22 @@ class CheckpointedWriter:
         )
 
     def read(self, spark) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.out_dir, "group=*"))
+        """The committed base: the group directories the commit log
+        names (a directory a killed run moved in but never logged is
+        not part of the table)."""
+        return spark.read.parquet(*(
+            os.path.join(self.out_dir, f"group={g}")
+            for g in sorted(self.committed_groups())
+        ))
 
     def filter_uncommitted(self, pages: DataFrame, url_col: str = "url") -> DataFrame:
-        """Resume helper: drop input rows whose bucket already committed
-        (left_anti join on the committed bucket set, broadcast)."""
+        """Resume helper: drop input rows whose bucket already committed."""
         committed = sorted(self.committed_buckets())
         if not committed:
             return pages
-        spark = pages.sparkSession
-        committed_df = spark.createDataFrame(
-            [(b,) for b in committed], "bucket int"
+        return pages.filter(
+            ~url_bucket(self.n_shards, url_col).isin(committed)
         )
-        with_bucket = pages.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col(url_col)), F.lit(self.n_shards)).cast("int"),
-        )
-        return with_bucket.join(
-            F.broadcast(committed_df), on="bucket", how="left_anti"
-        ).drop("bucket")
 
     # -- merge-on-read deltas ---------------------------------------------
     # Iceberg's MoR contract, emulated: recrawls/corrections land as
@@ -288,16 +279,9 @@ class CheckpointedWriter:
         deltas = [e for e in self._log_entries() if "delta_id" in e]
         if not deltas:
             return {"compacted": False, "deltas_removed": 0}
-        merged = self.read_merged(spark, key_col=key_col)
-        if "bucket" not in merged.columns:
-            merged = merged.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col(key_col)),
-                       F.lit(self.n_shards)).cast("int"),
-            )
-        df = merged.withColumn(
-            "commit_group",
-            F.pmod(F.col("bucket"), F.lit(self.groups)).cast("int"),
+        df = with_commit_group(
+            self.read_merged(spark, key_col=key_col), self.n_shards,
+            self.groups, key_col,
         )
         batch_id = "compact_" + uuid.uuid4().hex
         staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")

@@ -28,6 +28,7 @@ single-JVM proxy):
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import tempfile
@@ -58,31 +59,59 @@ def drop_zip_importers() -> None:
 
 
 def package_zip(path: str | None = None) -> str:
-    """Zip the docwire_spark package for --py-files / addPyFile."""
+    """Zip the docwire_spark package for --py-files / addPyFile.
+
+    The default path is content-addressed: a digest of the package's
+    sources names the zip, in a directory private to the user under
+    the temp dir.  An edited package gets a new file, an unchanged one
+    is not zipped again, and two checkouts never overwrite each other's
+    zip."""
     import docwire_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(docwire_spark.__file__))
-    if path is None:
-        path = os.path.join(tempfile.gettempdir(), "docwire_spark_pyfiles.zip")
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if not fn.endswith(".py"):
-                    continue
+    sources = []  # (name in the zip, file path)
+    for root, _dirs, files in os.walk(pkg_dir):
+        if "__pycache__" in root:
+            continue
+        for fn in files:
+            if fn.endswith(".py"):
                 full = os.path.join(root, fn)
                 rel = os.path.join(
                     "docwire_spark", os.path.relpath(full, pkg_dir)
                 )
-                zf.write(full, rel)
+                sources.append((rel, full))
+    sources.sort()
+    if path is None:
+        digest = hashlib.sha256()
+        for rel, full in sources:
+            with open(full, "rb") as f:
+                data = f.read()
+            digest.update(f"{rel}\0{len(data)}\0".encode() + data)
+        zip_dir = os.path.join(tempfile.gettempdir(),
+                               f"docwire_spark_pyfiles_{os.getuid()}")
+        os.makedirs(zip_dir, mode=0o700, exist_ok=True)
+        path = os.path.join(
+            zip_dir, f"docwire_spark_{digest.hexdigest()[:16]}.zip"
+        )
+        if os.path.exists(path):
+            return path
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+        for rel, full in sources:
+            zf.write(full, rel)
+    os.replace(tmp, path)  # readers never see a partial zip
     return path
 
 
 def ship_package(spark: SparkSession) -> None:
     """Make docwire_spark importable on executors regardless of the
-    driver's cwd (equivalent of spark-submit --py-files)."""
-    spark.sparkContext.addPyFile(package_zip())
+    driver's cwd (equivalent of spark-submit --py-files).  Ships once
+    per SparkContext: Spark refuses to add the same path twice."""
+    sc = spark.sparkContext
+    path = package_zip()
+    name = os.path.basename(path)
+    if not any(os.path.basename(uri) == name for uri in sc.listFiles):
+        sc.addPyFile(path)
 
 
 def default_cpus() -> int:

@@ -1,3 +1,3 @@
 from docwire_spark.streaming.extract_stream import (  # noqa: F401
-    extract_stream, start_extract_stream,
+    start_extract_stream,
 )

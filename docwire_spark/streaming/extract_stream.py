@@ -1,12 +1,13 @@
 """Structured Streaming extraction: continuous ingest of page batches.
 
 The batch pipeline's exact transformation (``extract_pages`` —
-byte-bounded splits, mapInArrow kernel, computed url-hash bucket)
-applied to a streaming DataFrame: new parquet drops under the source
-path are discovered per micro-batch, extracted, and appended to the
-sink partitioned by commit bucket-group, with the stream checkpoint
-providing exactly-once file-level resume (the streaming analog of the
-batch CheckpointedWriter's commit log).
+byte-bounded splits, mapInArrow kernel) applied to a streaming
+DataFrame: new parquet drops under the source path are discovered per
+micro-batch, extracted, stamped with the batch writer's url-hash
+``bucket`` and ``commit_group`` (``lineage.with_commit_group``) and
+appended to the sink partitioned by commit group, with the stream
+checkpoint providing exactly-once file-level resume (the streaming
+analog of the batch CheckpointedWriter's commit log).
 
 At 100 TB-scale ingestion this is the "keep up with the crawl" mode:
 one long-lived job instead of scheduled backfills, same kernel and
@@ -22,35 +23,14 @@ Usage::
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession
 
-from docwire_spark.spark.extract import (
-    DEFAULT_SHARDS, _make_extract_batches, _result_schema,
-)
+from docwire_spark.spark.extract import extract_pages
+from docwire_spark.spark.lineage import DEFAULT_SHARDS, with_commit_group
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-
-def extract_stream(
-    pages: DataFrame,
-    n_shards: int = DEFAULT_SHARDS,
-    with_main_content: bool = False,
-    exports: tuple = (),
-) -> DataFrame:
-    """Apply the extraction transformation to a streaming DataFrame.
-
-    Mirrors ``extract_pages`` (no pre-shuffle; bucket is computed on
-    the narrow input and passed through the Arrow batches)."""
-    src = pages.select(
-        "url", "html",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_shards))
-        .cast("int").alias("bucket"),
-    )
-    schema = _result_schema(False, with_main_content, exports)
-    batch_fn = _make_extract_batches(False, with_main_content, exports)
-    return src.mapInArrow(batch_fn, schema)
 
 
 def start_extract_stream(
@@ -75,9 +55,7 @@ def start_extract_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.load(source_path)
-    extracted = extract_stream(pages, n_shards=n_shards).withColumn(
-        "commit_group", F.pmod(F.col("bucket"), F.lit(groups)).cast("int")
-    )
+    extracted = with_commit_group(extract_pages(pages), n_shards, groups)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", sink_path)

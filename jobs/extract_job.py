@@ -89,7 +89,6 @@ def main():
     # (limit() would collapse to one partition and warm one worker).
     extract_pages(
         pages.select("url", "html").sample(0.05, seed=1),
-        n_shards=args.n_shards,
     ).write.format("noop").mode("overwrite").save()
 
     sc = spark.sparkContext
@@ -106,9 +105,7 @@ def main():
     }
 
     t0 = time.time()
-    extracted = extract_pages(
-        pages.select("url", "html"), n_shards=args.n_shards, counters=counters
-    )
+    extracted = extract_pages(pages.select("url", "html"), counters=counters)
     if args.out:
         writer = CheckpointedWriter(args.out, n_shards=args.n_shards, groups=8)
         writer.run(extracted)

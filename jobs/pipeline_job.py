@@ -74,7 +74,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
         from docwire_spark.ops.common import TOKENS_EXPR
         from docwire_spark.ops.textstats import lang_pred_col
 
-        ex = extract_pages(pages.select("url", "html"), n_shards=n_shards)
+        ex = extract_pages(pages.select("url", "html"))
         docs = ex.filter(F.col("error").isNull()).select(
             # url-hash doc ids: deterministic, cluster-stable; keep-min
             # dedup policies only need a total order, not density
@@ -163,10 +163,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
             F.col("keep_flag") == 1
         ).select("doc_id")
         docs = spark.read.parquet(os.path.join(st3, "documents.parquet"))
-        kept = docs.join(keep, "doc_id", "left_semi").withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int"),
-        )
+        kept = docs.join(keep, "doc_id", "left_semi")
         w = CheckpointedWriter(final, n_shards=n_shards, groups=groups)
         stats = w.run(kept)
         summary["final_commit"] = stats
@@ -200,10 +197,9 @@ def main():
     args = ap.parse_args()
 
     from docwire_spark.spark.corpus import build_pages_df
-    from docwire_spark.spark.session import build_session, ship_package
+    from docwire_spark.spark.session import build_session
 
     spark = build_session(master=args.master, app_name="docwire-pipeline")
-    ship_package(spark)
     if args.input:
         pages = spark.read.parquet(args.input)
     else:

@@ -15,7 +15,7 @@ HOSTILE = [
 
 def test_hostile_rows_never_dropped(spark):
     df = spark.createDataFrame(HOSTILE, "url string, html binary")
-    out = {r.url: r for r in extract_pages(df, n_shards=4).collect()}
+    out = {r.url: r for r in extract_pages(df).collect()}
     assert sorted(out) == sorted(u for u, _ in HOSTILE)
     assert out["u_truncated"].extracted_text == "unclosed\n\n"
     assert out["u_truncated"].error is None
@@ -47,7 +47,7 @@ def test_multi_megabyte_rows_extract(spark):
         ("u_small", b"<html><body><p>tiny</p></body></html>"),
     ]
     df = spark.createDataFrame(rows, "url string, html binary")
-    out = {r.url: r for r in extract_pages(df, n_shards=2).collect()}
+    out = {r.url: r for r in extract_pages(df).collect()}
     assert out["u_big"].error is None
     assert out["u_big"].extracted_text.count("hello big page") == 150_000
     assert out["u_small"].extracted_text == "tiny\n\n"

@@ -18,7 +18,7 @@ def base_writer(spark, tmp_path):
 
     out = str(tmp_path / "mor")
     pages = build_pages_df(spark, 120, n_hosts=8, seed=29).cache()
-    ex = extract_pages(pages, n_shards=8)
+    ex = extract_pages(pages)
     w = CheckpointedWriter(out, n_shards=8, groups=4)
     w.run(ex)
     return w
@@ -166,6 +166,29 @@ def test_compaction_preserves_view_and_retires_deltas(spark, base_writer):
     assert w.compact(spark) == {"compacted": False, "deltas_removed": 0}
     # group commit log is fully rebuilt (resume contract intact)
     assert w.committed_groups() == set(range(4))
+
+
+def test_compaction_keeps_delta_insert_without_bucket(spark, base_writer):
+    """A delta may insert a url the base never had and carry no
+    ``bucket``: compaction derives it from the url instead of dropping
+    the row."""
+    w = base_writer
+    n_base = w.read(spark).count()
+    url = "https://new.example/inserted"
+    delta = spark.createDataFrame(
+        [(url, "INSERTED")], "url string, extracted_text string")
+    w.write_delta(delta, "insert-1")
+    assert w.read_merged(spark).count() == n_base + 1
+
+    assert w.compact(spark)["n_rows"] == n_base + 1
+    rows = w.read(spark).filter(F.col("url") == url).select(
+        "extracted_text", "bucket",
+        F.pmod(F.xxhash64("url"), F.lit(8)).alias("want"),
+    ).collect()
+    assert len(rows) == 1
+    assert (rows[0].extracted_text, rows[0].bucket) == (
+        "INSERTED", rows[0].want)
+    assert w.read(spark).count() == n_base + 1
 
 
 def test_compaction_midway_state_is_consistent(spark, base_writer):

@@ -51,7 +51,7 @@ def test_extraction_scan_prunes_to_needed_columns(spark):
         .alias("url"),
         F.encode(F.col("text"), "UTF-8").alias("html"),
     )
-    plan = _plan(extract_pages(pages, n_shards=4))
+    plan = _plan(extract_pages(pages))
     # the scan must not materialize lang/source/n_chars
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
 
@@ -134,7 +134,7 @@ def test_extraction_has_no_shuffle(spark):
         .alias("url"),
         F.encode(F.col("text"), "UTF-8").alias("html"),
     )
-    plan = _plan(extract_pages(pages, n_shards=4))
+    plan = _plan(extract_pages(pages))
     assert "Exchange" not in plan
 
 

@@ -2,6 +2,7 @@
 extraction -> byte-identity vs the analytically-generated expected
 text; plus lineage/resume and skew-salting behavior."""
 
+import json
 import os
 
 import pytest
@@ -32,7 +33,7 @@ def test_corpus_deterministic(spark):
 
 
 def test_extract_byte_identity(spark, pages):
-    extracted = extract_pages(pages, n_shards=8, with_binary=True)
+    extracted = extract_pages(pages, with_binary=True)
     joined = (
         extracted.join(pages.select("url", "expected_text"), "url")
         .select("url", "error", "extracted_bytes", "expected_text", "mime")
@@ -51,26 +52,28 @@ def test_extract_byte_identity(spark, pages):
 
 
 def test_metrics(spark, pages):
-    extracted = extract_pages(pages, n_shards=8)
+    extracted = extract_pages(pages)
     m = metrics_by_partition(extracted).collect()
     assert sum(r.n_docs for r in m) == N_DOCS
     assert sum(r.n_failed for r in m) == 0
     assert all(r.bytes_in > 0 for r in m)
 
 
-@pytest.mark.parametrize("mode", ["single_pass", "per_group"])
-def test_checkpointed_writer_resume(spark, pages, tmp_path, mode):
-    out = str(tmp_path / f"out_{mode}")
-    extracted = extract_pages(pages, n_shards=8)
+def test_checkpointed_writer_resume(spark, pages, tmp_path):
+    out = str(tmp_path / "out")
+    extracted = extract_pages(pages)
     w = CheckpointedWriter(out, n_shards=8, groups=4)
-    stats = w.run(extracted, batch_id="batch1", mode=mode)
+    stats = w.run(extracted, batch_id="batch1")
     assert stats["groups_written"] == 4
 
     # simulate a killed job: drop one committed group from the log
     lines = open(w.log_path).read().strip().splitlines()
     with open(w.log_path, "w") as f:
         f.write("\n".join(lines[:-1]) + "\n")
-    stats2 = w.run(extracted, batch_id="batch2", mode=mode)
+    # the unlogged group's directory is not part of the table
+    lost = json.loads(lines[-1])["n_rows"]
+    assert w.read(spark).count() == N_DOCS - lost
+    stats2 = w.run(extracted, batch_id="batch2")
     assert stats2["groups_skipped"] == 3
     assert stats2["groups_written"] == 1
 
@@ -78,17 +81,33 @@ def test_checkpointed_writer_resume(spark, pages, tmp_path, mode):
     assert total == N_DOCS
     # row counts in the commit log match what was written
     logged = sum(
-        __import__("json").loads(ln)["n_rows"]
+        json.loads(ln)["n_rows"]
         for ln in open(w.log_path).read().strip().splitlines()
     )
     assert logged == N_DOCS
     # idempotent: nothing left to write
-    stats3 = w.run(extracted, batch_id="batch3", mode=mode)
+    stats3 = w.run(extracted, batch_id="batch3")
     assert stats3["groups_written"] == 0
 
     # resume filter drops all committed input rows
     remaining = w.filter_uncommitted(pages).count()
     assert remaining == 0
+
+
+@pytest.mark.parametrize("carried", [None, 999])
+def test_writer_stamps_its_own_bucket(spark, tmp_path, carried):
+    """bucket is pmod(xxhash64(url), the writer's n_shards), whether the
+    input carries no bucket or a stale one."""
+    df = spark.range(60).selectExpr("concat('https://h.example/', id) AS url")
+    if carried is not None:
+        df = df.withColumn("bucket", F.lit(carried))
+    w = CheckpointedWriter(str(tmp_path / "out"), n_shards=8, groups=4)
+    assert w.run(df)["groups_written"] == 4
+    rows = w.read(spark).select(
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(8)).alias("want")
+    ).collect()
+    assert len(rows) == 60
+    assert all(r.bucket == r.want for r in rows)
 
 
 def test_salted_host_key(spark, pages):
@@ -113,7 +132,7 @@ def test_oversized_rows_byte_identity(spark, pages):
         "url", "expected_text"
     )
     assert big.count() > 0, "corpus should contain oversized rows"
-    extracted = extract_pages(pages, n_shards=8, with_binary=True)
+    extracted = extract_pages(pages, with_binary=True)
     joined = extracted.join(big, "url").select(
         "error", "extracted_bytes", "expected_text"
     ).collect()

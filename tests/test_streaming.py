@@ -43,6 +43,11 @@ def test_stream_matches_batch_and_resumes(spark, tmp_path):
     # commit-group partitioning matches the batch writer layout
     groups = {r.commit_group for r in out.select("commit_group").distinct().collect()}
     assert groups <= set(range(4))
+    # ... with the batch writer's bucket rule
+    want = F.pmod(F.xxhash64("url"), F.lit(8))
+    assert out.filter(
+        (F.col("bucket") != want) | (F.col("commit_group") != want % 4)
+    ).count() == 0
 
     # second drop: checkpoint resumes, only new files processed
     _write_batch(spark, tmp, "drop2", 60, seed=2)

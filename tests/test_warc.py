@@ -124,13 +124,24 @@ def test_gzip_member_deterministic():
 
 # ------------------------------------------------------------- spark level
 
-@pytest.fixture(scope="module")
-def spark():
-    from docwire_spark.spark.session import build_session
+#: WARC-Date serialization and the naive datetimes asserted below are
+#: UTC wall times
+_CONF = {"spark.sql.session.timeZone": "UTC"}
 
-    s = build_session(master="local[4]", app_name="test_warc",
-                      shuffle_partitions=4)
-    yield s
+
+@pytest.fixture(scope="module")
+def spark(spark):
+    """The shared session with ``_CONF`` set, restored on teardown so
+    later test modules run under their own confs."""
+    saved = {k: spark.conf.get(k, None) for k in _CONF}
+    for k, v in _CONF.items():
+        spark.conf.set(k, v)
+    yield spark
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
 
 
 def _pages_df(spark, n=40):
