@@ -82,10 +82,15 @@ def load(
     real scale (thousands of splits) it is a no-op — never an
     unconditional shuffle."""
     df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-    if parallelize:
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+    return right_size(df) if parallelize else df
+
+
+def right_size(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to the cluster's parallelism when its scan
+    has fewer partitions (``load``'s ``parallelize`` rule)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        df = df.repartition(target)
     return df
 
 

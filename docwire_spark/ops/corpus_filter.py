@@ -71,9 +71,15 @@ _BIGRAMS = let_expr(
 )
 
 
-def corpus_quality_filter(
-    spark: SparkSession,
-    sf_dir: str,
+#: the int flag columns ``quality_flags`` appends before ``keep``
+FLAG_COLS = (
+    "pass_n_tokens", "pass_avg_token_len", "pass_stopwords",
+    "pass_short_tokens", "pass_top_bigram",
+)
+
+
+def quality_flags(
+    docs: DataFrame,
     *,
     min_tokens: int = MIN_TOKENS,
     max_tokens: int = MAX_TOKENS,
@@ -83,15 +89,14 @@ def corpus_quality_filter(
     max_short_token_frac: float = MAX_SHORT_TOKEN_FRAC,
     max_top_bigram_frac: float = MAX_TOP_BIGRAM_FRAC,
 ) -> DataFrame:
-    """One map-side pass; every output column is an int flag.
+    """``docs`` (with a ``text`` column) plus the ``FLAG_COLS`` int
+    flags and their product ``keep``, in one map-side pass.
 
     Thresholds are keyword-overridable per corpus (a filter tuned for
     one crawl is degenerate on another); the module defaults are the
     oracle-pinned spec (QUALITY_FILTER_SQL) — change those only with
     the DuckDB side in lockstep."""
-    docs = with_tokens(
-        load(spark, sf_dir, "documents", parallelize=True)
-    ).withColumn("bg", F.expr(_BIGRAMS))
+    t = with_tokens(docs).withColumn("bg", F.expr(_BIGRAMS))
     n_tok = F.size("tokens").cast("bigint")
     sum_len = F.expr(
         "aggregate(transform(tokens, t -> length(t)), 0L, (acc, x) -> acc + x)"
@@ -129,13 +134,19 @@ def corpus_quality_filter(
         ),
         "pass_top_bigram",
     )
-    out = docs.select("doc_id", r_len, r_avg, r_stop, r_short, r_bg)
-    keep = (
-        F.col("pass_n_tokens") * F.col("pass_avg_token_len")
-        * F.col("pass_stopwords") * F.col("pass_short_tokens")
-        * F.col("pass_top_bigram")
-    ).cast("int").alias("keep")
-    return out.select("*", keep)
+    out = t.select(*docs.columns, r_len, r_avg, r_stop, r_short, r_bg)
+    keep = F.col(FLAG_COLS[0])
+    for c in FLAG_COLS[1:]:
+        keep = keep * F.col(c)
+    return out.select("*", keep.cast("int").alias("keep"))
+
+
+def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document rule flags and ``keep`` at the oracle-pinned
+    thresholds (see ``quality_flags``); every output column is an int
+    flag."""
+    docs = load(spark, sf_dir, "documents", parallelize=True)
+    return quality_flags(docs).select("doc_id", *FLAG_COLS, "keep")
 
 
 QUALITY_FILTER_SQL = f"""

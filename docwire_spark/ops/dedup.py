@@ -57,7 +57,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
@@ -71,6 +71,7 @@ from docwire_spark.ops.common import (
     let_expr,
     load,
     persist_tracked,
+    right_size,
     with_tokens,
 )
 from docwire_spark.spark.session import drop_zip_importers
@@ -95,17 +96,35 @@ _B = [int(hashlib.md5(f"b{i}".encode()).hexdigest()[:16], 16)
 # ---------------------------------------------------------------------------
 
 
+#: the exact-duplicate key: md5 of the space-joined token array
+_EXACT_FP = "md5(concat_ws(' ', tokens))"
+
+
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = with_tokens(load(spark, sf_dir, "documents", parallelize=True))
     return (
-        docs.select(
-            "doc_id", F.expr("md5(concat_ws(' ', tokens))").alias("fp")
-        )
+        docs.select("doc_id", F.expr(_EXACT_FP).alias("fp"))
         .groupBy("fp")
         .agg(
             F.min("doc_id").alias("keep_doc_id"),
             F.count("*").alias("n_copies"),
         )
+    )
+
+
+def exact_firsts(docs: DataFrame) -> DataFrame:
+    """The rows of ``docs`` that ``dedup_exact`` keeps: the lowest
+    ``doc_id`` of each token fingerprint, found by one window over the
+    fingerprint instead of an aggregate joined back."""
+    from pyspark.sql import Window
+
+    fp = with_tokens(docs).select(
+        *docs.columns, F.expr(_EXACT_FP).alias("_fp")
+    )
+    return (
+        fp.withColumn("_first", F.min("doc_id").over(Window.partitionBy("_fp")))
+        .filter(F.col("doc_id") == F.col("_first"))
+        .select(*docs.columns)
     )
 
 
@@ -192,8 +211,9 @@ _FIRST_BAND = "CASE " + " ".join(
 ) + " END"
 
 
-def _minhash_rep_pairs(spark: SparkSession, sf_dir: str):
-    """Shared collapse-then-verify front end of the MinHash-LSH plan:
+def _minhash_rep_pairs(docs: DataFrame):
+    """Shared collapse-then-verify front end of the MinHash-LSH plan
+    over ``docs`` (``doc_id``, ``text``; right-sized for the kernel):
     returns ``(groups, n_groups, verified)`` where ``groups`` is the
     persisted one-row-per-distinct-shingle-set table and ``verified``
     the rep-level near-dup pairs (ga < gb, jaccard >= threshold).
@@ -208,8 +228,9 @@ def _minhash_rep_pairs(spark: SparkSession, sf_dir: str):
     (5) verify once per rep pair (shingles joined back; rep table tiny
     after collapse so AQE picks a broadcast join at bench scale — at
     10^12 docs it degrades gracefully to a shuffled join on gid)."""
-    docs = load(spark, sf_dir, "documents", parallelize=True).select("doc_id", "text")
-    sigs = docs.mapInPandas(_minhash_batches, _MH_SCHEMA)
+    sigs = right_size(docs.select("doc_id", "text")).mapInPandas(
+        _minhash_batches, _MH_SCHEMA
+    )
     groups = (
         sigs.filter(F.size("sh") > 0)
         .withColumn("fp", F.expr("md5(concat_ws(' ', sh))"))
@@ -299,7 +320,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded plan (candidacy is a function of the signature, which is a
     function of the shingle set), so the oracle does not model the
     collapse."""
-    groups, n_groups, verified = _minhash_rep_pairs(spark, sf_dir)
+    groups, n_groups, verified = _minhash_rep_pairs(
+        load(spark, sf_dir, "documents")
+    )
     mem = groups.select("gid", "members")
     cross = (
         verified.join(
@@ -1169,42 +1192,51 @@ def _cc_small_star(edges: DataFrame) -> DataFrame:
     return relinked.unionByName(self_link).distinct()
 
 
-def _cc_converge(edges: DataFrame, spark: SparkSession,
-                 stats: dict | None = None) -> DataFrame:
+def _cc_converge(edges: DataFrame, stats: dict | None = None) -> DataFrame:
     """Alternate large-star/small-star until the edge set is stable
     (O(log n) rounds).  Each round materializes via localCheckpoint —
     truncating the logical plan is what keeps an iterative DataFrame
     algorithm analyzable (and, on a cluster, keeps lineage recovery
     bounded).  Convergence is checked with an order-independent
-    (count, bit_xor(xxhash64)) checksum: one tiny aggregate per round,
-    no exceptAll shuffle, and bit_xor cannot overflow under ANSI."""
+    (count, bit_xor(xxhash64)) checksum observed on the checkpoint job
+    itself: one action per round, no exceptAll shuffle, and bit_xor
+    cannot overflow under ANSI."""
+    def checkpoint(df):
+        obs = Observation()
+        df = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
+        ).localCheckpoint()
+        return df, (obs.get["n"], obs.get["x"])
+
     # materialize the input once: round 0 symmetrizes via a 2-branch
     # union, which would otherwise evaluate the (expensive, unpersisted)
-    # upstream pair pipeline twice
-    edges = edges.localCheckpoint()
-    prev = None
-    max_edges = 0
-    for r in range(CC_MAX_ROUNDS):
-        edges = _cc_small_star(_cc_large_star(edges)).localCheckpoint()
-        row = edges.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
-        ).first()
-        max_edges = max(max_edges, row["n"])
-        sig = (row["n"], row["x"])
+    # upstream pair pipeline twice.  Its checksum seeds the fixpoint
+    # test, so an input that is already a star labeling (the empty
+    # edge set among them) is done after one round, or none.
+    edges, prev = checkpoint(edges)
+    rounds = max_edges = 0
+    while prev[0]:
+        if rounds == CC_MAX_ROUNDS:
+            raise RuntimeError(f"connected components: no fixpoint in "
+                               f"{CC_MAX_ROUNDS} rounds")
+        edges, sig = checkpoint(_cc_small_star(_cc_large_star(edges)))
+        rounds += 1
+        max_edges = max(max_edges, sig[0])
         if sig == prev:
-            if stats is not None:
-                stats["rounds"] = r + 1
-                stats["max_edges"] = max_edges
-            return edges
+            break
         prev = sig
-    raise RuntimeError(f"connected components: no fixpoint in "
-                       f"{CC_MAX_ROUNDS} rounds")
+    if stats is not None:
+        stats["rounds"] = rounds
+        stats["max_edges"] = max_edges
+    return edges
 
 
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate CLUSTER dedup: connected components over the
-    verified MinHash-LSH pair graph, keep-min per component — the
+def near_dup_components(docs: DataFrame) -> DataFrame:
+    """``docs`` (``doc_id``, ``text``, ...) plus ``component_id`` and
+    ``keep_flag``: near-duplicate CLUSTER dedup, connected components
+    over the verified MinHash-LSH pair graph, keep-min per component — the
     step a web-scale pipeline runs after LSH so that a chain
     A~B, B~C drops both B and C even when A~C itself is below
     threshold.  Components via the alternating star algorithm (no
@@ -1221,21 +1253,29 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora cost nothing here (measured 42.7s -> ~12s at sf0.1).
     Reference parity: the reference engine has no dedup operators —
     training-data-pipeline extension per the build brief."""
-    groups, _, verified = _minhash_rep_pairs(spark, sf_dir)
+    groups, _, verified = _minhash_rep_pairs(docs)
     edges = verified.select(F.col("ga").alias("u"), F.col("gb").alias("v"))
-    stars = _cc_converge(edges, spark)
+    stars = _cc_converge(edges)
     labels = stars.select(F.col("u").alias("gid"), F.col("v").alias("cid"))
     members = (
         groups.select("gid", F.explode("members").alias("doc_id"))
         .join(labels, "gid", "left")
         .select("doc_id", F.coalesce("cid", "gid").alias("cid"))
     )
-    docs = load(spark, sf_dir, "documents").select("doc_id")
     return docs.join(members, "doc_id", "left").select(
-        "doc_id",
+        *docs.columns,
         F.coalesce("cid", "doc_id").alias("component_id"),
         (F.coalesce("cid", "doc_id") == F.col("doc_id"))
         .cast("int").alias("keep_flag"),
+    )
+
+
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document near-duplicate cluster and keep flag (see
+    ``near_dup_components``)."""
+    docs = load(spark, sf_dir, "documents")
+    return near_dup_components(docs.select("doc_id", "text")).select(
+        "doc_id", "component_id", "keep_flag"
     )
 
 

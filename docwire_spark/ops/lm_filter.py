@@ -95,6 +95,8 @@ LM_ADD_K = 0.5
 PPL_SAMPLE_RATE_HEX = "1999999a"
 #: scaled-BIGINT quantum for log-probabilities
 LP_SCALE = 1_000_000_000
+#: every value ``lm_perplexity`` puts in its ``bucket`` column
+PPL_BUCKETS = ("head", "middle", "tail", "unsampled", "none")
 
 
 def _lp_scaled_expr(c_bg: str, c_w1: str, v: str) -> str:
@@ -107,56 +109,59 @@ def _lp_scaled_expr(c_bg: str, c_w1: str, v: str) -> str:
     )
 
 
-def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document bigram-LM pseudo-perplexity + CCNet bucket.
+def lm_scores(docs: DataFrame) -> DataFrame:
+    """``docs`` (``doc_id``, ``lang``, ``text``, ...) plus the columns
+    ``n_bigrams``, ``lp_sum``, ``ppl`` and ``bucket``: bigram-LM
+    pseudo-perplexity and CCNet bucket per document.
 
-    Plan: one corpus scan explodes slim ``(doc_id, lang, w1, bigram)``
-    rows; two hint-free counting aggregates build the model (bigram
-    counts keyed by the bigram string, context counts keyed by w1,
-    plus a 1-row successor-vocabulary scalar); scoring re-joins the
-    exploded rows to the model on those keys and reduces per doc_id to
-    an EXACT scaled-BIGINT log-prob sum.  Tercile cutoffs come from an
-    NTILE(3) window over the ~10% md5 sample only; the per-language
-    cutoff table broadcast-joins back so bucketing is map-side."""
-    docs = (
-        load(spark, sf_dir, "documents", parallelize=True)
-        .select(
-            "doc_id",
-            F.expr("coalesce(lang, '')").alias("lang"),
-            F.expr(TOKENS_EXPR).alias("tokens"),
-        )
+    Plan: one corpus scan explodes slim ``(doc_id, lang, bigram)``
+    rows; one hint-free counting aggregate gives the bigram counts, and
+    the context counts (keyed by w1) and the 1-row successor-vocabulary
+    scalar derive from that table; scoring re-joins the exploded rows
+    to the model on the bigram and reduces per doc_id to an EXACT
+    scaled-BIGINT log-prob sum.  The exploded rows, the bigram counts
+    and the per-doc sums are each materialized once, before the plans
+    that read them run.  Tercile cutoffs come from an NTILE(3) window
+    over the ~10% md5 sample only; the per-language cutoff table
+    broadcast-joins back so bucketing is map-side.  Languages are
+    bucketed by ``coalesce(lang, '')``."""
+    lang = F.expr("coalesce(lang, '')")
+    tokens = docs.select(
+        "doc_id", lang.alias("lang"), F.expr(TOKENS_EXPR).alias("tokens")
     )
-    # persisted: model building (bgc/ugc/vocab) and scoring all read
-    # the exploded rows — without the persist the corpus is scanned
-    # and re-exploded four times (the bm25 single-scan pattern; at
-    # real scale this materialization is a checkpoint table)
-    bg_rows = persist_tracked(
-        docs.select(
-            "doc_id", "lang", F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg")
-        ).withColumn("w1", F.expr("split(bg, ' ')[0]"))
-    )
+    # each table several later branches read is computed now, once
+    # (an eager localCheckpoint), before the plans that read it run:
+    # adaptive execution submits independent branches concurrently,
+    # and each would otherwise recompute it (or fill the same lazy
+    # cache).  The bigram counts and the scoring join both read the
+    # exploded rows (the bm25 single-scan pattern; at real scale this
+    # materialization is a checkpoint table)
+    bg_rows = tokens.select(
+        "doc_id", "lang", F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg")
+    ).localCheckpoint()
 
     # model built entirely at DISTINCT-BIGRAM granularity: context
-    # counts and the successor vocabulary derive from the bigram-count
-    # table (sum/countDistinct over distinct rows == counts over
-    # occurrences), and the per-bigram log-prob is precomputed INTO
-    # the model — so the corpus-wide occurrence rows take exactly ONE
-    # scoring join instead of two (measured 5.7s -> see BENCH notes)
-    bgc = bg_rows.groupBy("bg").agg(F.count("*").alias("c_bg"))
-    ugc = bgc.withColumn("w1", F.expr("split(bg, ' ')[0]")).groupBy(
-        "w1"
-    ).agg(F.sum("c_bg").alias("c_w1"))
-    vocab = bgc.select(
-        F.countDistinct(F.expr("split(bg, ' ')[1]")).alias("v")
-    )
+    # counts and the successor vocabulary derive from the one
+    # bigram-count table (sum/countDistinct over distinct rows ==
+    # counts over occurrences), and the per-bigram log-prob is
+    # precomputed INTO the model — so the corpus-wide occurrence rows
+    # take exactly ONE scoring join
+    bgc = bg_rows.groupBy("bg").agg(F.count("*").alias("c_bg")).select(
+        "bg", "c_bg",
+        F.expr("split(bg, ' ')[0]").alias("w1"),
+        F.expr("split(bg, ' ')[1]").alias("w2"),
+    ).localCheckpoint()
+    ugc = bgc.groupBy("w1").agg(F.sum("c_bg").alias("c_w1"))
+    vocab = bgc.select(F.countDistinct("w2").alias("v"))
     model = (
-        bgc.withColumn("w1", F.expr("split(bg, ' ')[0]"))
-        .join(ugc, "w1")
+        bgc.join(ugc, "w1")
         .crossJoin(F.broadcast(vocab))
         .select(
             "bg", F.expr(_lp_scaled_expr("c_bg", "c_w1", "v")).alias("lp")
         )
     )
+    # the cutoff sample and the all-docs join both read per_doc; the
+    # exact integer sums make it independent of plan shape
     per_doc = (
         bg_rows.join(model, "bg")
         .groupBy("doc_id", "lang")
@@ -164,6 +169,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_bigrams"),
             F.sum("lp").alias("lp_sum"),
         )
+        .localCheckpoint()
     )
 
     sample = per_doc.filter(
@@ -182,10 +188,12 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    all_docs = docs.select("doc_id", "lang").join(
+    all_docs = docs.withColumn("_lang", lang).join(
         per_doc.select("doc_id", "n_bigrams", "lp_sum"), "doc_id", "left"
     )
-    out = all_docs.join(F.broadcast(cuts), "lang", "left")
+    out = all_docs.join(
+        F.broadcast(cuts.withColumnRenamed("lang", "_lang")), "_lang", "left"
+    )
     n_bg = F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("bigint")
     lp_sum = F.coalesce(F.col("lp_sum"), F.lit(0)).cast("bigint")
     # identical arithmetic tree to the oracle: exact ints -> one
@@ -211,12 +219,22 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("tail"))
     )
     return out.select(
-        "doc_id",
-        "lang",
+        *docs.columns,
         n_bg.alias("n_bigrams"),
         lp_sum.alias("lp_sum"),
         ppl.alias("ppl"),
         bucket.alias("bucket"),
+    )
+
+
+def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document bigram-LM pseudo-perplexity + CCNet bucket (see
+    ``lm_scores``)."""
+    docs = load(spark, sf_dir, "documents", parallelize=True)
+    return lm_scores(docs).select(
+        "doc_id",
+        F.expr("coalesce(lang, '')").alias("lang"),
+        "n_bigrams", "lp_sum", "ppl", "bucket",
     )
 
 

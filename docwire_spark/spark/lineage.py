@@ -252,10 +252,14 @@ class CheckpointedWriter:
         w = Window.partitionBy(key_col).orderBy(
             F.col("_seq").desc(), F.col("_tie").asc()
         )
+        # ``bucket`` is derived from the key as the writer derives it,
+        # so a delta row that carried none (or a stale one) reads back
+        # as compact() will store it
         return (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter((F.col("_rn") == 1) & (~F.col("_deleted")))
             .drop("_rn", "_seq", "_deleted", "_tie")
+            .withColumn("bucket", url_bucket(self.n_shards, key_col))
         )
 
     def compact(self, spark, key_col: str = "url") -> dict:

@@ -167,6 +167,10 @@ def build_session(
             os.environ.get("SPARK_GC_OPTS", "-XX:+UseParallelGC"),
         )
     )
+    # spark.sql.icu.caseMappings.enabled keeps Spark's default (ICU):
+    # the JVM's own case tables would save ICU's start-up on the first
+    # lower() in a JVM, but they change BPE_EXPR tokens on 67 code
+    # points (tests/test_case_mappings.py)
     for k, v in {**SCAN_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

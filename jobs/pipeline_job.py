@@ -19,7 +19,9 @@ granularity.
 
 Prints ONE JSON summary line: per-phase document counts and wall
 times.  Phase counts are monotonically non-increasing by construction
-(each phase only drops documents).
+(each phase only drops documents).  Every count and side sum in the
+summary is observed on the job that writes the stage, so no phase
+re-reads what it wrote.
 """
 
 from __future__ import annotations
@@ -35,25 +37,19 @@ sys.path.insert(
 )
 
 
-def _write_stage(df, stage_dir: str) -> None:
-    df.write.mode("overwrite").parquet(
-        os.path.join(stage_dir, "documents.parquet")
-    )
-
-
 def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
                  groups: int = 16) -> dict:
     """Run the four-phase pipeline over a ``pages(url, html, ...)``
     DataFrame; returns the summary dict."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
-    from docwire_spark.ops.common import release_persisted
-    from docwire_spark.ops.corpus_filter import corpus_quality_filter
-    from docwire_spark.ops.dedup import dedup_components, dedup_exact
+    from docwire_spark.ops.common import release_persisted, right_size
+    from docwire_spark.ops.dedup import exact_firsts, near_dup_components
+    from docwire_spark.spark import lineage
     from docwire_spark.spark.extract import extract_pages
-    from docwire_spark.spark.lineage import CheckpointedWriter
 
     summary: dict = {"phases": {}}
+    schemas: dict = {}
 
     def _phase(name, fn):
         t0 = time.time()
@@ -61,6 +57,27 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
         summary["phases"][name] = {"docs": n, "wall_s": round(time.time() - t0, 2)}
         release_persisted()
         return n
+
+    def _write(df, stage: str, **sums) -> dict:
+        """Write ``df`` as the stage's ``documents.parquet``; return its
+        row count ``n`` and the named column ``sums``, observed by the
+        write job itself (no second action over the stage)."""
+        obs = Observation()
+        df.observe(
+            obs, F.count(F.lit(1)).alias("n"),
+            *[F.sum(c).alias(k) for k, c in sums.items()],
+        ).write.mode("overwrite").parquet(
+            os.path.join(stage, "documents.parquet")
+        )
+        schemas[stage] = df.schema
+        return obs.get
+
+    def _read(stage: str, parallelize: bool = False):
+        # with the schema it was written with: no schema-inference job
+        df = spark.read.schema(schemas[stage]).parquet(
+            os.path.join(stage, "documents.parquet")
+        )
+        return right_size(df) if parallelize else df
 
     st1 = os.path.join(out_dir, "stage1_extracted")
     st2 = os.path.join(out_dir, "stage2_quality")
@@ -89,85 +106,76 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
             # before perplexity)
             "tokens", F.expr(TOKENS_EXPR)
         ).withColumn("lang", lang_pred_col()).drop("tokens")
-        _write_stage(docs, st1)
-        return spark.read.parquet(os.path.join(st1, "documents.parquet")).count()
+        return _write(docs, st1)["n"]
 
     # -- phase 2: Gopher-style quality filter ------------------------------
     def p2():
+        from docwire_spark.ops.corpus_filter import quality_flags
+
+        docs = _read(st1, parallelize=True)
         # thresholds re-tuned for the synthetic crawl corpus: its
         # vocabulary carries no English stopwords and its pages are
         # shorter than the oracle documents table, so the module
         # defaults (pinned to that table's oracle) degenerate to
         # keep-nothing here
-        keep = corpus_quality_filter(
-            spark, st1,
+        scored = quality_flags(
+            docs,
             min_tokens=15, min_stopwords=0,
             min_avg_token_len=3.0, max_avg_token_len=12.0,
-        ).filter(F.col("keep") == 1).select("doc_id")
-        docs = spark.read.parquet(os.path.join(st1, "documents.parquet"))
-        _write_stage(docs.join(keep, "doc_id", "left_semi"), st2)
-        return spark.read.parquet(os.path.join(st2, "documents.parquet")).count()
+        )
+        kept = scored.filter(F.col("keep") == 1).select(*docs.columns)
+        return _write(kept, st2)["n"]
 
     # -- phase 2lm: CCNet LM perplexity tail-drop --------------------------
     def p2lm():
-        from docwire_spark.ops.common import persist_tracked
-        from docwire_spark.ops.lm_filter import lm_perplexity
+        from docwire_spark.ops.lm_filter import PPL_BUCKETS, lm_scores
 
-        # persisted: the keep-filter write AND the bucket summary both
-        # consume the scored table — without this the corpus-scale
-        # scoring join runs twice
-        ppl = persist_tracked(lm_perplexity(spark, st2))
-        keep = ppl.filter(F.col("bucket") != "tail").select("doc_id")
-        docs = spark.read.parquet(os.path.join(st2, "documents.parquet"))
-        _write_stage(docs.join(keep, "doc_id", "left_semi"), st2lm)
-        summary["ppl_buckets"] = {
-            r["bucket"]: r["n"]
-            for r in ppl.groupBy("bucket").agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return spark.read.parquet(
-            os.path.join(st2lm, "documents.parquet")
-        ).count()
+        docs = _read(st2, parallelize=True)
+        # the bucket histogram rides the same write job as the stage
+        # (a conditional count per bucket over the scored rows)
+        hist = Observation()
+        scored = lm_scores(docs).observe(hist, *[
+            F.sum((F.col("bucket") == b).cast("bigint")).alias(b)
+            for b in PPL_BUCKETS
+        ])
+        kept = scored.filter(F.col("bucket") != "tail").select(*docs.columns)
+        n = _write(kept, st2lm)["n"]
+        summary["ppl_buckets"] = {b: c for b, c in hist.get.items() if c}
+        return n
 
     # -- phase 2b: PII redaction (map-side transform, drops nothing) ------
     def p2b():
         from docwire_spark.ops.corpus_filter import redact_pii_column
 
-        docs = spark.read.parquet(os.path.join(st2lm, "documents.parquet"))
-        _write_stage(redact_pii_column(docs, "text"), st2b)
-        out = spark.read.parquet(os.path.join(st2b, "documents.parquet"))
+        row = _write(
+            redact_pii_column(_read(st2lm), "text"), st2b,
+            emails="n_pii_emails", phones="n_pii_phones", ips="n_pii_ips",
+        )
         summary["pii_matches"] = {
-            k: v
-            for k, v in zip(
-                ("emails", "phones", "ips"),
-                out.agg(
-                    F.sum("n_pii_emails"), F.sum("n_pii_phones"),
-                    F.sum("n_pii_ips"),
-                ).first(),
-            )
+            k: row[k] for k in ("emails", "phones", "ips")
         }
-        return out.count()
+        return row["n"]
 
     # -- phase 3: exact dedup (keep-first per fingerprint) ----------------
     def p3():
-        keep = dedup_exact(spark, st2b).select(
-            F.col("keep_doc_id").alias("doc_id")
-        )
-        docs = spark.read.parquet(os.path.join(st2b, "documents.parquet"))
-        _write_stage(docs.join(keep, "doc_id", "left_semi"), st3)
-        return spark.read.parquet(os.path.join(st3, "documents.parquet")).count()
+        return _write(exact_firsts(_read(st2b)), st3)["n"]
 
     # -- phase 4: near-dup cluster dedup + checkpointed final write -------
     def p4():
-        keep = dedup_components(spark, st3).filter(
+        docs = _read(st3)
+        obs = Observation()
+        kept = near_dup_components(docs).filter(
             F.col("keep_flag") == 1
-        ).select("doc_id")
-        docs = spark.read.parquet(os.path.join(st3, "documents.parquet"))
-        kept = docs.join(keep, "doc_id", "left_semi")
-        w = CheckpointedWriter(final, n_shards=n_shards, groups=groups)
+        ).select(*docs.columns).observe(obs, F.count(F.lit(1)).alias("n"))
+        # looked up at call time: the module attribute is the seam
+        # wrappers (timing, tracing) replace
+        w = lineage.CheckpointedWriter(final, n_shards=n_shards,
+                                       groups=groups)
         stats = w.run(kept)
         summary["final_commit"] = stats
-        return w.read(spark).count()
+        # a run that finds every group committed writes nothing, so
+        # nothing was observed: count the committed table instead
+        return obs.get["n"] if stats["groups_written"] else w.read(spark).count()
 
     _phase("extract", p1)
     _phase("quality_filter", p2)

@@ -17,7 +17,7 @@ from docwire_spark.ops.dedup import _cc_converge
 
 def _components(spark, edges):
     e = spark.createDataFrame(edges, "u bigint, v bigint")
-    stars = _cc_converge(e, spark)
+    stars = _cc_converge(e)
     rows = stars.select("u", "v").collect()
     lab = {r["u"]: r["v"] for r in rows}
     # star invariant: every non-root points at the component min

@@ -191,6 +191,34 @@ def test_compaction_keeps_delta_insert_without_bucket(spark, base_writer):
     assert w.read(spark).count() == n_base + 1
 
 
+@pytest.mark.parametrize("carried", [None, 999])
+def test_merged_view_agrees_with_compacted_base(spark, base_writer, carried):
+    """A delta row inserted with no ``bucket`` (or a stale one) reads
+    back from the merged view with the bucket compaction stores."""
+    w = base_writer
+    url = "https://new.example/merged"
+    if carried is None:
+        delta = spark.createDataFrame(
+            [(url, "INSERTED")], "url string, extracted_text string")
+    else:
+        delta = spark.createDataFrame(
+            [(url, "INSERTED", carried)],
+            "url string, extracted_text string, bucket int")
+    w.write_delta(delta, "insert-merged")
+
+    def view(df):
+        return sorted(
+            (r.url, r.extracted_text, r.bucket)
+            for r in df.select("url", "extracted_text", "bucket").collect()
+        )
+
+    merged = view(w.read_merged(spark))
+    w.compact(spark)
+    assert merged == view(w.read(spark))
+    assert (url, "INSERTED", w.read(spark).filter(F.col("url") == url)
+            .select(F.pmod(F.xxhash64("url"), F.lit(8))).first()[0]) in merged
+
+
 def test_compaction_midway_state_is_consistent(spark, base_writer):
     """Step-2 invariant: compacted base + old deltas reconciles to the
     same view (re-applying applied deltas is idempotent) — the state a

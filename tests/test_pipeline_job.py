@@ -79,3 +79,28 @@ def test_stage_checkpoints_resumable(pipeline_summary, spark):
         df = spark.read.parquet(os.path.join(out, stage, "documents.parquet"))
         assert df.count() == summary["phases"][key]["docs"], stage
         assert "doc_id" in df.columns and "text" in df.columns, stage
+
+
+def test_observed_summaries_match_the_stages(pipeline_summary, spark):
+    """The bucket histogram and the PII sums are observed on the write
+    jobs; they must equal the same figures queried from the stages."""
+    from pyspark.sql import functions as F
+
+    from docwire_spark.ops.lm_filter import lm_perplexity
+
+    summary, out = pipeline_summary
+    buckets = {
+        r["bucket"]: r["n"]
+        for r in lm_perplexity(spark, os.path.join(out, "stage2_quality"))
+        .groupBy("bucket").agg(F.count("*").alias("n")).collect()
+    }
+    assert summary["ppl_buckets"] == buckets
+
+    red = spark.read.parquet(
+        os.path.join(out, "stage2b_redacted", "documents.parquet"))
+    sums = red.agg(
+        F.sum("n_pii_emails").alias("emails"),
+        F.sum("n_pii_phones").alias("phones"),
+        F.sum("n_pii_ips").alias("ips"),
+    ).first().asDict()
+    assert summary["pii_matches"] == sums

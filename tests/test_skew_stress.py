@@ -45,18 +45,19 @@ def _zipf_corpus(spark, tmp_path, n_docs=1200, cluster_frac=0.1, seed=11):
 
 
 def test_components_converge_log_rounds_on_mega_cluster(spark, tmp_path):
+    from docwire_spark.ops.common import load
     from docwire_spark.ops.dedup import (
         _cc_converge, _minhash_rep_pairs, dedup_components,
     )
 
     sf_dir, n_cluster = _zipf_corpus(spark, tmp_path)
 
-    groups, _, verified = _minhash_rep_pairs(spark, sf_dir)
+    groups, _, verified = _minhash_rep_pairs(load(spark, sf_dir, "documents"))
     edges = verified.select(F.col("ga").alias("u"), F.col("gb").alias("v"))
     n_edges = edges.count()
     assert n_edges > 0
     stats: dict = {}
-    _cc_converge(edges, spark, stats=stats)
+    _cc_converge(edges, stats=stats)
 
     n_nodes = groups.count()
     # O(log n) rounds (alternating star converges in O(log^2 n) worst
