@@ -43,7 +43,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
     DataFrame; returns the summary dict."""
     from pyspark.sql import Observation, functions as F
 
-    from docwire_spark.ops.common import release_persisted, right_size
+    from docwire_spark.ops.common import release_persisted
     from docwire_spark.ops.dedup import exact_firsts, near_dup_components
     from docwire_spark.spark import lineage
     from docwire_spark.spark.extract import extract_pages
@@ -72,12 +72,11 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
         schemas[stage] = df.schema
         return obs.get
 
-    def _read(stage: str, parallelize: bool = False):
+    def _read(stage: str):
         # with the schema it was written with: no schema-inference job
-        df = spark.read.schema(schemas[stage]).parquet(
+        return spark.read.schema(schemas[stage]).parquet(
             os.path.join(stage, "documents.parquet")
         )
-        return right_size(df) if parallelize else df
 
     st1 = os.path.join(out_dir, "stage1_extracted")
     st2 = os.path.join(out_dir, "stage2_quality")
@@ -112,7 +111,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
     def p2():
         from docwire_spark.ops.corpus_filter import quality_flags
 
-        docs = _read(st1, parallelize=True)
+        docs = _read(st1)
         # thresholds re-tuned for the synthetic crawl corpus: its
         # vocabulary carries no English stopwords and its pages are
         # shorter than the oracle documents table, so the module
@@ -130,7 +129,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
     def p2lm():
         from docwire_spark.ops.lm_filter import PPL_BUCKETS, lm_scores
 
-        docs = _read(st2, parallelize=True)
+        docs = _read(st2)
         # the bucket histogram rides the same write job as the stage
         # (a conditional count per bucket over the scored rows)
         hist = Observation()
