@@ -118,11 +118,11 @@ def exact_firsts(docs: DataFrame) -> DataFrame:
     fingerprint instead of an aggregate joined back."""
     from pyspark.sql import Window
 
-    fp = with_tokens(docs).select(
-        *docs.columns, F.expr(_EXACT_FP).alias("_fp")
-    )
+    first = F.min("doc_id").over(Window.partitionBy("_fp"))
     return (
-        fp.withColumn("_first", F.min("doc_id").over(Window.partitionBy("_fp")))
+        with_tokens(docs)
+        .select(*docs.columns, F.expr(_EXACT_FP).alias("_fp"))
+        .withColumn("_first", first)
         .filter(F.col("doc_id") == F.col("_first"))
         .select(*docs.columns)
     )

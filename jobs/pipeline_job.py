@@ -174,7 +174,9 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
         summary["final_commit"] = stats
         # a run that finds every group committed writes nothing, so
         # nothing was observed: count the committed table instead
-        return obs.get["n"] if stats["groups_written"] else w.read(spark).count()
+        if not stats["groups_written"]:
+            return w.read(spark).count()
+        return obs.get["n"]
 
     _phase("extract", p1)
     _phase("quality_filter", p2)

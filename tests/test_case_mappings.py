@@ -1,8 +1,8 @@
 """Case mappings and the tokenizers: ``spark.sql.icu.caseMappings.enabled``
 (ICU, Spark 4's default) against the JVM's own mappings.
 
-Turning ICU off saves its start-up (~1.5 s on the first ``lower()`` in a
-JVM), but the JVM's case tables are an older Unicode version.  Every
+Turning ICU off saves its start-up (~1-1.5 s on the first ``lower()`` in
+a JVM), but the JVM's case tables are an older Unicode version.  Every
 Unicode scalar value is embedded as ``"A{c}b {c}Z"`` and tokenized under
 both settings in one session:
 
