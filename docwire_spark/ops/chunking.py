@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import load
+from .common import TOKENS_EXPR, load
 
 WINDOW = 64   # tokens per chunk (model context budget)
 STRIDE = 48   # tokens between window starts (OVERLAP = WINDOW-STRIDE)
@@ -31,8 +31,7 @@ STRIDE = 48   # tokens between window starts (OVERLAP = WINDOW-STRIDE)
 def chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        "regexp_extract_all(lower(coalesce(text, '')),"
-        " '[a-z0-9]+', 0) AS ts",
+        f"{TOKENS_EXPR} AS ts",
     )
     return docs.selectExpr(
         "doc_id",

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bloom import hash_expr
-from .common import load
+from .common import TOKENS_EXPR, load
 
 #: weight buckets (feature-hash space) — production D is 1e5-1e6;
 #: 4096 keeps the oracle cheap while exercising real collisions
@@ -39,9 +39,7 @@ N_BUCKETS = 4096
 #: the coalesce, Spark's aggregate over a NULL array yields NULL
 #: score/label while the oracle's coalesce yields 0 — a cross-engine
 #: divergence on the first real corpus with a NULL text)
-_TOK = "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+'{idx})"
-_TOK_SPARK = _TOK.format(idx=", 0")
-_TOK_DUCK = _TOK.format(idx="")
+_TOK_DUCK = "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
 
 
 def _weight_lambda() -> str:
@@ -59,7 +57,7 @@ def ml_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _weight_lambda()
     return docs.selectExpr(
         "doc_id",
-        f"{_TOK_SPARK} AS tokens",
+        f"{TOKENS_EXPR} AS tokens",
     ).selectExpr(
         "doc_id",
         "CAST(size(tokens) AS BIGINT) AS n_tok",
@@ -126,7 +124,7 @@ def ml_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = _bucket_lambda()
     teacher = _weight_lambda()
     base = docs.selectExpr(
-        "doc_id", f"{_TOK_SPARK} AS tokens"
+        "doc_id", f"{TOKENS_EXPR} AS tokens"
     ).selectExpr(
         "doc_id",
         f"transform(tokens, t -> {bucket}) AS buckets",

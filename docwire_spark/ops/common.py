@@ -5,6 +5,21 @@ Tokenization spec (identical in Spark and the DuckDB oracles):
 alnum runs over lowercased text.  Chosen because it is expressible
 bit-identically in both engines (RE2 and Java regex agree on this
 pattern class).
+
+The DuckDB side spells it with ``lower()`` (``TOKENS_SQL``).  The Spark
+side (``tokens_expr``) never calls ``lower()``, whose first use in a JVM
+starts ICU's case mappings (~1 s inside a timed pass).  A token keeps
+only ``[a-z0-9]`` characters, so a case mapping matters only where it
+produces one of them, and just three sources do: ``A-Z``, U+0130
+(lowercases to ``i`` + U+0307 COMBINING DOT ABOVE, which then ends the
+token) and U+212A KELVIN SIGN (``k``).  Every other character
+lowercases to non-ASCII characters only (final sigma's context rule
+included), which split tokens exactly as the original does.  So
+rewriting U+0130 as ``i`` + U+0307 and then translating ``A-Z`` and
+U+212A to ``a-z`` and ``k`` yields the same ``[a-z0-9]+`` runs as
+``lower(text)`` under either setting of
+``spark.sql.icu.caseMappings.enabled`` (``tests/test_case_mappings.py``
+checks every Unicode scalar value).
 """
 
 from __future__ import annotations
@@ -16,14 +31,29 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+#: the only characters whose lowercase lands in the token alphabet
+#: (U+0130 is rewritten first: it lowercases to two characters)
+_TOKEN_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212a"
+_TOKEN_LOWER = "abcdefghijklmnopqrstuvwxyzk"
+
+
+def tokens_expr(col: str) -> str:
+    """Spark SQL expression: the token array of string expression
+    ``col`` — ``regexp_extract_all(lower(col), '[a-z0-9]+')`` without
+    ``lower()`` (see the module docstring).  coalesce-to-empty: NULL
+    text means ZERO tokens in BOTH engines — without it Spark's
+    size(NULL) = -1 while DuckDB's len(NULL) is NULL, so every
+    token-derived column silently diverges on any crawl corpus carrying
+    a NULL text row (tests/test_hostile_parity.py)."""
+    return (
+        "coalesce(regexp_extract_all(translate("
+        f"replace({col}, '\u0130', 'i\u0307'),"
+        f" '{_TOKEN_UPPER}', '{_TOKEN_LOWER}'), '[a-z0-9]+', 0), array())"
+    )
+
+
 #: Spark SQL expression producing the token array from a `text` column.
-#: coalesce-to-empty: NULL text means ZERO tokens in BOTH engines —
-#: without it Spark's size(NULL) = -1 while DuckDB's len(NULL) is
-#: NULL, so every token-derived column silently diverges on any crawl
-#: corpus carrying a NULL text row (tests/test_hostile_parity.py).
-TOKENS_EXPR = (
-    "coalesce(regexp_extract_all(lower(text), '[a-z0-9]+', 0), array())"
-)
+TOKENS_EXPR = tokens_expr("text")
 #: Same tokenizer in DuckDB (group index defaults to 0 there).
 TOKENS_SQL = (
     "coalesce(regexp_extract_all(lower(text), '[a-z0-9]+'), [])"
@@ -202,9 +232,14 @@ def max_multiplicity_expr(arr: str) -> str:
     interpreted-lambda evaluations per row — measured to hang a task
     for minutes on a single oversized crawl page (100k bigrams ->
     ~10^10 lambda steps).  The DuckDB oracles keep the naive spec
-    form: oracles state WHAT, plans decide HOW."""
+    form: oracles state WHAT, plans decide HOW.
+
+    ``sort_array`` rather than ``array_sort``: the latter's default
+    comparator runs as an interpreted lambda.  The two order NULLs
+    differently (first vs last), which leaves every run length the
+    same."""
     return (
-        f"aggregate(array_sort({arr}),"
+        f"aggregate(sort_array({arr}),"
         " named_struct('prev', CAST(NULL AS STRING), 'run', 0L,"
         " 'best', 0L),"
         " (acc, x) -> named_struct("

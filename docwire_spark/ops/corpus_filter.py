@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .common import (
-    TOKENS_SQL, let_expr, load, max_multiplicity_expr, persist_tracked,
-    with_tokens,
+    TOKENS_EXPR, TOKENS_SQL, let_expr, load, max_multiplicity_expr,
+    persist_tracked, with_tokens,
 )
 
 # ---------------------------------------------------------------------------
@@ -54,20 +54,32 @@ MAX_TOP_BIGRAM_FRAC = 0.08    # Gopher: top-2-gram <= 0.18
 
 from .common import STOP_EN as _STOP_EN  # single home: ops/common.py
 
-# expression fragments shared verbatim between the Spark plan and the
-# DuckDB oracle modulo function-name spelling, so the double
-# arithmetic trees are identical
 # the CASE guard matters: Spark's sequence(1, 0) yields a DESCENDING
 # [1, 0] (not empty like SQL generate_series), so the unguarded form
-# crashes element_at on 0/1-token documents.  let_expr-bound so the
-# lambda captures a lambda VARIABLE, not the tokens column — see
-# common.let_expr for the O(n^2) inlining hazard this prevents.
-_BIGRAMS = let_expr(
-    "tokens", "ts",
+# crashes element_at on 0/1-token documents.
+_BIGRAMS_OF_TS = (
     "CASE WHEN size(ts) >= 2 THEN"
     " transform(sequence(1, size(ts) - 1),"
     " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
-    " ELSE array() END",
+    " ELSE array() END"
+)
+
+#: per-document stats over the let-bound ``ts`` (tokens) and ``bg``
+#: (bigrams); the divisions are guarded by a non-empty token array:
+#: ANSI mode (Spark 4 default) raises DIVIDE_BY_ZERO instead of
+#: returning NULL, so an empty document would otherwise kill the job
+_STATS_OF_TS_BG = (
+    "named_struct("
+    "'n_tok', CAST(size(ts) AS BIGINT),"
+    " 'avg_len', CASE WHEN size(ts) > 0 THEN CAST(aggregate("
+    "transform(ts, t -> length(t)), 0L, (acc, x) -> acc + x) AS DOUBLE)"
+    " / CAST(size(ts) AS BIGINT) END,"
+    f" 'stops', size(filter(ts, t -> t IN ({_STOP_EN}))),"
+    " 'short_frac', CASE WHEN size(ts) > 0 THEN"
+    " CAST(size(filter(ts, t -> length(t) = 1)) AS DOUBLE)"
+    " / CAST(size(ts) AS BIGINT) END,"
+    " 'n_bg', size(bg),"
+    f" 'top_bg', {max_multiplicity_expr('bg')})"
 )
 
 
@@ -76,6 +88,12 @@ FLAG_COLS = (
     "pass_n_tokens", "pass_avg_token_len", "pass_stopwords",
     "pass_short_tokens", "pass_top_bigram",
 )
+
+
+def _num(v) -> str:
+    """A threshold as a Spark SQL literal: a bare ``4.3`` would be a
+    DECIMAL, so floats get the double suffix."""
+    return f"{v!r}D" if isinstance(v, float) else str(int(v))
 
 
 def quality_flags(
@@ -95,50 +113,40 @@ def quality_flags(
     Thresholds are keyword-overridable per corpus (a filter tuned for
     one crawl is degenerate on another); the module defaults are the
     oracle-pinned spec (QUALITY_FILTER_SQL) — change those only with
-    the DuckDB side in lockstep."""
-    t = with_tokens(docs).withColumn("bg", F.expr(_BIGRAMS))
-    n_tok = F.size("tokens").cast("bigint")
-    sum_len = F.expr(
-        "aggregate(transform(tokens, t -> length(t)), 0L, (acc, x) -> acc + x)"
-    )
-    # divisions guarded by n_tok > 0: ANSI mode (Spark 4 default)
-    # raises DIVIDE_BY_ZERO instead of returning NULL, so an empty
-    # document would otherwise kill the whole job
-    avg_len = F.when(n_tok > 0, sum_len.cast("double") / n_tok)
-    stops = F.expr(f"size(filter(tokens, t -> t IN ({_STOP_EN})))")
-    short_frac = F.when(
-        n_tok > 0,
-        F.expr("size(filter(tokens, t -> length(t) = 1))").cast("double")
-        / n_tok,
-    )
-    n_bg = F.size("bg")
-    top_bg = F.expr(max_multiplicity_expr("bg"))
-    # flags coalesce NULL -> 0 so empty/NULL-text documents fail every
-    # rule instead of propagating NULL into keep (size(NULL tokens)
-    # and 0/0 divisions yield NULL in Spark)
-    def _flag(cond, name):
-        return F.coalesce(cond.cast("int"), F.lit(0)).alias(name)
+    the DuckDB side in lockstep.
 
-    r_len = _flag(
-        (n_tok >= min_tokens) & (n_tok <= max_tokens), "pass_n_tokens"
+    Tokens, bigrams, stats and flags are one expression with each
+    step bound by ``common.let_expr``, so a ``keep == 1`` filter that
+    Catalyst pushes into the scan tokenizes each row once (separate
+    columns would have the tokenizer substituted into every flag)."""
+    conds = {
+        "pass_n_tokens":
+            f"m.n_tok >= {_num(min_tokens)} AND m.n_tok <= {_num(max_tokens)}",
+        "pass_avg_token_len":
+            f"m.avg_len >= {_num(min_avg_token_len)}"
+            f" AND m.avg_len <= {_num(max_avg_token_len)}",
+        "pass_stopwords": f"m.stops >= {_num(min_stopwords)}",
+        "pass_short_tokens": f"m.short_frac <= {_num(max_short_token_frac)}",
+        "pass_top_bigram":
+            "CASE WHEN m.n_bg = 0 THEN true ELSE CAST(m.top_bg AS DOUBLE)"
+            f" / m.n_bg <= {_num(max_top_bigram_frac)} END",
+    }
+    # flags coalesce NULL -> 0 so empty/NULL-text documents fail every
+    # rule instead of propagating NULL into keep (0/0 guards yield NULL)
+    flags = "named_struct(" + ", ".join(
+        f"'{c}', coalesce(CAST(({conds[c]}) AS INT), 0)" for c in FLAG_COLS
+    ) + ")"
+    keep = " * ".join(f"f.{c}" for c in FLAG_COLS)
+    with_keep = (
+        "named_struct(" + "".join(f"'{c}', f.{c}, " for c in FLAG_COLS)
+        + f"'keep', CAST({keep} AS INT))"
     )
-    r_avg = _flag(
-        (avg_len >= min_avg_token_len) & (avg_len <= max_avg_token_len),
-        "pass_avg_token_len",
+    q = let_expr(TOKENS_EXPR, "ts", let_expr(
+        _BIGRAMS_OF_TS, "bg", let_expr(
+            _STATS_OF_TS_BG, "m", let_expr(flags, "f", with_keep))))
+    return docs.select(*docs.columns, F.expr(q).alias("_q")).select(
+        *docs.columns, "_q.*"
     )
-    r_stop = _flag(stops >= min_stopwords, "pass_stopwords")
-    r_short = _flag(short_frac <= max_short_token_frac, "pass_short_tokens")
-    r_bg = _flag(
-        F.when(n_bg == 0, F.lit(True)).otherwise(
-            top_bg.cast("double") / n_bg <= max_top_bigram_frac
-        ),
-        "pass_top_bigram",
-    )
-    out = t.select(*docs.columns, r_len, r_avg, r_stop, r_short, r_bg)
-    keep = F.col(FLAG_COLS[0])
-    for c in FLAG_COLS[1:]:
-        keep = keep * F.col(c)
-    return out.select("*", keep.cast("int").alias("keep"))
 
 
 def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:

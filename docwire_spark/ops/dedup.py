@@ -35,8 +35,8 @@ Scale notes (the 100-TB posture):
   shuffle in the whole plan is the small banded table itself (ids +
   25 int64 keys + the ~25-token shingle set per row).
 * Signatures are computed in vectorized numpy kernels over Arrow
-  batches (``mapInPandas``) — no per-row Python, no interpreted
-  Catalyst lambdas in the hot path.
+  batches (``mapInArrow`` for MinHash, ``mapInPandas`` for the rest) —
+  no per-row Python, no interpreted Catalyst lambdas in the hot path.
 * This corpus is template-generated and near-dup-dense (~40% of ALL
   pairs are true positives at 0.7), so the OUTPUT itself is
   quadratic; candidate pruning is bounded below by output size here.
@@ -151,17 +151,19 @@ _MH_SCHEMA = StructType(
 )
 
 
-def _minhash_batches(iterator):
+def _minhash_batches(batches):
     """Vectorized signature kernel: per doc, 60-bit md5 token hashes ->
     125 affine permutations (uint64 wraparound) -> column mins -> 25
     per-band 60-bit md5 keys.  One (T x 125) numpy multiply per doc;
-    token hashes are cached across the batch (Zipfian token reuse)."""
+    token hashes are cached across the batch (Zipfian token reuse).
+    A ``mapInArrow`` function: it reads the Arrow columns and builds
+    the output batch directly, with no pandas conversion either way."""
     drop_zip_importers()
     import hashlib
     import re
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     token_re = re.compile(r"[a-z0-9]+")
     A = np.array(_A, dtype=np.uint64)
@@ -174,9 +176,9 @@ def _minhash_batches(iterator):
             v = cache[t] = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
         return v
 
-    for pdf in iterator:
+    for batch in batches:
         shs, keys_col = [], []
-        for text in pdf["text"]:
+        for text in batch.column("text").to_pylist():
             toks = sorted(set(token_re.findall((text or "").lower())))
             shs.append(toks)
             if not toks:
@@ -198,8 +200,14 @@ def _minhash_batches(iterator):
                     for b in range(N_BANDS)
                 ]
             )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "sh": shs,
-                            "keys": keys_col})
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                pa.array(shs, pa.list_(pa.string())),
+                pa.array(keys_col, pa.list_(pa.int64())),
+            ],
+            names=["doc_id", "sh", "keys"],
+        )
 
 
 #: first agreeing band as a flat CASE chain over direct array indexing
@@ -215,25 +223,31 @@ def _minhash_rep_pairs(docs: DataFrame):
     """Shared collapse-then-verify front end of the MinHash-LSH plan
     over ``docs`` (``doc_id``, ``text``; right-sized for the kernel):
     returns ``(groups, n_groups, verified)`` where ``groups`` is the
-    persisted one-row-per-distinct-shingle-set table and ``verified``
+    checkpointed one-row-per-distinct-shingle-set table and ``verified``
     the rep-level near-dup pairs (ga < gb, jaccard >= threshold).
     ``dedup_minhash_lsh`` expands these to member pairs;
     ``dedup_components`` clusters them — both at REP level, so the
     quadratic member cliques of template corpora never enter a join.
 
-    Plan: (1) signature kernel (numpy, mapInPandas); (2) COLLAPSE to
+    Plan: (1) signature kernel (numpy, mapInArrow); (2) COLLAPSE to
     one representative per distinct shingle set; (3) band equi-join at
     REP level with slim payload (ids + 25 int64 keys); (4) pair dedup
     WITHOUT a shuffle — keep a pair only in its first agreeing band;
     (5) verify once per rep pair (shingles joined back; rep table tiny
     after collapse so AQE picks a broadcast join at bench scale — at
     10^12 docs it degrades gracefully to a shuffled join on gid)."""
-    sigs = right_size(docs.select("doc_id", "text")).mapInPandas(
+    sigs = right_size(docs.select("doc_id", "text")).mapInArrow(
         _minhash_batches, _MH_SCHEMA
     )
+    # a fixed-width exchange on the group key (it serves the aggregate
+    # too): the checkpoint of a plain groupBy keeps AQE's coalesced
+    # read, one partition for a small table, and every branch below
+    # would then run on one core (3x the sf0.1 wall on 4 cores)
+    n_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     groups = (
         sigs.filter(F.size("sh") > 0)
         .withColumn("fp", F.expr("md5(concat_ws(' ', sh))"))
+        .repartition(n_parts, "fp")
         .groupBy("fp")
         .agg(
             F.min("doc_id").alias("gid"),
@@ -243,16 +257,18 @@ def _minhash_rep_pairs(docs: DataFrame):
         )
         # the groups table feeds SEVEN plan branches (both join sides,
         # two shingle back-joins, two member expansions, intra pairs);
-        # without persist each branch recomputes the signature kernel +
-        # groupBy (column pruning defeats Spark's ReuseExchange because
-        # each branch prunes a different column set).  The table is
-        # compact (one row per distinct shingle set) — persisting it is
-        # the canonical pattern at cluster scale too.
+        # without materializing it each branch recomputes the signature
+        # kernel + groupBy (column pruning defeats Spark's ReuseExchange
+        # because each branch prunes a different column set).  The
+        # table is compact (one row per distinct shingle set).
     )
-    groups = persist_tracked(groups)
-    # one aggregate job materializes the cache AND measures the rep
-    # count that gates the broadcast hints below
-    n_groups = groups.count()
+    # one eager checkpoint job materializes the table AND observes the
+    # rep count that gates the broadcast hints below (no second action)
+    obs = Observation()
+    groups = groups.observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).localCheckpoint()
+    n_groups = obs.get["n"]
     reps = groups.select("gid", "sh", "keys")
     bands = reps.select(
         "gid", "keys", F.posexplode("keys").alias("band", "key")

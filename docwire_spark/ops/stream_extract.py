@@ -20,7 +20,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from docwire_spark.ops.common import load, ntz_epoch_us
+from docwire_spark.ops.common import TOKENS_EXPR, load, ntz_epoch_us
 
 _SINK_IDS = itertools.count()
 
@@ -112,11 +112,7 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("https://"), F.col("source"), F.lit("/d/"),
                  F.col("doc_id").cast("string")).alias("url"),
         F.encode(
-            F.expr(
-                "array_join(slice(regexp_extract_all("
-                "lower(coalesce(text, '')),"
-                " '[a-z0-9]+', 0), 1, 2), ' ')"
-            ),
+            F.expr(f"array_join(slice({TOKENS_EXPR}, 1, 2), ' ')"),
             "UTF-8",
         ).alias("html"),
     )
@@ -175,11 +171,7 @@ def stream_dedup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("https://"), F.col("source"), F.lit("/d/"),
                  F.col("doc_id").cast("string")).alias("url"),
         F.encode(
-            F.expr(
-                "array_join(slice(regexp_extract_all("
-                "lower(coalesce(text, '')),"
-                " '[a-z0-9]+', 0), 1, 2), ' ')"
-            ),
+            F.expr(f"array_join(slice({TOKENS_EXPR}, 1, 2), ' ')"),
             "UTF-8",
         ).alias("html"),
     )
@@ -312,7 +304,6 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reconstructs the same columns analytically, proving
     stream == batch for the composed pipeline too."""
     from docwire_spark.ops.corpus_filter import redact_pii_column
-    from docwire_spark.ops.common import TOKENS_EXPR
     from docwire_spark.spark.extract import extract_pages
 
     docs = load(spark, sf_dir, "documents")

@@ -563,11 +563,8 @@ def _c4_struct_body() -> str:
     )
 
 
-#: NULL text tokenizes to NULL in both engines, which would NULL every
-#: output column — the C4 spec here treats a NULL document as empty
-_C4_TOKENS_EXPR = (
-    "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+', 0)"
-)
+#: NULL text tokenizes to NULL in DuckDB, which would NULL every output
+#: column — the C4 spec here treats a NULL document as empty
 _C4_TOKENS_SQL = (
     "regexp_extract_all(lower(coalesce(text, '')), '[a-z0-9]+')"
 )
@@ -576,7 +573,7 @@ _C4_TOKENS_SQL = (
 def c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", parallelize=True)
     body = _c4_struct_body()
-    lines_bound = let_expr(_C4_TOKENS_EXPR, "ts", _C4_LINES_EXPR)
+    lines_bound = let_expr(TOKENS_EXPR, "ts", _C4_LINES_EXPR)
     s = F.expr(let_expr(lines_bound, "ls", body))
     out = docs.select("doc_id", s.alias("s")).select("doc_id", "s.*")
     n_kept = (

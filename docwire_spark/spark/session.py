@@ -168,9 +168,10 @@ def build_session(
         )
     )
     # spark.sql.icu.caseMappings.enabled keeps Spark's default (ICU):
-    # the JVM's own case tables would save ICU's start-up on the first
-    # lower() in a JVM, but they change BPE_EXPR tokens on 67 code
-    # points (tests/test_case_mappings.py)
+    # the JVM's own case tables change BPE_EXPR tokens on 67 code
+    # points (tests/test_case_mappings.py).  ICU loads on the first
+    # lower() in a JVM; the [a-z0-9]+ tokenizer (ops.common.tokens_expr)
+    # never calls lower(), so run_pipeline never loads it
     for k, v in {**SCAN_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
