@@ -8,7 +8,7 @@ task:
 
 1. **Model-backend transforms** (``chat_transform`` /
    ``embed_transform``): the generic "run every document through a
-   model endpoint" operators.  mapInArrow batches documents to a
+   model endpoint" operators.  map_batches feeds documents to a
    pluggable backend (kernel/ai_backend.py) — ONE keep-alive
    connection per partition, Arrow-batched transfer, no per-row
    Python dispatch overhead; inference concurrency equals partition
@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     ArrayType, DoubleType, StringType, StructField, StructType,
 )
 
-from docwire_spark.spark.session import drop_zip_importers
+from docwire_spark.spark.session import map_batches
 
 from .bloom import hash_expr
 from .common import (
@@ -62,6 +62,37 @@ from .common import (
 # --------------------------------------------------------------------------
 # model-backend transforms (the chat.cpp / embed.cpp chain elements)
 # --------------------------------------------------------------------------
+
+
+def _backend_transform(df: DataFrame, backend_factory, text_col: str,
+                       out_col: str, out_type, method: str,
+                       who: str) -> DataFrame:
+    """``df`` plus ``out_col``: each batch's ``text_col`` values through
+    ``backend.<method>``, with the backend built once per partition on
+    the executor and closed when the partition ends."""
+    if text_col not in df.columns:
+        raise KeyError(f"{who}: no column {text_col!r} in {df.columns}")
+    if out_col in df.columns:
+        raise ValueError(f"{who}: output column {out_col!r} already exists")
+    schema = StructType(
+        list(df.schema.fields) + [StructField(out_col, out_type)]
+    )
+
+    def _backend_batches(batches):
+        backend = backend_factory()
+        try:
+            for batch in batches:
+                cols = dict(zip(batch.schema.names, batch.columns))
+                cols[out_col] = getattr(backend, method)(
+                    batch.column(text_col).to_pylist()
+                )
+                yield cols
+        finally:
+            close = getattr(backend, "close", None)
+            if close is not None:
+                close()
+
+    return map_batches(df, _backend_batches, schema)
 
 
 def chat_transform(
@@ -79,41 +110,8 @@ def chat_transform(
     backend's connection never crosses the driver/executor boundary.
     NULL payloads pass through as NULL completions (the chain
     element's non-data_source pass-through, chat.cpp:162-163)."""
-    import pyarrow as pa
-
-    if text_col not in df.columns:
-        raise KeyError(f"chat_transform: no column {text_col!r} in"
-                       f" {df.columns}")
-    if out_col in df.columns:
-        raise ValueError(f"chat_transform: output column {out_col!r}"
-                         " already exists")
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, StringType())]
-    )
-
-    def _complete_batches(batches):
-        drop_zip_importers()
-        backend = backend_factory()
-        try:
-            for batch in batches:
-                idx = batch.schema.get_field_index(text_col)
-                if idx < 0:  # -1 would silently index the LAST column
-                    raise KeyError(
-                        f"chat_transform: no column {text_col!r} in batch"
-                        f" schema {batch.schema.names}"
-                    )
-                comps = backend.complete(batch.column(idx).to_pylist())
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(comps, type=pa.string())],
-                    list(batch.schema.names) + [out_col],
-                )
-        finally:
-            close = getattr(backend, "close", None)
-            if close is not None:
-                close()
-
-    return df.mapInArrow(_complete_batches, schema)
+    return _backend_transform(df, backend_factory, text_col, out_col,
+                              StringType(), "complete", "chat_transform")
 
 
 def embed_transform(
@@ -124,42 +122,9 @@ def embed_transform(
 ) -> DataFrame:
     """``openai::embed`` (embed.cpp:118-130) as a batched column
     transform: text in, ``array<double>`` embedding out."""
-    import pyarrow as pa
-
-    if text_col not in df.columns:
-        raise KeyError(f"embed_transform: no column {text_col!r} in"
-                       f" {df.columns}")
-    if out_col in df.columns:
-        raise ValueError(f"embed_transform: output column {out_col!r}"
-                         " already exists")
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out_col, ArrayType(DoubleType()))]
-    )
-
-    def _embed_batches(batches):
-        drop_zip_importers()
-        backend = backend_factory()
-        try:
-            for batch in batches:
-                idx = batch.schema.get_field_index(text_col)
-                if idx < 0:  # -1 would silently index the LAST column
-                    raise KeyError(
-                        f"embed_transform: no column {text_col!r} in batch"
-                        f" schema {batch.schema.names}"
-                    )
-                vecs = backend.embed(batch.column(idx).to_pylist())
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(vecs, type=pa.list_(pa.float64()))],
-                    list(batch.schema.names) + [out_col],
-                )
-        finally:
-            close = getattr(backend, "close", None)
-            if close is not None:
-                close()
-
-    return df.mapInArrow(_embed_batches, schema)
+    return _backend_transform(df, backend_factory, text_col, out_col,
+                              ArrayType(DoubleType()), "embed",
+                              "embed_transform")
 
 
 # --------------------------------------------------------------------------

@@ -35,8 +35,8 @@ Scale notes (the 100-TB posture):
   shuffle in the whole plan is the small banded table itself (ids +
   25 int64 keys + the ~25-token shingle set per row).
 * Signatures are computed in vectorized numpy kernels over Arrow
-  batches (``mapInArrow`` for MinHash, ``mapInPandas`` for the rest) —
-  no per-row Python, no interpreted Catalyst lambdas in the hot path.
+  batches (``session.map_batches``) — no per-row Python, no
+  interpreted Catalyst lambdas in the hot path.
 * This corpus is template-generated and near-dup-dense (~40% of ALL
   pairs are true positives at 0.7), so the OUTPUT itself is
   quadratic; candidate pruning is bounded below by output size here.
@@ -74,7 +74,7 @@ from docwire_spark.ops.common import (
     right_size,
     with_tokens,
 )
-from docwire_spark.spark.session import drop_zip_importers
+from docwire_spark.spark.session import map_batches
 
 NUM_HASHES = 125
 BAND_SIZE = 5          # r: rows per band
@@ -155,15 +155,11 @@ def _minhash_batches(batches):
     """Vectorized signature kernel: per doc, 60-bit md5 token hashes ->
     125 affine permutations (uint64 wraparound) -> column mins -> 25
     per-band 60-bit md5 keys.  One (T x 125) numpy multiply per doc;
-    token hashes are cached across the batch (Zipfian token reuse).
-    A ``mapInArrow`` function: it reads the Arrow columns and builds
-    the output batch directly, with no pandas conversion either way."""
-    drop_zip_importers()
+    token hashes are cached across the batch (Zipfian token reuse)."""
     import hashlib
     import re
 
     import numpy as np
-    import pyarrow as pa
 
     token_re = re.compile(r"[a-z0-9]+")
     A = np.array(_A, dtype=np.uint64)
@@ -200,14 +196,7 @@ def _minhash_batches(batches):
                     for b in range(N_BANDS)
                 ]
             )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("doc_id"),
-                pa.array(shs, pa.list_(pa.string())),
-                pa.array(keys_col, pa.list_(pa.int64())),
-            ],
-            names=["doc_id", "sh", "keys"],
-        )
+        yield {"doc_id": batch.column("doc_id"), "sh": shs, "keys": keys_col}
 
 
 #: first agreeing band as a flat CASE chain over direct array indexing
@@ -229,15 +218,15 @@ def _minhash_rep_pairs(docs: DataFrame):
     ``dedup_components`` clusters them — both at REP level, so the
     quadratic member cliques of template corpora never enter a join.
 
-    Plan: (1) signature kernel (numpy, mapInArrow); (2) COLLAPSE to
+    Plan: (1) signature kernel (numpy, map_batches); (2) COLLAPSE to
     one representative per distinct shingle set; (3) band equi-join at
     REP level with slim payload (ids + 25 int64 keys); (4) pair dedup
     WITHOUT a shuffle — keep a pair only in its first agreeing band;
     (5) verify once per rep pair (shingles joined back; rep table tiny
     after collapse so AQE picks a broadcast join at bench scale — at
     10^12 docs it degrades gracefully to a shuffled join on gid)."""
-    sigs = right_size(docs.select("doc_id", "text")).mapInArrow(
-        _minhash_batches, _MH_SCHEMA
+    sigs = map_batches(
+        right_size(docs.select("doc_id", "text")), _minhash_batches, _MH_SCHEMA
     )
     # a fixed-width exchange on the group key (it serves the aggregate
     # too): the checkpoint of a plain groupBy keeps AQE's coalesced
@@ -495,7 +484,7 @@ WHERE round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
 # digit at 1-based position (15 - b div 4)).  simhash bit b is set iff
 # the multiset-weighted ±1 vote over tokens is positive.
 #
-# Implemented as an Arrow-batched mapInPandas kernel (a "custom
+# Implemented as an Arrow-batched ``map_batches`` kernel (a "custom
 # sketch" operator): Catalyst higher-order functions are interpreted
 # per lambda step (~60 bits x n_tokens tree-walks per row), while the
 # numpy bit-unpack below is two vectorized ops per document.  The
@@ -515,12 +504,10 @@ def _simhash_batches_fn(n_bits: int):
     n_hex = n_bits // 4
 
     def batches(iterator):
-        drop_zip_importers()
         import hashlib
         import re
 
         import numpy as np
-        import pandas as pd
 
         token_re = re.compile(r"[a-z0-9]+")
         bits = np.arange(n_bits, dtype=np.uint64)
@@ -539,18 +526,13 @@ def _simhash_batches_fn(n_bits: int):
             v = int(((score > 0).astype(np.uint64) << bits).sum())
             return v - MOD64 if v >= (1 << 63) else v
 
-        for pdf in iterator:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "simhash": [one(t) for t in pdf["text"]],
-                }
-            )
+        for batch in iterator:
+            yield {
+                "doc_id": batch.column("doc_id"),
+                "simhash": [one(t) for t in batch.column("text").to_pylist()],
+            }
 
     return batches
-
-
-_simhash_batches = _simhash_batches_fn(60)
 
 
 def simhash_table(docs: DataFrame, n_bits: int = 64) -> DataFrame:
@@ -558,14 +540,15 @@ def simhash_table(docs: DataFrame, n_bits: int = 64) -> DataFrame:
     simhash)`` at the requested width (default: the 64-bit Manku
     fingerprint that pairs with simhash_pairs' production block
     decomposition)."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _simhash_batches_fn(n_bits), _SIMHASH_SCHEMA
+    return map_batches(
+        docs.select("doc_id", "text"), _simhash_batches_fn(n_bits),
+        _SIMHASH_SCHEMA,
     )
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents", parallelize=True).select("doc_id", "text")
-    return docs.mapInPandas(_simhash_batches, _SIMHASH_SCHEMA)
+    docs = load(spark, sf_dir, "documents", parallelize=True)
+    return simhash_table(docs, 60)
 
 
 DEDUP_SIMHASH_SQL = f"""
@@ -815,49 +798,57 @@ _EMB_SCHEMA = StructType(
 def _emb_band_batches(iterator):
     """Sign-LSH band keys: 96 ±1 projections per vector (one numpy
     product per row-chunk), left-fold (cumsum) accumulation so the
-    projection sign matches DuckDB's sequential list_sum exactly."""
-    drop_zip_importers()
+    projection sign matches DuckDB's sequential list_sum exactly.
+    ``v`` is read as an (n, EMB_DIM) view of the list values (a NULL
+    element reads as NaN) and passes through as the input column."""
     import numpy as np
-    import pandas as pd
 
     W = np.array(_emb_planes(), dtype=np.float64)  # (96, 64)
     shifts = np.arange(EMB_BAND_SIZE, dtype=np.int64)
+    nibbles = 4 * np.arange(12, dtype=np.int64)
+    CH = 256
 
-    for pdf in iterator:
-        keys_col = []
-        vs = [np.asarray(x, dtype=np.float64) for x in pdf["v"]]
-        CH = 256
+    for batch in iterator:
+        v = batch.column("v")
+        vs = v.flatten().to_numpy(zero_copy_only=False)
+        vs = vs.reshape(len(v), EMB_DIM)
+        ks = np.empty((len(vs), EMB_N_BANDS), dtype=np.int64)
         for lo in range(0, len(vs), CH):
-            chunk = np.stack(vs[lo:lo + CH])           # (c, 64)
+            chunk = vs[lo:lo + CH]                     # (c, 64)
             prods = chunk[:, None, :] * W[None, :, :]  # (c, 96, 64)
             proj = prods.cumsum(axis=2)[:, :, -1]      # left fold
             bits = (proj > 0).astype(np.int64)         # (c, 96)
             grouped = bits.reshape(len(chunk), EMB_N_BANDS, EMB_BAND_SIZE)
-            ks = (grouped << shifts[None, None, :]).sum(axis=2)  # (c, 24)
-            keys_col.extend([int(x) for x in row] for row in ks)
-        packed1 = [
-            sum(row[b] << (4 * b) for b in range(12)) for row in keys_col
-        ]
-        packed2 = [
-            sum(row[b + 12] << (4 * b) for b in range(12)) for row in keys_col
-        ]
-        norms = []
-        for lo in range(0, len(vs), CH):
-            chunk = np.stack(vs[lo:lo + CH])
+            ks[lo:lo + CH] = (grouped << shifts[None, None, :]).sum(axis=2)
+        yield {
+            "vec_id": batch.column("vec_id"),
+            "v": v,
+            "keys": ks.tolist(),
+            "k1": (ks[:, :12] << nibbles).sum(axis=1),
+            "k2": (ks[:, 12:] << nibbles).sum(axis=1),
             # cumsum = the left fold the DuckDB oracle's sequential
             # list_sum performs — bit-identical accumulation order
-            norms.extend(
-                np.sqrt((chunk * chunk).cumsum(axis=1)[:, -1]).tolist()
-            )
-        yield pd.DataFrame(
-            {"vec_id": pdf["vec_id"], "v": list(pdf["v"]), "keys": keys_col,
-             "k1": packed1, "k2": packed2, "norm": norms}
-        )
+            "norm": np.sqrt((vs * vs).cumsum(axis=1)[:, -1]),
+        }
+
+
+def banded_embeddings(spark: SparkSession,
+                      sf_dir: str) -> tuple[DataFrame, int]:
+    """The valid embeddings with their band keys, packed keys and norm
+    (``_EMB_SCHEMA``), persisted, and their count.  The banded table
+    feeds several plan branches of each caller (both join sides and
+    the vector back-joins), so it is materialized once; the count
+    gates the callers' broadcast hints."""
+    vecs = load_valid_embeddings(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    banded = persist_tracked(map_batches(vecs, _emb_band_batches, _EMB_SCHEMA))
+    return banded, banded.count()
 
 
 # NOTE on the verify expression: three alternatives were measured at
 # sf0.1 (1.5M candidate pairs x 64-dim): (a) this interpreted
-# zip_with/aggregate lambda — 9.4s; (b) a numpy mapInPandas dot kernel
+# zip_with/aggregate lambda — 9.4s; (b) a numpy Arrow-batch dot kernel
 # — 23s (the Arrow round-trip of both vector payloads dominates);
 # (c) a flat 64-term GetArrayItem sum — 27s (the ~250-node expression
 # tree exceeds the codegen method budget and falls back to
@@ -874,16 +865,7 @@ NORM_CODEGEN = "sqrt(aggregate(v, 0D, (acc, x) -> acc + x * x))"
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # persist: the banded table feeds both self-join sides and the two
-    # vector back-joins (4 plan branches; see dedup_minhash_lsh note);
-    # count() materializes it and gates the broadcast hints below
-    banded = persist_tracked(
-        vecs.mapInPandas(_emb_band_batches, _EMB_SCHEMA)
-    )
-    n_vecs = banded.count()
+    banded, n_vecs = banded_embeddings(spark, sf_dir)
     # slim band rows: ids + 24 int keys only — the 64-double vectors do
     # NOT ride the candidate join; they are joined back onto the much
     # smaller verified-candidate set (AQE picks broadcast at bench

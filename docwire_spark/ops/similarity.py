@@ -36,7 +36,7 @@ from docwire_spark.ops.common import (
 )
 from docwire_spark.ops.dedup import (
     _COS, EMB_BAND_SIZE, EMB_DIM, EMB_N_BANDS, EMB_VALID_SQL, NORM_CODEGEN,
-    _EMB_SCHEMA, _emb_band_batches, _emb_planes, load_valid_embeddings,
+    _emb_planes, banded_embeddings, load_valid_embeddings,
 )
 
 DIM = EMB_DIM
@@ -117,13 +117,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     window top-k.  At cluster scale the band table is the shuffle
     key and the scored candidate set is ~(recall-controlled) orders
     of magnitude smaller than the corpus."""
-    vecs = load_valid_embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    banded = persist_tracked(
-        vecs.mapInPandas(_emb_band_batches, _EMB_SCHEMA)
-    )
-    n_vecs = banded.count()
+    banded, n_vecs = banded_embeddings(spark, sf_dir)
     bands = banded.select(
         "vec_id", F.posexplode("keys").alias("band", "key")
     )

@@ -5,7 +5,7 @@ Pipeline (north-rule shape):
     pages(url, warc_ts, html, text, lang)
       -> byte-bounded scan splits (maxPartitionBytes and a small
          per-file open cost, see session.py; no pre-shuffle)
-      -> mapInArrow(extract_batch)    # Arrow batches, no per-row Python
+      -> map_batches(extract_batch)   # Arrow batches, no per-row Python
       -> results(url, mime, mime_confidence, extracted_text, spans,
                  meta, error, n_events, bytes_in, partition_id)
       -> metrics = groupBy(partition_id) aggregation
@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 )
 
 from docwire_spark.spark.lineage import DEFAULT_SHARDS  # noqa: F401
-from docwire_spark.spark.session import drop_zip_importers
+from docwire_spark.spark.session import map_batches
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -103,8 +103,8 @@ def _make_extract_batches(
     exports: tuple = (),
     counters: dict | None = None,
 ):
-    """mapInArrow body factory: runs the pure-Python kernel per Arrow
-    RecordBatch.  Arrow in/out directly (round 3: measured ~8% faster
+    """``map_batches`` body factory: runs the pure-Python kernel per
+    Arrow RecordBatch.  Arrow in/out directly (round 3: measured ~8% faster
     than the former mapInPandas path — the kernel needs Python bytes
     either way, but the pandas Series wrappers and the
     DataFrame->Arrow conversion of the wide result are pure
@@ -120,14 +120,10 @@ def _make_extract_batches(
     schema = _result_schema(with_binary, with_main_content, exports)
 
     def _extract_batches(iterator):
-        drop_zip_importers()
-        import pyarrow as pa
         from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         from docwire_spark.kernel.api import extract
 
-        arrow_schema = to_arrow_schema(schema)
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
 
@@ -135,7 +131,8 @@ def _make_extract_batches(
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
             n = len(urls)
-            out = {f.name: [] for f in arrow_schema if f.name != "url"}
+            out = {f.name: [] for f in schema.fields}
+            out["url"] = batch.column("url")
             out["partition_id"] = [pid] * n
             for url, html in zip(urls, htmls):
                 data = html if html is not None else b""
@@ -179,12 +176,7 @@ def _make_extract_batches(
                 counters["failed"].add(
                     sum(1 for e in out["error"] if e is not None)
                 )
-            arrays = [
-                batch.column("url").cast(f.type) if f.name == "url"
-                else pa.array(out[f.name], f.type)
-                for f in arrow_schema
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+            yield out
 
     return _extract_batches
 
@@ -215,7 +207,7 @@ def extract_pages(
     batch_fn = _make_extract_batches(
         with_binary, with_main_content, exports, counters
     )
-    return src.mapInArrow(batch_fn, schema)
+    return map_batches(src, batch_fn, schema)
 
 
 def salted_host_key(df: DataFrame, host_col: str = "host",

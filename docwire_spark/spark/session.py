@@ -1,5 +1,6 @@
 """SparkSession construction with the engine's standard tuning, and the
-per-task set-up every Python UDF body runs first.
+one Arrow boundary (:func:`map_batches`) every Python batch kernel runs
+through.
 
 Scale posture (for a multi-executor cluster; local[N] here is a
 single-JVM proxy):
@@ -35,7 +36,8 @@ import tempfile
 import zipfile
 import zipimport
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 ARROW_MAX_RECORDS = 512  # HTML rows are fat; bound the Arrow batch row count
 
@@ -49,13 +51,46 @@ SCAN_CONF = {
 def drop_zip_importers() -> None:
     """Remove every ``zipimporter`` from ``sys.path_importer_cache`` so
     the next task's ``importlib.invalidate_caches()`` re-reads no zip
-    directory.  Every function this package hands to ``mapInArrow``,
-    ``mapInPandas``, ``applyInPandasWithState`` or ``foreachPartition``
-    calls it first."""
+    directory.  :func:`map_batches` calls it at the start of every
+    task; the package's two other Python task bodies (the
+    ``foreachPartition`` sink in ``post_sink`` and the
+    ``applyInPandasWithState`` function in ``dedup_stream``) call it
+    first themselves."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             cache.pop(path, None)
+
+
+def map_batches(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """``df.mapInArrow`` with the package's per-task set-up: the one
+    place the package hands Python a partition of Arrow batches.
+
+    ``fn`` takes the task's iterator of ``pa.RecordBatch`` and yields,
+    per output batch, a mapping of output column name to a list, numpy
+    array or ``pa.Array``; each batch is built against the Arrow form
+    of ``schema`` (a ``StructType`` or a DDL string).  Before ``fn``
+    runs, the task drops the zip finders (:func:`drop_zip_importers`).
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+
+    def run(batches):
+        drop_zip_importers()
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        for cols in fn(batches):
+            arrays = []
+            for f in arrow_schema:
+                v = cols[f.name]
+                arrays.append(
+                    v if isinstance(v, pa.Array) else pa.array(v, f.type)
+                )
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return df.mapInArrow(run, schema)
 
 
 def package_zip(path: str | None = None) -> str:

@@ -7,7 +7,7 @@ Scale shape (the Common-Crawl processing pattern):
   100k-file listing is 100k independent tasks — plenty for any
   cluster).  ``read_warc`` distributes the *paths* and each task
   STREAMS its file record-by-record through
-  ``kernel.warc.iter_warc_records`` inside ``mapInPandas``, emitting
+  ``kernel.warc.iter_warc_records`` inside ``map_batches``, emitting
   bounded Arrow batches — per-task memory is one record + one batch,
   never one file, so a 1 GiB WARC and a 1 MiB WARC cost the same
   resident memory.
@@ -21,24 +21,22 @@ Scale shape (the Common-Crawl processing pattern):
   (spark/lineage.py) needs for idempotent replay.
 
 No per-row Python ever crosses the JVM boundary row-at-a-time: both
-directions are Arrow-batched (north-rule: "vectorized pandas/Arrow
-UDFs (no per-row Python)").
+directions are Arrow-batched (north-rule: "vectorized Arrow UDFs (no
+per-row Python)").
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
-from typing import Iterable, Iterator
 
-import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+
+from docwire_spark.spark.session import map_batches
 
 #: timestamp stamped on records whose warc_ts is NULL (WARC-Date is a
 #: mandatory header; epoch marks "unknown" without inventing a time)
 _EPOCH = _dt.datetime(1970, 1, 1)
-from pyspark.sql import DataFrame, SparkSession
-
-from docwire_spark.spark.session import drop_zip_importers
 
 READ_SCHEMA = (
     "warc_file string, warc_offset bigint, warc_length bigint, "
@@ -84,8 +82,9 @@ def read_warc(spark: SparkSession, path: str,
 
     keep = set(keep_types)
 
-    def scan(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
+    def scan(batches):
+        import pandas as pd
+
         from docwire_spark.kernel.warc import (
             iter_warc_records, split_http_response,
         )
@@ -94,8 +93,8 @@ def read_warc(spark: SparkSession, path: str,
                 "url", "warc_ts", "http_status", "mime", "payload",
                 "payload_digest")
         rows: list[tuple] = []
-        for pdf in batches:
-            for p in pdf["path"]:
+        for batch in batches:
+            for p in batch.column("path").to_pylist():
                 compressed = p.endswith(".gz")
                 with open(p, "rb") as fh:
                     for off, length, rec in iter_warc_records(fh, compressed):
@@ -110,23 +109,27 @@ def read_warc(spark: SparkSession, path: str,
                         else:
                             status, payload = 200, block
                             mime = f.get("Content-Type", "text/plain")
+                        # no stdlib parse accepts exactly what this one
+                        # does (fromisoformat rejects "2024" and keeps
+                        # years pandas coerces to NaT); a missing
+                        # WARC-Date comes back None, a malformed one NaT
                         ts = pd.to_datetime(
                             f.get("WARC-Date"), utc=True, errors="coerce"
                         )
                         rows.append((
                             os.path.basename(p), off, length, rtype,
                             f.get("WARC-Target-URI", ""),
-                            None if ts is pd.NaT else ts.tz_localize(None),
+                            None if pd.isna(ts) else ts,
                             status, mime, payload,
                             f.get("WARC-Payload-Digest", ""),
                         ))
                         if len(rows) >= _BATCH_ROWS:
-                            yield pd.DataFrame(rows, columns=cols)
+                            yield dict(zip(cols, zip(*rows)))
                             rows = []
         if rows:
-            yield pd.DataFrame(rows, columns=cols)
+            yield dict(zip(cols, zip(*rows)))
 
-    return paths.mapInPandas(scan, schema=READ_SCHEMA)
+    return map_batches(paths, scan, READ_SCHEMA)
 
 
 def _export(df: DataFrame, out_dir: str, n_files: int, kind: str,
@@ -142,8 +145,7 @@ def _export(df: DataFrame, out_dir: str, n_files: int, kind: str,
     # + in-file url order => byte-identical files on re-run.
     part = df.repartition(n_files, "url").sortWithinPartitions("url")
 
-    def write_part(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_importers()
+    def write_part(batches):
         from pyspark import TaskContext
 
         from docwire_spark.kernel.warc import (
@@ -157,21 +159,20 @@ def _export(df: DataFrame, out_dir: str, n_files: int, kind: str,
         base_ts = None
         records: list[bytes] = []
         n = 0
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
+        for batch in batches:
+            for row in batch.to_pylist():
                 # NULL-tolerant: one degenerate row (NULL html/text/ts/
                 # url) must never kill a 10^5-file export job — it
                 # becomes an empty-payload record instead.
-                ts = (row.warc_ts.to_pydatetime()
-                      if pd.notna(row.warc_ts) else _EPOCH)
+                ts = row["warc_ts"] or _EPOCH
                 if base_ts is None:
                     base_ts = ts
-                url = row.url if row.url is not None else ""
+                url = row["url"] if row["url"] is not None else ""
                 if kind == "warc":
-                    payload = bytes(row.html) if row.html is not None else b""
+                    payload = row["html"] if row["html"] is not None else b""
                     records.append(build_response_record(url, ts, payload))
                 else:
-                    v = getattr(row, text_col)
+                    v = row[text_col]
                     payload = ("" if v is None else str(v)).encode("utf-8")
                     records.append(
                         build_conversion_record(url, ts, payload)
@@ -182,13 +183,11 @@ def _export(df: DataFrame, out_dir: str, n_files: int, kind: str,
         head = build_warcinfo(fname, base_ts)
         extents = write_warc_file(path, [head] + records, compress=True)
         total = extents[-1][0] + extents[-1][1]
-        yield pd.DataFrame(
-            [(fname, n, total, extents[1][0], extents[-1][0])],
-            columns=["warc_file", "n_records", "n_bytes",
-                     "first_offset", "last_offset"],
-        )
+        yield {"warc_file": [fname], "n_records": [n], "n_bytes": [total],
+               "first_offset": [extents[1][0]],
+               "last_offset": [extents[-1][0]]}
 
-    return part.mapInPandas(write_part, schema=MANIFEST_SCHEMA)
+    return map_batches(part, write_part, MANIFEST_SCHEMA)
 
 
 def write_warc(pages: DataFrame, out_dir: str, n_files: int = 8) -> DataFrame:

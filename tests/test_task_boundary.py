@@ -1,7 +1,10 @@
 """The Spark task layer around the kernel: what a Python task pays
-before its first row (zip directory re-reads) and how a small scan is
-split across the cores (the per-file open cost)."""
+before its first row (zip directory re-reads), the one Arrow boundary
+every batch kernel goes through, and how a small scan is split across
+the cores (the per-file open cost)."""
 
+import ast
+import os
 import random
 import uuid
 import zipfile
@@ -60,6 +63,55 @@ def test_no_zip_importer_survives_invalidate_caches(spark, tmp_path):
     assert r.before > 0
     assert r.after == 0
     assert (r.a, r.b) == (1, 2)
+
+
+def _udf_calls():
+    """(path, called name, outermost enclosing function) for every call
+    of ``mapInPandas``, ``mapInArrow`` or ``drop_zip_importers`` in the
+    package and job sources."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    names = {"mapInPandas", "mapInArrow", "drop_zip_importers"}
+    calls = []
+    for top in ("docwire_spark", "jobs"):
+        for dirpath, _dirs, files in os.walk(os.path.join(root, top)):
+            for fn in sorted(files):
+                if not fn.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    tree = ast.parse(f.read(), path)
+                rel = os.path.relpath(path, root)
+                for outer in tree.body:
+                    owner = getattr(outer, "name", None)
+                    for node in ast.walk(outer):
+                        if not isinstance(node, ast.Call):
+                            continue
+                        func = node.func
+                        name = getattr(func, "attr", getattr(func, "id", None))
+                        if name in names:
+                            calls.append((rel, name, owner))
+    return calls
+
+
+def test_one_arrow_boundary():
+    """Every Python batch kernel goes through ``session.map_batches``:
+    no ``mapInPandas``, ``mapInArrow`` only inside the helper, and the
+    zip finders dropped only by the helper and the two task bodies that
+    have no Arrow-map form (the ``foreachPartition`` sink and the
+    ``applyInPandasWithState`` function)."""
+    calls = _udf_calls()
+    session = os.path.join("docwire_spark", "spark", "session.py")
+    assert [c for c in calls if c[1] == "mapInPandas"] == []
+    assert [c for c in calls if c[1] == "mapInArrow"] == [
+        (session, "mapInArrow", "map_batches")
+    ]
+    assert sorted(c for c in calls if c[1] == "drop_zip_importers") == sorted([
+        (session, "drop_zip_importers", "map_batches"),
+        (os.path.join("docwire_spark", "spark", "post_sink.py"),
+         "drop_zip_importers", "post_rows"),
+        (os.path.join("docwire_spark", "streaming", "dedup_stream.py"),
+         "drop_zip_importers", "_dedup_state_fn"),
+    ])
 
 
 def test_small_file_splits_feed_every_core(spark, tmp_path):

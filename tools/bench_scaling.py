@@ -185,7 +185,7 @@ on {datetime.date.today().isoformat()}.
 Protocol: the identical extraction job (`jobs/extract_job.py`:
 deterministic synthetic CC-style corpus seed=42, pre-generated to
 parquet and read by both runs; python-worker warmup outside the timed
-window; byte-bounded scan splits -> mapInPandas kernel (url-hash
+window; byte-bounded scan splits -> mapInArrow kernel (url-hash
 bucket computed, applied at the commit boundary — no pre-shuffle of
 the raw bytes) -> single-action stats) run in fresh subprocesses at
 two cluster sizes — the sandbox proxy for N vs 4N executor clusters

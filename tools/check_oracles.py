@@ -35,7 +35,8 @@ TABLES = (
 _PLAN_OPS = (
     "Exchange", "CartesianProduct", "BroadcastNestedLoopJoin",
     "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
-    "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "Window",
+    "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
+    "Window",
     "Sort", "HashAggregate", "ObjectHashAggregate", "SortAggregate",
 )
 
