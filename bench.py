@@ -38,8 +38,7 @@ HEADLINE = [
     "text_token_stats",
     "text_quality",
     "text_lang_id",
-    "text_fingerprint",
-    "text_repetition",
+    "text_fingerprint_repetition",
     "text_ngram_topk",
     "text_normalize",
     "text_length_percentiles",

@@ -175,17 +175,15 @@ def main(argv: list | None = None) -> int:
     # extraction and especially the --http-post side effect must not
     # fire for a command that can only fail
     if args.openai_text_to_speech or args.openai_transcribe:
-        print("Error: text_to_speech/transcribe need audio codecs,"
-              " which this build does not bundle", file=sys.stderr)
+        missing = "text_to_speech/transcribe need audio codecs"
+    elif args.local_ai_prompt is not None:
+        missing = "local AI inference needs model weights and a ct2 runtime"
+    else:
+        missing = None
+    if missing:
+        print(f"Error: {missing}, which this build does not bundle",
+              file=sys.stderr)
         return 1
-    if args.local_ai_prompt is not None:
-        from docwire_spark.kernel.ai_backend import LocalModelBackend
-
-        try:
-            LocalModelBackend(args.local_ai_prompt)
-        except NotImplementedError as exc:
-            print(f"Error: {exc}", file=sys.stderr)
-            return 1
 
     if args.input_file == "-":
         data = sys.stdin.buffer.read()

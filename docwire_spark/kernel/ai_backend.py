@@ -25,9 +25,9 @@ Everything here is testable offline: the codecs are pure functions,
 and the OpenAI-wire transports accept a ``base_url`` so tests point
 them at a local mock server (the reference tests its http elements
 the same way, against a local cpp-httplib server).  The local-model
-transport is an honest env-blocked stub — there are no model weights
-in this sandbox — with the interface pinned so a real ct2/llama
-runner drops in.
+family has no transport here: it needs model weights and a ct2
+runtime, which this build does not bundle, so the CLI rejects
+``--local-ai-prompt`` up front.
 """
 
 from __future__ import annotations
@@ -324,21 +324,3 @@ class OpenAIEmbedBackend:
 
     def close(self) -> None:
         self._client.close()
-
-
-class LocalModelBackend:
-    """``ai::local::task`` analog (local_ai_task.cpp:9-16): the
-    reference runs the same task prompts through a bundled
-    flan-t5-large ct2 int8 model.  No model weights or ctranslate2
-    exist in this sandbox, so construction is the env-blocked
-    boundary; the interface matches OpenAIChatBackend so a real
-    runner drops in without touching ops/ai_transform.py."""
-
-    def __init__(self, prompt: str, model_path: str = ""):
-        raise NotImplementedError(
-            "Local model inference (reference src/local_ai_task.cpp"
-            " flan-t5 ct2 runner) needs model weights + a ct2/llama"
-            " runtime, neither of which is available in this sandbox."
-            " Use OpenAIChatBackend against a served endpoint, or the"
-            " deterministic task analogs in ops/ai_transform.py."
-        )

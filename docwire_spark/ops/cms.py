@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .bloom import hash_expr
-from .common import TOKENS_EXPR, TOKENS_SQL, load
+from .common import BIGRAMS_OF_TS, TOKENS_EXPR, TOKENS_SQL, bigrams_sql, load
 
 CMS_D = 4     # rows (delta = e^-4 ~ 1.8%)
 CMS_W = 1024  # counters per row (eps = e/1024 ~ 0.27% of N)
@@ -38,10 +38,7 @@ def cms_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     4096 rows at ANY corpus size (absent cells are zero)."""
     docs = load(spark, sf_dir, "documents")
     grams = docs.selectExpr(f"{TOKENS_EXPR} AS ts").selectExpr(
-        "explode(CASE WHEN size(ts) >= 2 THEN"
-        " transform(sequence(1, size(ts) - 1),"
-        " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
-        " ELSE array() END) AS gram"
+        f"explode({BIGRAMS_OF_TS}) AS gram"
     )
     # ONE pass: a union of d selects over grams would re-run the
     # scan + tokenize + explode d times; instead hash the digest once
@@ -74,9 +71,7 @@ WITH t AS (
   SELECT {TOKENS_SQL} AS ts FROM documents
 ),
 grams AS (
-  SELECT unnest(list_transform(
-           generate_series(1, greatest(len(ts) - 1, 0)),
-           i -> ts[i] || ' ' || ts[i + 1])) AS gram
+  SELECT unnest({bigrams_sql("ts")}) AS gram
   FROM t
 ),
 cells AS (

@@ -59,6 +59,26 @@ TOKENS_SQL = (
     "coalesce(regexp_extract_all(lower(text), '[a-z0-9]+'), [])"
 )
 
+#: Spark SQL body: the bigrams ``"a b"`` of the token array bound to
+#: lambda variable ``ts`` (bind it with :func:`let_expr`).  The CASE
+#: guard matters: Spark's sequence(1, 0) yields a DESCENDING [1, 0]
+#: (not empty like SQL generate_series), so the unguarded form crashes
+#: element_at on 0/1-token documents.
+BIGRAMS_OF_TS = (
+    "CASE WHEN size(ts) >= 2 THEN"
+    " transform(sequence(1, size(ts) - 1),"
+    " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
+    " ELSE array() END"
+)
+
+
+def bigrams_sql(tokens: str) -> str:
+    """The same bigrams in DuckDB over the list expression ``tokens``."""
+    return (
+        f"list_transform(generate_series(1, greatest(len({tokens}) - 1, 0)),"
+        f" i -> {tokens}[i] || ' ' || {tokens}[i + 1])"
+    )
+
 # English stopword list shared by the quality score (ops/textstats.py)
 # and the corpus quality filter (ops/corpus_filter.py) plus their
 # DuckDB oracles — one home so the two can never desynchronize.

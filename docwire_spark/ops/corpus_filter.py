@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .common import (
-    TOKENS_EXPR, TOKENS_SQL, let_expr, load, max_multiplicity_expr,
-    persist_tracked, with_tokens,
+    BIGRAMS_OF_TS, TOKENS_EXPR, TOKENS_SQL, bigrams_sql, let_expr, load,
+    max_multiplicity_expr, persist_tracked, with_tokens,
 )
 
 # ---------------------------------------------------------------------------
@@ -53,16 +53,6 @@ MAX_SHORT_TOKEN_FRAC = 0.05   # analog of Gopher's 80%-alpha-words rule
 MAX_TOP_BIGRAM_FRAC = 0.08    # Gopher: top-2-gram <= 0.18
 
 from .common import STOP_EN as _STOP_EN  # single home: ops/common.py
-
-# the CASE guard matters: Spark's sequence(1, 0) yields a DESCENDING
-# [1, 0] (not empty like SQL generate_series), so the unguarded form
-# crashes element_at on 0/1-token documents.
-_BIGRAMS_OF_TS = (
-    "CASE WHEN size(ts) >= 2 THEN"
-    " transform(sequence(1, size(ts) - 1),"
-    " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
-    " ELSE array() END"
-)
 
 #: per-document stats over the let-bound ``ts`` (tokens) and ``bg``
 #: (bigrams); the divisions are guarded by a non-empty token array:
@@ -142,7 +132,7 @@ def quality_flags(
         + f"'keep', CAST({keep} AS INT))"
     )
     q = let_expr(TOKENS_EXPR, "ts", let_expr(
-        _BIGRAMS_OF_TS, "bg", let_expr(
+        BIGRAMS_OF_TS, "bg", let_expr(
             _STATS_OF_TS_BG, "m", let_expr(flags, "f", with_keep))))
     return docs.select(*docs.columns, F.expr(q).alias("_q")).select(
         *docs.columns, "_q.*"
@@ -161,9 +151,7 @@ QUALITY_FILTER_SQL = f"""
 WITH t AS (
   SELECT doc_id, {TOKENS_SQL} AS tokens FROM documents
 ), b AS (
-  SELECT doc_id, tokens,
-         list_transform(generate_series(1, greatest(len(tokens) - 1, 0)),
-                        i -> tokens[i] || ' ' || tokens[i + 1]) AS bg
+  SELECT doc_id, tokens, {bigrams_sql("tokens")} AS bg
   FROM t
 ), m AS (
   SELECT doc_id,

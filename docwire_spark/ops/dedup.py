@@ -740,13 +740,21 @@ EMB_BAND_SIZE = 4      # planes per band
 EMB_N_BANDS = 24       # 96 planes total
 
 #: Validity guard shared by EVERY embeddings scan (Spark + oracle): a
-#: 10^12-row embedding table WILL carry NULL and wrong-dimension rows
-#: (failed encoder calls, schema drift), and a single one must be
-#: dropped — not kill the job (numpy kernels crash on ragged input,
-#: codegen indexes past the array) or skew the math.  Both engines
-#: filter with the same predicate so row counts stay oracle-true.
-EMB_VALID_SQL = f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
-_EMB_VALID_EXPR = f"embedding IS NOT NULL AND size(embedding) = {EMB_DIM}"
+#: 10^12-row embedding table WILL carry NULL, wrong-dimension and
+#: NULL-element rows (failed encoder calls, schema drift), and a single
+#: one must be dropped — not kill the job (numpy kernels crash on
+#: ragged input, codegen indexes past the array) or skew the math (a
+#: NULL element makes Spark's norms NaN or NULL, while DuckDB's
+#: list_sum skips it).  Both engines filter with the same predicate so
+#: row counts stay oracle-true.
+EMB_VALID_SQL = (
+    f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
+    " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
+)
+_EMB_VALID_EXPR = (
+    f"embedding IS NOT NULL AND size(embedding) = {EMB_DIM}"
+    " AND size(filter(embedding, x -> x IS NULL)) = 0"
+)
 
 
 def load_valid_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -799,8 +807,9 @@ def _emb_band_batches(iterator):
     """Sign-LSH band keys: 96 ±1 projections per vector (one numpy
     product per row-chunk), left-fold (cumsum) accumulation so the
     projection sign matches DuckDB's sequential list_sum exactly.
-    ``v`` is read as an (n, EMB_DIM) view of the list values (a NULL
-    element reads as NaN) and passes through as the input column."""
+    ``v`` is read as an (n, EMB_DIM) view of the list values (the
+    validity guard has dropped NULL elements) and passes through as the
+    input column."""
     import numpy as np
 
     W = np.array(_emb_planes(), dtype=np.float64)  # (96, 64)

@@ -68,26 +68,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from .common import (
-    TOKENS_EXPR, TOKENS_SQL, let_expr, load, persist_tracked,
+    BIGRAMS_OF_TS, TOKENS_EXPR, TOKENS_SQL, bigrams_sql, let_expr, load,
+    persist_tracked,
 )
 
-# ---------------------------------------------------------------------------
-# shared bigram derivation (same spec as ops/textstats._BIGRAMS_EXPR;
-# re-stated here with the w1 context split the LM needs)
-# ---------------------------------------------------------------------------
-
-_BIGRAMS_EXPR = let_expr(
-    "tokens", "ts",
-    "CASE WHEN size(ts) >= 2 THEN"
-    " transform(sequence(1, size(ts) - 1),"
-    " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
-    " ELSE array() END",
-)
-
-_BIGRAMS_SQL = (
-    "list_transform(generate_series(1, greatest(len(tokens) - 1, 0)),"
-    " i -> tokens[i] || ' ' || tokens[i + 1])"
-)
+#: bigrams of the ``tokens`` column, in each engine
+_BIGRAMS_EXPR = let_expr("tokens", "ts", BIGRAMS_OF_TS)
+_BIGRAMS_SQL = bigrams_sql("tokens")
 
 #: add-k smoothing constant (identical literal in both engines)
 LM_ADD_K = 0.5

@@ -1,14 +1,22 @@
-"""Structured Streaming extraction under the driver's oracle gate.
+"""Structured Streaming queries under the driver's oracle gate.
 
-``extract_stream_plain`` runs the REAL streaming path end-to-end:
-synthesized pages written to a parquet drop directory -> file-source
-``readStream`` -> the batch extraction transformation itself
-(``spark.extract.extract_pages``) -> memory sink drained with
-``availableNow`` -> the sink table returned as the query result.  The
-DuckDB oracle is the same analytic reconstruction the batch
-``extract_plain`` query uses — proving the streaming mode is
-byte-identical to batch (the north-star property that downstream
-consumers cannot tell which mode produced a row).
+Each query writes a frame to a parquet drop directory, streams it back
+through a file-source ``readStream`` into a streaming transformation,
+and drains that into a memory sink with ``availableNow``
+(``_drain``); the sink table is the query result.
+
+- ``extract_stream_plain``: the batch extraction transformation itself
+  (``spark.extract.extract_pages``).  The DuckDB oracle is the same
+  analytic reconstruction the batch ``extract_plain`` query uses —
+  proving the streaming mode is byte-identical to batch (the
+  north-star property that downstream consumers cannot tell which
+  mode produced a row).
+- ``stream_dedup_native``: first-seen dedup on the native state store
+  (``streaming.dedup_stream``) over one-file micro-batches.
+- ``stream_events_windowed``: a watermarked tumbling-window
+  aggregation.
+- ``stream_corpus_clean``: extraction composed with the map-side
+  cleaning ops in one stream.
 """
 
 from __future__ import annotations
@@ -25,53 +33,27 @@ from docwire_spark.ops.common import TOKENS_EXPR, load, ntz_epoch_us
 _SINK_IDS = itertools.count()
 
 
-def _cleanup(*dirs: str) -> None:
-    """Remove the per-invocation drop/checkpoint/output scratch dirs —
-    availableNow has fully drained the source by the time
-    awaitTermination returns, so repeated sweeps don't accumulate
-    corpus-sized parquet copies in /tmp."""
-    for d in dirs:
-        shutil.rmtree(d, ignore_errors=True)
+def _drain(spark: SparkSession, drop: DataFrame, schema: str, transform,
+           max_files_per_trigger: int | None = None) -> DataFrame:
+    """Write ``drop`` to a parquet drop directory, read it back as a
+    stream of ``schema``, and drain ``transform(stream)`` into a
+    memory sink with ``availableNow``; returns the sink table.
 
-
-def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docwire_spark.spark.extract import extract_pages
-
-    docs = load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("https://synth.local/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><title>d</title></head><body><p>"),
-                # NULL text -> empty paragraph, not a NULL html row
-                # (same contract as the WARC/WET synthesis templates)
-                F.coalesce(F.col("text"), F.lit("")),
-                F.lit("</p></body></html>"),
-            ),
-            "UTF-8",
-        ).alias("html"),
-        F.col("text"),
-        F.lit("en").alias("lang"),
-    )
-    drop_dir = tempfile.mkdtemp(prefix="stream_oracle_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_oracle_chk_")
-    pages.write.mode("overwrite").parquet(drop_dir)
-
-    stream_pages = (
-        spark.readStream.schema(
-            "url string, warc_ts timestamp, html binary,"
-            " text string, lang string"
-        )
-        .format("parquet")
-        .load(drop_dir)
-    )
-    extracted = extract_pages(stream_pages)
-    sink = f"stream_oracle_sink_{next(_SINK_IDS)}_{os.getpid()}"
+    The drop and checkpoint directories are removed once
+    ``awaitTermination`` returns (availableNow has fully drained the
+    source by then), so repeated sweeps don't accumulate corpus-sized
+    parquet copies in the temp dir."""
+    drop_dir = tempfile.mkdtemp(prefix="stream_src_")
+    chk_dir = tempfile.mkdtemp(prefix="stream_chk_")
+    sink = f"stream_sink_{next(_SINK_IDS)}_{os.getpid()}"
     try:
+        drop.write.mode("overwrite").parquet(drop_dir)
+        reader = spark.readStream.schema(schema).format("parquet")
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger",
+                                   max_files_per_trigger)
         q = (
-            extracted.writeStream.format("memory")
+            transform(reader.load(drop_dir)).writeStream.format("memory")
             .queryName(sink)
             .option("checkpointLocation", os.path.join(chk_dir, "chk"))
             .outputMode("append")
@@ -80,12 +62,49 @@ def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
     finally:
-        _cleanup(drop_dir, chk_dir)
-    return spark.table(sink).select(
-        F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
-        "mime",
-        "extracted_text",
+        for d in (drop_dir, chk_dir):
+            shutil.rmtree(d, ignore_errors=True)
+    return spark.table(sink)
+
+
+def _html_pages(docs: DataFrame, *extra) -> DataFrame:
+    """(url, html, *extra) pages wrapping each document's text in one
+    ``<p>``: url ``https://synth.local/d/<doc_id>``; NULL text -> empty
+    paragraph, not a NULL html row (same contract as the WARC/WET
+    synthesis templates)."""
+    return docs.select(
+        F.concat(F.lit("https://synth.local/d/"),
+                 F.col("doc_id").cast("string")).alias("url"),
+        F.encode(
+            F.concat(
+                F.lit("<html><head><title>d</title></head><body><p>"),
+                F.coalesce(F.col("text"), F.lit("")),
+                F.lit("</p></body></html>"),
+            ),
+            "UTF-8",
+        ).alias("html"),
+        *extra,
     )
+
+
+def _doc_id() -> "F.Column":
+    """doc_id back from a ``_html_pages`` url."""
+    return F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id")
+
+
+def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from docwire_spark.spark.extract import extract_pages
+
+    pages = _html_pages(
+        load(spark, sf_dir, "documents"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
+        F.col("text"),
+        F.lit("en").alias("lang"),
+    )
+    out = _drain(spark, pages, "url string, html binary,"
+                 " warc_ts timestamp, text string, lang string",
+                 extract_pages)
+    return out.select(_doc_id(), "mime", "extracted_text")
 
 
 EXTRACT_STREAM_PLAIN_SQL = """
@@ -95,75 +114,18 @@ SELECT doc_id, 'text/html' AS mime,
 FROM documents
 """
 
-def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom STATEFUL streaming operator under the full oracle gate:
-    pages stream in as four single-file micro-batches
-    (maxFilesPerTrigger=1), the applyInPandasWithState dedup keeps the
-    per-host seen-fingerprint set across batches, and the emitted
-    first-seen rows are projected to the deterministic (host, fp) SET
-    — which duplicate row wins is order-dependent, the set of
-    surviving fingerprints is not, so DuckDB can verify it exactly.
-    Payload = first two tokens of each document (collides across docs
-    by construction -> real in-batch AND cross-batch suppressions)."""
-    from docwire_spark.streaming.dedup_stream import stream_dedup
-
-    docs = load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit("/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.encode(
-            F.expr(f"array_join(slice({TOKENS_EXPR}, 1, 2), ' ')"),
-            "UTF-8",
-        ).alias("html"),
-    )
-    drop_dir = tempfile.mkdtemp(prefix="stream_state_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_state_chk_")
-    out_dir = tempfile.mkdtemp(prefix="stream_state_out_")
-    pages.repartition(4).write.mode("overwrite").parquet(drop_dir)
-
-    stream_pages = (
-        spark.readStream.schema("url string, html binary")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .load(drop_dir)
-    )
-    try:
-        q = (
-            stream_dedup(stream_pages)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(chk_dir, "chk"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        res = (
-            spark.read.parquet(out_dir).select("host", "fp").distinct()
-            .localCheckpoint(eager=True)  # materialize so out_dir can go
-        )
-    finally:
-        _cleanup(drop_dir, chk_dir, out_dir)
-    return res
-
-
-STREAM_DEDUP_STATEFUL_SQL = """
-SELECT DISTINCT source AS host,
-       md5(COALESCE(array_to_string(
-         regexp_extract_all(lower(COALESCE(text, '')),
-                            '[a-z0-9]+')[1:2], ' '), '')) AS fp
-       -- outer COALESCE: DuckDB array_to_string([]) is NULL where
-       -- Spark array_join([]) is '' — token-less docs must
-       -- fingerprint as md5('') in both engines
-FROM documents
-"""
 
 def stream_dedup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The native streaming-dedup scale path under the oracle gate:
-    dropDuplicates on (host, fp) keeps ONE O(1) state-store row per
-    fingerprint (RocksDB-backed on a cluster) — same survivor set as
-    the custom stateful operator, radically cheaper state.  Four
-    micro-batches force real cross-batch state lookups."""
+    """First-seen streaming dedup under the full oracle gate: pages
+    stream in as four single-file micro-batches
+    (maxFilesPerTrigger=1), ``dropDuplicates`` on (host, fp) keeps
+    ONE O(1) state-store row per fingerprint across batches, and the
+    emitted first-seen rows are projected to the deterministic
+    (host, fp) SET — which duplicate row wins is order-dependent, the
+    set of surviving fingerprints is not, so DuckDB can verify it
+    exactly.  Payload = first two tokens of each document (collides
+    across docs by construction -> real in-batch AND cross-batch
+    suppressions)."""
     from docwire_spark.streaming.dedup_stream import stream_dedup_native
 
     docs = load(spark, sf_dir, "documents")
@@ -175,35 +137,21 @@ def stream_dedup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "UTF-8",
         ).alias("html"),
     )
-    drop_dir = tempfile.mkdtemp(prefix="stream_native_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_native_chk_")
-    out_dir = tempfile.mkdtemp(prefix="stream_native_out_")
-    pages.repartition(4).write.mode("overwrite").parquet(drop_dir)
+    out = _drain(spark, pages.repartition(4), "url string, html binary",
+                 stream_dedup_native, max_files_per_trigger=1)
+    return out.select("host", "fp")
 
-    stream_pages = (
-        spark.readStream.schema("url string, html binary")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(drop_dir)
-    )
-    try:
-        q = (
-            stream_dedup_native(stream_pages)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(chk_dir, "chk"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        res = (
-            spark.read.parquet(out_dir).select("host", "fp").distinct()
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        _cleanup(drop_dir, chk_dir, out_dir)
-    return res
+
+STREAM_DEDUP_NATIVE_SQL = """
+SELECT DISTINCT source AS host,
+       md5(COALESCE(array_to_string(
+         regexp_extract_all(lower(COALESCE(text, '')),
+                            '[a-z0-9]+')[1:2], ' '), '')) AS fp
+       -- outer COALESCE: DuckDB array_to_string([]) is NULL where
+       -- Spark array_join([]) is '' — token-less docs must
+       -- fingerprint as md5('') in both engines
+FROM documents
+"""
 
 
 #: NTZ -> epoch µs (session-tz-proof via field extraction — even
@@ -234,45 +182,26 @@ def stream_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "value",
         F.expr(f"timestamp_micros({_NTZ_US})").alias("ts"),
     )
-    drop_dir = tempfile.mkdtemp(prefix="stream_win_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_win_chk_")
-    events.repartitionByRange(4, "ts").write.mode("overwrite").parquet(
-        drop_dir
-    )
-    stream = (
-        spark.readStream.schema("event_type string, value double,"
-                                " ts timestamp")
-        .format("parquet")
-        .load(drop_dir)
-    )
-    win = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
-            .alias("value_cents"),
+
+    def windowed(stream: DataFrame) -> DataFrame:
+        win = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)"))
+                .alias("value_cents"),
+            )
         )
-    )
-    out = win.select(
-        F.unix_micros("w.start").alias("ws_us"),
-        F.unix_micros("w.end").alias("we_us"),
-        "event_type", "n_events", "value_cents",
-    )
-    sink = f"stream_win_sink_{next(_SINK_IDS)}_{os.getpid()}"
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(chk_dir, "chk"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return win.select(
+            F.unix_micros("w.start").alias("ws_us"),
+            F.unix_micros("w.end").alias("we_us"),
+            "event_type", "n_events", "value_cents",
         )
-        q.awaitTermination()
-    finally:
-        _cleanup(drop_dir, chk_dir)
-    return spark.table(sink)
+
+    return _drain(spark, events.repartitionByRange(4, "ts"),
+                  "event_type string, value double, ts timestamp",
+                  windowed)
 
 
 STREAM_EVENTS_WINDOWED_SQL = """
@@ -306,56 +235,25 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docwire_spark.ops.corpus_filter import redact_pii_column
     from docwire_spark.spark.extract import extract_pages
 
-    docs = load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("https://synth.local/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><title>d</title></head><body><p>"),
-                F.coalesce(F.col("text"), F.lit("")),
-                F.lit("</p></body></html>"),
-            ),
-            "UTF-8",
-        ).alias("html"),
-    )
-    drop_dir = tempfile.mkdtemp(prefix="stream_clean_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_clean_chk_")
-    pages.write.mode("overwrite").parquet(drop_dir)
+    def cleaned(stream: DataFrame) -> DataFrame:
+        return redact_pii_column(
+            extract_pages(stream)
+            .withColumn("text", F.col("extracted_text"))
+            .withColumn(
+                "n_tok",
+                F.size(F.expr(TOKENS_EXPR)).cast("bigint"),
+            )
+            .withColumn(
+                "keep_len", (F.col("n_tok") >= 15).cast("int")
+            )
+            .select("url", "text", "n_tok", "keep_len"),
+            "text",
+        )
 
-    stream_pages = (
-        spark.readStream.schema("url string, html binary")
-        .format("parquet")
-        .load(drop_dir)
-    )
-    cleaned = redact_pii_column(
-        extract_pages(stream_pages)
-        .withColumn("text", F.col("extracted_text"))
-        .withColumn(
-            "n_tok",
-            F.size(F.expr(TOKENS_EXPR)).cast("bigint"),
-        )
-        .withColumn(
-            "keep_len", (F.col("n_tok") >= 15).cast("int")
-        )
-        .select("url", "text", "n_tok", "keep_len"),
-        "text",
-    )
-    sink = f"stream_clean_sink_{next(_SINK_IDS)}_{os.getpid()}"
-    try:
-        q = (
-            cleaned.writeStream.format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(chk_dir, "chk"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        _cleanup(drop_dir, chk_dir)
-    return spark.table(sink).select(
-        F.element_at(F.split("url", "/"), -1).cast("bigint").alias("doc_id"),
+    pages = _html_pages(load(spark, sf_dir, "documents"))
+    out = _drain(spark, pages, "url string, html binary", cleaned)
+    return out.select(
+        _doc_id(),
         "n_tok", "keep_len", "n_pii_emails", "n_pii_phones", "n_pii_ips",
         F.col("text").alias("clean_text"),
     )
@@ -385,15 +283,13 @@ FROM documents
 
 QUERIES = {
     "extract_stream_plain": extract_stream_plain,
-    "stream_dedup_stateful": stream_dedup_stateful,
     "stream_dedup_native": stream_dedup_native,
     "stream_events_windowed": stream_events_windowed,
     "stream_corpus_clean": stream_corpus_clean,
 }
 ORACLES = {
     "extract_stream_plain": EXTRACT_STREAM_PLAIN_SQL,
-    "stream_dedup_stateful": STREAM_DEDUP_STATEFUL_SQL,
-    "stream_dedup_native": STREAM_DEDUP_STATEFUL_SQL,
+    "stream_dedup_native": STREAM_DEDUP_NATIVE_SQL,
     "stream_events_windowed": STREAM_EVENTS_WINDOWED_SQL,
     "stream_corpus_clean": STREAM_CORPUS_CLEAN_SQL,
 }

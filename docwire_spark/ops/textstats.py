@@ -15,8 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from docwire_spark.ops.common import (
-    BPE_EXPR, BPE_SQL, TOKENS_EXPR, TOKENS_SQL, let_expr, load,
-    max_multiplicity_expr, with_tokens,
+    BIGRAMS_OF_TS, BPE_EXPR, BPE_SQL, TOKENS_EXPR, TOKENS_SQL, bigrams_sql,
+    let_expr, load, max_multiplicity_expr, with_tokens,
 )
 
 # ---------------------------------------------------------------------------
@@ -203,18 +203,6 @@ SHINGLE3_SQL = (
 )
 
 
-def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = with_tokens(load(spark, sf_dir, "documents", parallelize=True))
-    return docs.select(
-        "doc_id",
-        F.expr("md5(concat_ws(' ', tokens))").alias("fp_md5"),
-        F.coalesce(
-            F.expr(f"array_min(transform({SHINGLE3_EXPR}, s -> md5(s)))"),
-            F.lit(""),
-        ).alias("fp_shingle"),
-    )
-
-
 FINGERPRINT_SQL = f"""
 WITH t AS (
   SELECT doc_id, {TOKENS_SQL} AS tokens FROM documents
@@ -234,52 +222,12 @@ FROM t
 # fractions are the standard repetition filters for web training data)
 # ---------------------------------------------------------------------------
 
-# the CASE guard matters: Spark's sequence(1, 0) yields a DESCENDING
-# [1, 0] (not empty like SQL generate_series), so the unguarded form
-# crashes element_at on 0/1-token documents.  let_expr-bound (see
-# common.let_expr for the O(n^2) inlining hazard)
-_BIGRAMS_EXPR = let_expr(
-    "tokens", "ts",
-    "CASE WHEN size(ts) >= 2 THEN"
-    " transform(sequence(1, size(ts) - 1),"
-    " i -> concat(element_at(ts, i), ' ', element_at(ts, i + 1)))"
-    " ELSE array() END",
-)
-
-
-def repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = with_tokens(load(spark, sf_dir, "documents", parallelize=True)).withColumn(
-        "bg", F.expr(_BIGRAMS_EXPR)
-    )
-    n_tok = F.size("tokens").cast("bigint")
-    n_bg = F.size("bg").cast("bigint")
-    n_bg_distinct = F.size(F.array_distinct("bg")).cast("bigint")
-    top_bg = F.expr(max_multiplicity_expr("bg")).cast("bigint")
-    return docs.select(
-        "doc_id",
-        n_bg.alias("n_bigrams"),
-        F.when(n_bg > 0, F.round((n_bg - n_bg_distinct).cast("double") / n_bg, 6))
-        .otherwise(F.lit(0.0)).alias("dup_bigram_frac"),
-        F.when(
-            n_tok > 0,
-            F.round(
-                (n_tok - F.size(F.array_distinct("tokens"))).cast("double")
-                / n_tok,
-                6,
-            ),
-        ).otherwise(F.lit(0.0)).alias("dup_token_frac"),
-        top_bg.alias("top_bigram_count"),
-    )
-
-
 REPETITION_SQL = f"""
 WITH t AS (
   SELECT doc_id, {TOKENS_SQL} AS tokens FROM documents
 ),
 b AS (
-  SELECT doc_id, tokens,
-         list_transform(generate_series(1, greatest(len(tokens) - 1, 0)),
-                        i -> tokens[i] || ' ' || tokens[i + 1]) AS bg
+  SELECT doc_id, tokens, {bigrams_sql("tokens")} AS bg
   FROM t
 )
 SELECT doc_id,
@@ -300,10 +248,10 @@ FROM b
 
 
 def fingerprint_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fingerprint + repetition in ONE map-side pass (round 4: one
-    driver row covering both ops inside the correctness window).
-    Same columns as the two stand-alone queries, computed from a
-    single tokenization — no join, no shuffle.
+    """Fingerprint + repetition in ONE map-side pass: the columns of
+    ``FINGERPRINT_SQL`` and ``REPETITION_SQL`` (the query's oracle
+    joins the two), computed from a single tokenization — no join, no
+    shuffle.
 
     Perf note (VERDICT r3 #3): the r3-flagged 2.9x/2.1x slowdowns on
     these two ops were re-measured isolated at sf0.1 on a quiet box —
@@ -313,8 +261,10 @@ def fingerprint_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> max) was measured 3-5x SLOWER at this scale (the extra
     doc_id-keyed shuffles dominate), so the linear interpreted
     aggregate() stays — see BENCH/BASELINE.md."""
+    # bigrams let_expr-bound to the tokens (see common.let_expr for
+    # the O(n^2) inlining hazard)
     docs = with_tokens(load(spark, sf_dir, "documents", parallelize=True)).withColumn(
-        "bg", F.expr(_BIGRAMS_EXPR)
+        "bg", F.expr(let_expr("tokens", "ts", BIGRAMS_OF_TS))
     )
     n_tok = F.size("tokens").cast("bigint")
     n_bg = F.size("bg").cast("bigint")
@@ -532,9 +482,9 @@ def _c4_struct_body() -> str:
     priority-ordered per-line classification (punct > short > boiler >
     dup > keep) and the surviving text, identical text both engines
     except the struct/array constructors handled by callers."""
-    # the _BIGRAMS_EXPR lesson: Spark's sequence(1, 0) is a DESCENDING
-    # [1, 0], not empty — unguarded, element_at(ls, 1) throws on
-    # zero-line documents under ANSI
+    # the common.BIGRAMS_OF_TS lesson: Spark's sequence(1, 0) is a
+    # DESCENDING [1, 0], not empty — unguarded, element_at(ls, 1)
+    # throws on zero-line documents under ANSI
     idx = ("CASE WHEN size(ls) = 0 THEN CAST(array() AS ARRAY<INT>)"
            " ELSE sequence(1, size(ls)) END")
     line = "element_at(ls, i)"
@@ -686,8 +636,6 @@ QUERIES = {
     "text_token_stats": token_stats,
     "text_quality": quality_score,
     "text_lang_id": lang_id,
-    "text_fingerprint": fingerprint,
-    "text_repetition": repetition,
     "text_ngram_topk": ngram_topk,
     "text_normalize": text_normalize,
     "c4_line_filter": c4_line_filter,
@@ -699,8 +647,6 @@ ORACLES = {
     "text_token_stats": TOKEN_STATS_SQL,
     "text_quality": QUALITY_SCORE_SQL,
     "text_lang_id": LANG_ID_SQL,
-    "text_fingerprint": FINGERPRINT_SQL,
-    "text_repetition": REPETITION_SQL,
     "text_ngram_topk": NGRAM_TOPK_SQL,
     "text_normalize": TEXT_NORMALIZE_SQL,
     "c4_line_filter": C4_LINE_FILTER_SQL,

@@ -52,10 +52,9 @@ def drop_zip_importers() -> None:
     """Remove every ``zipimporter`` from ``sys.path_importer_cache`` so
     the next task's ``importlib.invalidate_caches()`` re-reads no zip
     directory.  :func:`map_batches` calls it at the start of every
-    task; the package's two other Python task bodies (the
-    ``foreachPartition`` sink in ``post_sink`` and the
-    ``applyInPandasWithState`` function in ``dedup_stream``) call it
-    first themselves."""
+    task; the package's one other Python task body (the
+    ``foreachPartition`` sink in ``post_sink``) calls it first
+    itself."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):

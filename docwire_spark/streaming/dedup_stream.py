@@ -1,140 +1,26 @@
-"""Stateful streaming dedup: first-seen URL filtering with
-``applyInPandasWithState``.
+"""Streaming dedup: first-seen URL filtering on Spark's native state
+store.
 
 The "keep up with the crawl" companion to the batch dedup ops: as page
-batches stream in, each group keeps the set of content fingerprints it
-has already emitted in checkpointed state, and only first-seen
-documents pass through.  State survives query restarts via the stream
-checkpoint, so a killed ingest resumes without re-emitting (or losing)
-documents — the stateful analog of the batch CheckpointedWriter's
-idempotent commits.
-
-State layout (round-3 redesign; the round-2 version kept ONE
-ever-growing array per host, fully rewritten each batch):
-
-- **Group key = (host, fp-bucket)**: the fingerprint is bucketed with
-  ``pmod(crc32(fp), n_buckets)``, so a hot host's state is spread
-  over ``n_buckets`` groups instead of one, each array is ~1/n_buckets
-  the size, and the per-batch state rewrite is proportional to the
-  group's share — while dedup stays EXACT (a fingerprint always lands
-  in the same group).
-- **Hard per-group cap** ``max_state_per_group``: beyond it the
-  (deterministically sorted) set is truncated, bounding state memory
-  at the cost of re-admitting evicted fingerprints — the standard
-  bounded-memory dedup trade; size it so cap * n_buckets * n_hosts
-  covers the retention horizon.
-- **Optional TTL** ``ttl_ms``: ProcessingTimeTimeout drops a group's
-  state after the idle period, the state-store-native retention bound.
-
-For exact UNBOUNDED dedup prefer ``stream_dedup_native`` below —
-Spark's ``dropDuplicates`` keeps one O(1) state-store row per
-fingerprint (RocksDB-backed at cluster scale) instead of a per-group
-array, and ``dropDuplicatesWithinWatermark`` bounds it by event time.
-The applyInPandasWithState variant exists for per-host custom
-policies (crawl budgets, robots windows) that need the group state.
+batches stream in, ``dropDuplicates`` keeps one O(1) state-store row
+per (host, content fingerprint) it has already emitted
+(RocksDB-backed at cluster scale), and only first-seen documents pass
+through.  State survives query restarts via the stream checkpoint, so
+a killed ingest resumes without re-emitting (or losing) documents —
+the stateful analog of the batch CheckpointedWriter's idempotent
+commits.  ``dropDuplicatesWithinWatermark`` bounds the state by event
+time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType, StringType, StructField, StructType,
-)
-
-from docwire_spark.spark.session import drop_zip_importers
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("host", StringType()),
-        StructField("url", StringType()),
-        StructField("fp", StringType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [StructField("seen", ArrayType(StringType()))]
-)
-
-#: fingerprint buckets per host — state per group ~ docs/(hosts*buckets)
-N_BUCKETS = 64
-
-#: hard cap on fingerprints retained per (host, bucket) group
-MAX_STATE_PER_GROUP = 100_000
-
-
-def _dedup_state_fn(key, pdf_iter, state):
-    drop_zip_importers()
-    import pandas as pd
-
-    host = key[0]
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        (seen_list,) = state.get
-        seen = set(seen_list or [])
-    else:
-        seen = set()
-    out_host, out_url, out_fp = [], [], []
-    for pdf in pdf_iter:
-        for url, fp in zip(pdf["url"], pdf["fp"]):
-            if fp not in seen:
-                seen.add(fp)
-                out_host.append(host)
-                out_url.append(url)
-                out_fp.append(fp)
-    # sorted -> state bytes are independent of row arrival order;
-    # truncation at the cap is therefore deterministic too
-    state.update((sorted(seen)[:MAX_STATE_PER_GROUP],))
-    yield pd.DataFrame({"host": out_host, "url": out_url, "fp": out_fp})
-
-
-def stream_dedup(
-    pages: DataFrame,
-    n_buckets: int = N_BUCKETS,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming DataFrame (url, html, ...) -> first-seen rows only.
-
-    Fingerprint = md5 of the page bytes (exact dedup); the group key
-    is (url host, fingerprint bucket) so per-host crawl policies can
-    hang off the same state layout while hot hosts shard across
-    ``n_buckets`` state rows."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = pages.select(
-        F.parse_url(F.col("url"), F.lit("HOST")).alias("host"),
-        "url",
-        F.md5(F.col("html")).alias("fp"),
-    ).withColumn(
-        "bucket", F.pmod(F.crc32(F.col("fp")), F.lit(n_buckets))
-    )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    fn = _dedup_state_fn
-    if ttl_ms is not None:
-        def fn(key, pdf_iter, state, _ttl=ttl_ms):  # noqa: F811
-            if not state.hasTimedOut:
-                state.setTimeoutDuration(_ttl)
-            yield from _dedup_state_fn(key, pdf_iter, state)
-
-    return keyed.groupBy("host", "bucket").applyInPandasWithState(
-        fn,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        timeout,
-    )
 
 
 def stream_dedup_native(pages: DataFrame, watermark=None) -> DataFrame:
-    """Exact streaming dedup on Spark's native per-key state store:
-    one O(1) state row per fingerprint (RocksDB-backed on a cluster)
-    instead of a per-group array — the scale path when no custom
-    per-host policy is needed.
+    """Streaming DataFrame (url, html, ...) -> first-seen
+    (host, url, fp) rows only; fp = md5 of the page bytes (exact
+    dedup).
 
     ``watermark=("ts", "7 days")`` switches to
     ``dropDuplicatesWithinWatermark`` so fingerprint state is evicted

@@ -100,11 +100,6 @@ def test_task_prompts_match_reference_strings():
     )
 
 
-def test_local_backend_is_env_blocked():
-    with pytest.raises(NotImplementedError):
-        AB.LocalModelBackend("prompt")
-
-
 # --------------------------------------------------------------------------
 # mock OpenAI-wire server + end-to-end transforms
 # --------------------------------------------------------------------------

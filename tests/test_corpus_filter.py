@@ -106,7 +106,7 @@ def test_degenerate_documents_never_crash(spark, tmp_path_factory):
 
     from docwire_spark.ops.corpus_filter import corpus_quality_filter
     from docwire_spark.ops.textstats import (
-        quality_score, repetition, token_stats,
+        fingerprint_repetition, quality_score, token_stats,
     )
 
     d = str(tmp_path_factory.mktemp("edgedocs"))
@@ -121,7 +121,7 @@ def test_degenerate_documents_never_crash(spark, tmp_path_factory):
         for r in corpus_quality_filter(spark, d).collect()
     }
     assert keeps[1] == 0 and keeps[2] == 0 and keeps[3] == 0
-    for fn in (repetition, token_stats, quality_score):
+    for fn in (fingerprint_repetition, token_stats, quality_score):
         assert len(fn(spark, d).collect()) == 4  # no crash, all rows
 
 

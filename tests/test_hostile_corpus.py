@@ -78,7 +78,8 @@ def test_all_corpus_ops_survive_hostile_rows(spark, hostile_dir):
         assert n >= 0
         ran.append(name)
     # the sweep must actually cover the corpus ops, not silently skip
-    assert {"dedup_minhash_lsh", "dedup_chunk_exact", "text_repetition",
+    assert {"dedup_minhash_lsh", "dedup_chunk_exact",
+            "text_fingerprint_repetition",
             "corpus_quality_filter", "bm25_search", "decontaminate",
             "similarity_ann_ivf", "sample_stratified",
             "source_salted_agg"} <= set(ran)

@@ -62,8 +62,11 @@ def hostile_dir(spark, tmp_path_factory):
     vecs = [(i, [float((i * 7 + j) % 13) - 6.0 for j in range(64)], i % 8)
             for i in range(37)]
     # degenerate embedding rows a 10^12-row table WILL contain: failed
-    # encoder call (NULL), empty array, wrong dimension
-    vecs += [(37, None, 1), (38, [], 2), (39, [1.0, 2.0], 3)]
+    # encoder call (NULL), empty array, wrong dimension, a NULL element
+    # (41 is vector 0 with its first element NULL: a near-dup of 0 in
+    # DuckDB, whose list_sum skips the NULL, and a NaN norm in Spark)
+    vecs += [(37, None, 1), (38, [], 2), (39, [1.0, 2.0], 3),
+             (40, [None] + [0.5] * 63, 4), (41, [None] + vecs[0][1][1:], 5)]
     spark.createDataFrame(
         vecs, "vec_id bigint, embedding array<float>, label int"
     ).coalesce(1).write.parquet(os.path.join(d, "embeddings.parquet"))
@@ -79,9 +82,10 @@ def test_all_corpus_ops_match_oracles_on_hostile_rows(spark, hostile_dir):
     coalesce missing from its oracle, and the embedding ops crashing
     on NULL/wrong-dimension vectors before the shared validity guard.
 
-    Embedding rows that are NULL / empty / mis-dimensioned must be
-    DROPPED identically by both engines (dedup.EMB_VALID_SQL); token
-    ops must agree on NULL/empty/whitespace-only text."""
+    Embedding rows that are NULL / empty / mis-dimensioned or hold a
+    NULL element must be DROPPED identically by both engines
+    (dedup.EMB_VALID_SQL); token ops must agree on
+    NULL/empty/whitespace-only text."""
     import __spark_entry__ as entry
     from docwire_spark.ops.common import release_persisted
 
@@ -121,8 +125,8 @@ def test_all_corpus_ops_match_oracles_on_hostile_rows(spark, hostile_dir):
             "bpe_encode", "lm_perplexity", "inverted_index",
             "url_canonicalize", "bloom_url_blocklist",
             "multimodal_meta", "multimodal_frames",
-            "extract_stream_plain", "stream_dedup_stateful",
-            "stream_dedup_native", "stream_corpus_clean"} <= set(ran)
+            "extract_stream_plain", "stream_dedup_native",
+            "stream_corpus_clean"} <= set(ran)
 
 
 @pytest.fixture(scope="module")

@@ -185,7 +185,7 @@ def test_lambda_bodies_never_capture_tokenization(spark):
         corpus_quality_filter, decontaminate,
     )
     from docwire_spark.ops.dedup import dedup_chunk_exact
-    from docwire_spark.ops.textstats import fingerprint, repetition
+    from docwire_spark.ops.textstats import fingerprint_repetition
 
     def _lambda_spans(plan):
         """Balanced-paren extraction of every lambdafunction(...) span
@@ -215,12 +215,13 @@ def test_lambda_bodies_never_capture_tokenization(spark):
     filtered = corpus_quality_filter(spark, SF_DIR).filter("keep = 1")
     _no_regex_inside_lambda(filtered, "corpus_quality_filter+filter")
     _no_regex_inside_lambda(
-        repetition(spark, SF_DIR).filter("dup_bigram_frac > 0.5"),
-        "repetition+filter",
+        fingerprint_repetition(spark, SF_DIR).filter(
+            "dup_bigram_frac > 0.5"),
+        "fingerprint_repetition+filter(repetition)",
     )
     _no_regex_inside_lambda(
-        fingerprint(spark, SF_DIR).filter("fp_shingle != ''"),
-        "fingerprint+filter",
+        fingerprint_repetition(spark, SF_DIR).filter("fp_shingle != ''"),
+        "fingerprint_repetition+filter(fingerprint)",
     )
     _no_regex_inside_lambda(
         dedup_chunk_exact(spark, SF_DIR).filter("n_dup_chunks > 0"),

@@ -1,4 +1,5 @@
-"""Stateful streaming dedup: cross-batch state + restart recovery.
+"""Streaming dedup on the native state store: cross-batch state +
+restart recovery, and watermark-bounded state.
 
 Two separate availableNow runs over the same checkpoint: batch 2
 contains duplicates of batch 1 — the restarted query must suppress
@@ -10,8 +11,6 @@ test).
 from __future__ import annotations
 
 import os
-
-import pytest
 
 
 def _write_pages(spark, path, rows):
@@ -26,7 +25,7 @@ def _write_pages(spark, path, rows):
 def _run_once(spark, src, chk, out):
     """One availableNow drain into a fault-tolerant parquet sink (the
     memory sink does not support checkpoint recovery)."""
-    from docwire_spark.streaming.dedup_stream import stream_dedup
+    from docwire_spark.streaming.dedup_stream import stream_dedup_native
 
     pages = (
         spark.readStream.schema("url string, html binary")
@@ -34,7 +33,7 @@ def _run_once(spark, src, chk, out):
         .load(src)
     )
     q = (
-        stream_dedup(pages)
+        stream_dedup_native(pages)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", chk)
@@ -79,117 +78,6 @@ def test_stream_dedup_across_restarts(spark, tmp_path):
     assert len(got2) == 4 and len(new) == 1
     ((host, url, _fp),) = new
     assert host == "a.example" and url.endswith("/5")
-
-
-class FakeState:
-    exists = False
-    hasTimedOut = False
-
-    def __init__(self):
-        self.updated = None
-
-    @property
-    def get(self):
-        raise AssertionError("no state yet")
-
-    def update(self, v):
-        self.updated = v
-
-
-def test_stream_dedup_is_deterministic_state(spark, tmp_path):
-    """State stores the sorted fingerprint set — a restart after crash
-    between batches yields identical output regardless of row order."""
-    import pandas as pd
-
-    from docwire_spark.streaming.dedup_stream import _dedup_state_fn
-
-    st = FakeState()
-    out = list(_dedup_state_fn(
-        ("h", 0),
-        iter([pd.DataFrame({"url": ["u1", "u2", "u3"],
-                            "fp": ["b", "a", "b"]})]),
-        st,
-    ))
-    assert list(out[0]["fp"]) == ["b", "a"]
-    assert st.updated == (["a", "b"],)
-
-
-def test_stream_dedup_state_is_bounded(monkeypatch):
-    """Per-group state never exceeds MAX_STATE_PER_GROUP, no matter
-    how many fingerprints flow through the group (round-2 VERDICT #4:
-    the old layout grew one array per host without bound)."""
-    import pandas as pd
-
-    from docwire_spark.streaming import dedup_stream
-
-    monkeypatch.setattr(dedup_stream, "MAX_STATE_PER_GROUP", 4)
-    st = FakeState()
-    fps = [f"fp{i:03d}" for i in range(50)]
-    out = list(dedup_stream._dedup_state_fn(
-        ("h", 0),
-        iter([pd.DataFrame({"url": [f"u{i}" for i in range(50)],
-                            "fp": fps})]),
-        st,
-    ))
-    assert len(out[0]) == 50           # all first-seen rows emitted
-    (kept,) = st.updated
-    assert len(kept) == 4              # ...but state is capped
-    assert kept == sorted(fps)[:4]     # deterministic truncation
-
-
-def test_stream_dedup_timeout_removes_state():
-    """ProcessingTimeTimeout path: a timed-out group drops its state
-    and emits nothing."""
-    removed = []
-
-    class TimedOutState(FakeState):
-        exists = True
-        hasTimedOut = True
-
-        def remove(self):
-            removed.append(True)
-
-    from docwire_spark.streaming.dedup_stream import _dedup_state_fn
-
-    out = list(_dedup_state_fn(("h", 0), iter([]), TimedOutState()))
-    assert out == [] and removed == [True]
-
-
-def test_stream_dedup_native_matches_stateful(spark, tmp_path):
-    """The native dropDuplicates path (O(1) state-store rows per
-    fingerprint — the unbounded-exact scale path) yields the same
-    (host, fp) survivor set as the custom stateful operator."""
-    import os
-
-    from docwire_spark.streaming.dedup_stream import stream_dedup_native
-
-    src = str(tmp_path / "nsrc")
-    os.makedirs(src, exist_ok=True)
-    _write_pages(spark, src, [
-        ("https://a.example/1", "alpha"),
-        ("https://a.example/2", "beta"),
-        ("https://b.example/1", "alpha"),
-        ("https://a.example/3", "alpha"),
-    ])
-    pages = (
-        spark.readStream.schema("url string, html binary")
-        .format("parquet")
-        .load(src)
-    )
-    out = str(tmp_path / "nout")
-    q = (
-        stream_dedup_native(pages)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "nchk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r["host"], r["fp"]) for r in spark.read.parquet(out).collect()}
-    assert len(got) == 3
-    assert {h for h, _ in got} == {"a.example", "b.example"}
 
 
 def test_stream_dedup_native_watermark_bounded(spark, tmp_path):

@@ -67,10 +67,12 @@ def test_no_zip_importer_survives_invalidate_caches(spark, tmp_path):
 
 def _udf_calls():
     """(path, called name, outermost enclosing function) for every call
-    of ``mapInPandas``, ``mapInArrow`` or ``drop_zip_importers`` in the
-    package and job sources."""
+    of ``mapInPandas``, ``applyInPandas``, ``applyInPandasWithState``,
+    ``mapInArrow`` or ``drop_zip_importers`` in the package and job
+    sources."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    names = {"mapInPandas", "mapInArrow", "drop_zip_importers"}
+    names = {"mapInPandas", "applyInPandas", "applyInPandasWithState",
+             "mapInArrow", "drop_zip_importers"}
     calls = []
     for top in ("docwire_spark", "jobs"):
         for dirpath, _dirs, files in os.walk(os.path.join(root, top)):
@@ -95,13 +97,14 @@ def _udf_calls():
 
 def test_one_arrow_boundary():
     """Every Python batch kernel goes through ``session.map_batches``:
-    no ``mapInPandas``, ``mapInArrow`` only inside the helper, and the
-    zip finders dropped only by the helper and the two task bodies that
-    have no Arrow-map form (the ``foreachPartition`` sink and the
-    ``applyInPandasWithState`` function)."""
+    no pandas UDF (``mapInPandas``, ``applyInPandas``,
+    ``applyInPandasWithState``), ``mapInArrow`` only inside the helper,
+    and the zip finders dropped only by the helper and the one task
+    body that has no Arrow-map form (the ``foreachPartition`` sink)."""
     calls = _udf_calls()
     session = os.path.join("docwire_spark", "spark", "session.py")
-    assert [c for c in calls if c[1] == "mapInPandas"] == []
+    pandas_udfs = {"mapInPandas", "applyInPandas", "applyInPandasWithState"}
+    assert [c for c in calls if c[1] in pandas_udfs] == []
     assert [c for c in calls if c[1] == "mapInArrow"] == [
         (session, "mapInArrow", "map_batches")
     ]
@@ -109,8 +112,6 @@ def test_one_arrow_boundary():
         (session, "drop_zip_importers", "map_batches"),
         (os.path.join("docwire_spark", "spark", "post_sink.py"),
          "drop_zip_importers", "post_rows"),
-        (os.path.join("docwire_spark", "streaming", "dedup_stream.py"),
-         "drop_zip_importers", "_dedup_state_fn"),
     ])
 
 
