@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import EMB_VALID_SQL, load_valid_embeddings
+from .common import persist_tracked
+from .dedup import _COS, EMB_VALID_SQL, NORM_FOLD, load_valid_embeddings
 
 K = 10
 DIM = 64
@@ -40,7 +41,7 @@ ITERS = 2
 
 
 def _assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """Add ``cluster`` = argmin_c dist(emb, c), ties to lower cid.
+    """Add ``cluster`` = argmin_c dist(v, c), ties to lower cid.
 
     Centroids are plan literals — the broadcast-of-small-side analog
     for expression evaluation; the scan streams, nothing shuffles."""
@@ -48,7 +49,7 @@ def _assign(vecs: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
     for cid, cvec in cents:
         arr = F.array(*[F.lit(float(x)) for x in cvec])
         d = F.aggregate(
-            F.zip_with("emb", arr, lambda a, b: (a - b) * (a - b)),
+            F.zip_with("v", arr, lambda a, b: (a - b) * (a - b)),
             F.lit(0.0).cast("double"),
             lambda s, x: s + x,
         )
@@ -62,7 +63,7 @@ def _recompute(assigned: DataFrame) -> list[tuple[int, list[float]]]:
     rows = (
         assigned.groupBy("cluster")
         .agg(*[
-            F.round(F.avg(F.col("emb")[i]), 9).alias(f"m{i}")
+            F.round(F.avg(F.col("v")[i]), 9).alias(f"m{i}")
             for i in range(DIM)
         ])
         .collect()
@@ -72,20 +73,9 @@ def _recompute(assigned: DataFrame) -> list[tuple[int, list[float]]]:
     )
 
 
-def _load_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_valid_embeddings(spark, sf_dir)
-        .select(
-            "vec_id",
-            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            .alias("emb"),
-        )
-    )
-
-
 def _lloyd_assign(vecs: DataFrame) -> DataFrame:
     """ITERS Lloyd iterations from deterministic seeds (vec_id < K);
-    returns the final per-point assignment (vec_id, emb, cluster)."""
+    returns the final per-point assignment (vec_id, v, cluster)."""
     seeds = (
         vecs.filter(F.col("vec_id") < K)
         .orderBy("vec_id")
@@ -96,9 +86,9 @@ def _lloyd_assign(vecs: DataFrame) -> DataFrame:
         # the oracle's c0 cross join makes the assignment the EMPTY
         # relation — return it, never crash on int(None) downstream
         return vecs.sparkSession.createDataFrame(
-            [], "vec_id bigint, emb array<double>, cluster int"
+            [], "vec_id bigint, v array<double>, cluster int"
         )
-    cents = [(int(r["vec_id"]), list(r["emb"])) for r in seeds]
+    cents = [(int(r["vec_id"]), list(r["v"])) for r in seeds]
     assigned = None
     for _ in range(ITERS):
         assigned = _assign(vecs, cents)
@@ -109,7 +99,7 @@ def _lloyd_assign(vecs: DataFrame) -> DataFrame:
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd iterations from deterministic seeds (vec_id < K);
     returns integer per-cluster statistics."""
-    assigned = _lloyd_assign(_load_vecs(spark, sf_dir))
+    assigned = _lloyd_assign(load_valid_embeddings(spark, sf_dir))
     return (
         assigned.groupBy(F.col("cluster").cast("int").alias("cluster_id"))
         .agg(
@@ -195,45 +185,23 @@ FROM a2 GROUP BY cluster
 
 SEMDEDUP_TAU = 0.3
 
-#: left-fold norm/dot mirroring Spark's aggregate() exactly; the
-#: zero-norm guard matters for correctness AND parity: an all-zero
-#: embedding (failed encode row) gives 0/0, which Spark evaluates to
-#: NaN (and NaN >= tau is TRUE in Spark's ordering — silent wrong
-#: drops) while DuckDB gives NULL; the CASE makes both engines yield
-#: NULL, which both filters reject
-NORM_FOLD = "sqrt(aggregate(emb, 0D, (acc, x) -> acc + x * x))"
-_COS_PAIR = (
-    "CASE WHEN na * nb > 0 THEN"
-    " round(aggregate(zip_with(ea, eb, (x, y) -> x * y), 0D,"
-    " (acc, x) -> acc + x) / (na * nb), 6) END"
-)
-
-
 def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster_id, keep_flag): k-means clusters + in-cluster
     cosine pruning, keep-min per semantic-duplicate neighborhood."""
-    from .common import persist_tracked
-
-    vecs = _load_vecs(spark, sf_dir)
+    vecs = load_valid_embeddings(spark, sf_dir)
     # persisted: the Lloyd loop already scanned it; the pair join
     # consumes it twice more
     a = persist_tracked(
         _lloyd_assign(vecs).withColumn("norm", F.expr(NORM_FOLD))
     )
+    side = a.select("cluster", "vec_id", "v", "norm")
+    # the cosine's zero-norm guard keeps an all-zero embedding (failed
+    # encode row) inert in both engines (see dedup.cos_expr)
     pairs = (
-        a.select(
-            F.col("cluster"), F.col("vec_id").alias("va"),
-            F.col("emb").alias("ea"), F.col("norm").alias("na"),
-        )
-        .join(
-            a.select(
-                F.col("cluster"), F.col("vec_id").alias("vb"),
-                F.col("emb").alias("eb"), F.col("norm").alias("nb"),
-            ),
-            "cluster",
-        )
+        side.toDF("cluster", "va", "qv", "qnorm")
+        .join(side.toDF("cluster", "vb", "nv", "nnorm"), "cluster")
         .filter(F.col("va") < F.col("vb"))
-        .withColumn("cos", F.expr(_COS_PAIR))
+        .withColumn("cos", F.expr(_COS))
         .filter(F.col("cos") >= F.lit(SEMDEDUP_TAU))
     )
     drops = pairs.select(F.col("vb").alias("vec_id")).distinct()

@@ -182,15 +182,32 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
+#: (session, name) of the memory-sink tables streaming queries drained
+#: into; each holds its rows in the driver until its view is dropped.
+_SINKS: list[tuple[SparkSession, str]] = []
+
+
+def track_sink(spark: SparkSession, name: str) -> None:
+    """Register a memory-sink table for the next release_persisted()."""
+    _SINKS.append((spark, name))
+
+
 def release_persisted() -> None:
     """Unpersist every table cached by query builders since the last
-    release, and purge tracked scratch dirs.  Harnesses (bench.py,
-    tools/check_oracles.py) call this after consuming each query's
-    result — so a returned DataFrame may lazily read from a tracked
-    scratch dir, but only until the harness moves to the next query."""
+    release, drop tracked memory-sink views, and purge tracked scratch
+    dirs.  Harnesses (bench.py, tools/check_oracles.py) call this after
+    consuming each query's result — so a returned DataFrame may lazily
+    read from a tracked sink or scratch dir, but only until the harness
+    moves to the next query."""
     while _PERSISTED:
         try:
             _PERSISTED.pop().unpersist()
+        except Exception:
+            pass
+    while _SINKS:
+        spark, name = _SINKS.pop()
+        try:
+            spark.catalog.dropTempView(name)
         except Exception:
             pass
     _purge_scratch()

@@ -30,84 +30,93 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from docwire_spark.ops.common import (
     BROADCAST_HEAVY_ROW_LIMIT,
-    broadcast_if_small,
-    load,
     persist_tracked,
 )
 from docwire_spark.ops.dedup import (
-    _COS, EMB_BAND_SIZE, EMB_DIM, EMB_N_BANDS, EMB_VALID_SQL, NORM_CODEGEN,
-    _emb_planes, banded_embeddings, load_valid_embeddings,
+    _COS, EMB_BAND_CTES, EMB_VECS_SQL, NORM_FOLD, _join_ends,
+    banded_embeddings, cos_expr, dot_sql, load_valid_embeddings,
 )
 
-DIM = EMB_DIM
 TOPK = 10
 LSH_TOPK = 5
 N_QUERIES = 10
 LSH_N_QUERIES = 20
 
 
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load_valid_embeddings(spark, sf_dir)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("norm", F.expr(NORM_CODEGEN))
-    )
-
-
-def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _vectors(spark, sf_dir)
-    queries = vecs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    cands = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("nv"),
-        F.col("norm").alias("nnorm"),
-    )
-    scored = (
-        F.broadcast(queries)
-        .crossJoin(cands)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.expr(_COS))
-    )
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(query_id, neighbor_id, rank, cos_sim)`` per
+    query of the ``scored`` pairs: cosine descending, ties to the lower
+    neighbor id."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOPK)
+        .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cos_sim")
     )
 
 
-_DOT_SQL = (
-    "list_sum(list_transform(generate_series(1, 64), i -> a.v[i] * b.v[i]))"
-)
+def _score_topk(cand: DataFrame, vn: DataFrame, n_vecs: int,
+                n_queries: int, k: int) -> DataFrame:
+    """Exact-score the ``(query_id, neighbor_id)`` candidates of an ANN
+    query against the ``(vec_id, v, norm)`` table ``vn`` of ``n_vecs``
+    rows, and keep each query's top ``k``.  The query vectors are
+    pre-filtered to the O(1) query set (``vec_id < n_queries``), so
+    their broadcast is always safe; the neighbor vectors are O(corpus)
+    and broadcast only under the heavy cap — past it the back-join
+    shuffles on neighbor_id (bucketed-join shape at cluster scale)."""
+    qvecs = vn.filter(F.col("vec_id") < n_queries).toDF(
+        "query_id", "qv", "qnorm"
+    )
+    scored = _join_ends(
+        cand.join(F.broadcast(qvecs), "query_id"), vn, n_vecs,
+        BROADCAST_HEAVY_ROW_LIMIT, ("neighbor_id", "nv", "nnorm"),
+    ).withColumn("cos_sim", F.expr(_COS))
+    return _rank_topk(scored, k)
+
+
+def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    vecs = load_valid_embeddings(spark, sf_dir).withColumn(
+        "norm", F.expr(NORM_FOLD)
+    )
+    queries = vecs.filter(F.col("vec_id") < N_QUERIES).toDF(
+        "query_id", "qv", "qnorm"
+    )
+    scored = (
+        F.broadcast(queries)
+        .crossJoin(vecs.toDF("neighbor_id", "nv", "nnorm"))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cos_sim", F.expr(_COS))
+    )
+    return _rank_topk(scored, TOPK)
+
+
+_DOT_SQL = dot_sql("a.v", "b.v")
+
+
+def _topk_sql(k: int) -> str:
+    """DuckDB: the top-``k`` tail of each similarity oracle, over its
+    ``scored(query_id, neighbor_id, cos_sim)`` CTE."""
+    return f"""SELECT query_id, neighbor_id,
+       CAST(row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos_sim DESC, neighbor_id)
+            AS BIGINT) AS rank,
+       cos_sim
+FROM scored
+QUALIFY rank <= {k}
+"""
+
 
 TOPK_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)))
-           AS norm
-  FROM embeddings
-  WHERE {EMB_VALID_SQL}
-),
+WITH {EMB_VECS_SQL},
 scored AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          round({_DOT_SQL} / (a.norm * b.norm), 6) AS cos_sim
   FROM e a JOIN e b ON b.vec_id <> a.vec_id
   WHERE a.vec_id < {N_QUERIES}
 )
-SELECT query_id, neighbor_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id)
-            AS BIGINT) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {TOPK}
-"""
+{_topk_sql(TOPK)}"""
 
 
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,65 +139,12 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    vn = banded.select("vec_id", "v", "norm")
-    # query-side vectors: pre-filtered to the O(1) query set, so the
-    # unconditional broadcast is always safe.  Neighbor-side vectors
-    # are O(corpus) — hint only while the measured count stays under
-    # the heavy cap; past it the back-join shuffles on neighbor_id
-    # (bucketed-join shape at cluster scale).
-    qvecs = vn.filter(F.col("vec_id") < LSH_N_QUERIES)
-    scored = (
-        cand.join(
-            F.broadcast(qvecs.select(F.col("vec_id").alias("query_id"),
-                                     F.col("v").alias("qv"),
-                                     F.col("norm").alias("qnorm"))),
-            "query_id",
-        )
-        .join(
-            broadcast_if_small(
-                vn.select(F.col("vec_id").alias("neighbor_id"),
-                          F.col("v").alias("nv"),
-                          F.col("norm").alias("nnorm")),
-                n_vecs, BROADCAST_HEAVY_ROW_LIMIT),
-            "neighbor_id",
-        )
-        .withColumn("cos_sim", F.expr(_COS))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= LSH_TOPK)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _score_topk(cand, banded.select("vec_id", "v", "norm"), n_vecs,
+                       LSH_N_QUERIES, LSH_TOPK)
 
 
-def _ann_lsh_sql() -> str:
-    values = ",".join(
-        "(" + str(p) + ", [" + ",".join(str(w) for w in row) + "])"
-        for p, row in enumerate(_emb_planes())
-    )
-    dot = (
-        f"list_sum(list_transform(generate_series(1, {DIM}),"
-        " i -> v[i] * wts[i]))"
-    )
-    return f"""
-WITH w(p, wts) AS (VALUES {values}),
-e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)))
-           AS norm
-  FROM embeddings
-  WHERE {EMB_VALID_SQL}
-),
-proj AS (
-  SELECT e.vec_id, p // {EMB_BAND_SIZE} AS band,
-         CAST(sum(CASE WHEN {dot} > 0
-                       THEN (1 << (p % {EMB_BAND_SIZE})) ELSE 0 END)
-              AS INT) AS key
-  FROM e, w GROUP BY e.vec_id, p // {EMB_BAND_SIZE}
-),
+ANN_LSH_SQL = f"""
+WITH {EMB_BAND_CTES},
 cand AS (
   SELECT DISTINCT q.vec_id AS query_id, p.vec_id AS neighbor_id
   FROM proj p JOIN proj q ON p.band = q.band AND p.key = q.key
@@ -202,14 +158,7 @@ scored AS (
   JOIN e a ON a.vec_id = c.query_id
   JOIN e b ON b.vec_id = c.neighbor_id
 )
-SELECT query_id, neighbor_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id)
-            AS BIGINT) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {LSH_TOPK}
-"""
+{_topk_sql(LSH_TOPK)}"""
 
 
 # ---------------------------------------------------------------------------
@@ -236,22 +185,17 @@ IVF_NPROBE = 4
 IVF_TOPK = 5
 IVF_N_QUERIES = 20
 
-_COS_CENT = (
-    "CASE WHEN norm * cnorm > 0 THEN"
-    " round(aggregate(zip_with(v, cv, (x, y) -> x * y), 0D,"
-    " (acc, x) -> acc + x) / (norm * cnorm), 6) END"
-)
+_COS_CENT = cos_expr("v", "cv", "norm", "cnorm")
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vn = persist_tracked(_vectors(spark, sf_dir))
+    vn = persist_tracked(
+        load_valid_embeddings(spark, sf_dir)
+        .withColumn("norm", F.expr(NORM_FOLD))
+    )
     n_vecs = vn.count()
     cents = F.broadcast(
-        vn.filter(F.col("vec_id") < K_CENTROIDS).select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("norm").alias("cnorm"),
-        )
+        vn.filter(F.col("vec_id") < K_CENTROIDS).toDF("cid", "cv", "cnorm")
     )
     csim = vn.crossJoin(cents).withColumn("c_sim", F.expr(_COS_CENT))
     # argmax centroid per vector: max(struct(c_sim, -cid)) ==
@@ -278,56 +222,18 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    scored = (
-        cand.join(
-            F.broadcast(
-                vn.filter(F.col("vec_id") < IVF_N_QUERIES).select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("v").alias("qv"),
-                    F.col("norm").alias("qnorm"),
-                )
-            ),
-            "query_id",
-        )
-        .join(
-            broadcast_if_small(
-                vn.select(F.col("vec_id").alias("neighbor_id"),
-                          F.col("v").alias("nv"),
-                          F.col("norm").alias("nnorm")),
-                n_vecs, BROADCAST_HEAVY_ROW_LIMIT),
-            "neighbor_id",
-        )
-        .withColumn("cos_sim", F.expr(_COS))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-    )
+    return _score_topk(cand, vn, n_vecs, IVF_N_QUERIES, IVF_TOPK)
 
-
-_CDOT_SQL = (
-    "list_sum(list_transform(generate_series(1, 64), i -> e.v[i] * c.cv[i]))"
-)
 
 ANN_IVF_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x)))
-           AS norm
-  FROM embeddings
-  WHERE {EMB_VALID_SQL}
-),
+WITH {EMB_VECS_SQL},
 c AS (
   SELECT vec_id AS cid, v AS cv, norm AS cnorm FROM e
   WHERE vec_id < {K_CENTROIDS}
 ),
 csim AS (
   SELECT e.vec_id, c.cid,
-         round({_CDOT_SQL} / (e.norm * c.cnorm), 6) AS c_sim
+         round({dot_sql('e.v', 'c.cv')} / (e.norm * c.cnorm), 6) AS c_sim
   FROM e, c
 ),
 asg AS (
@@ -355,14 +261,7 @@ scored AS (
   JOIN e a ON a.vec_id = cd.query_id
   JOIN e b ON b.vec_id = cd.neighbor_id
 )
-SELECT query_id, neighbor_id,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, neighbor_id)
-            AS BIGINT) AS rank,
-       cos_sim
-FROM scored
-QUALIFY rank <= {IVF_TOPK}
-"""
+{_topk_sql(IVF_TOPK)}"""
 
 
 QUERIES = {
@@ -373,6 +272,6 @@ QUERIES = {
 
 ORACLES = {
     "similarity_topk": TOPK_SQL,
-    "similarity_ann_lsh": _ann_lsh_sql(),
+    "similarity_ann_lsh": ANN_LSH_SQL,
     "similarity_ann_ivf": ANN_IVF_SQL,
 }

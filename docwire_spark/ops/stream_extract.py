@@ -28,7 +28,9 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from docwire_spark.ops.common import TOKENS_EXPR, load, ntz_epoch_us
+from docwire_spark.ops.common import (
+    TOKENS_EXPR, load, ntz_epoch_us, track_sink,
+)
 
 _SINK_IDS = itertools.count()
 
@@ -42,10 +44,12 @@ def _drain(spark: SparkSession, drop: DataFrame, schema: str, transform,
     The drop and checkpoint directories are removed once
     ``awaitTermination`` returns (availableNow has fully drained the
     source by then), so repeated sweeps don't accumulate corpus-sized
-    parquet copies in the temp dir."""
+    parquet copies in the temp dir; the sink table, whose rows live in
+    the driver, is dropped at the next ``release_persisted()``."""
     drop_dir = tempfile.mkdtemp(prefix="stream_src_")
     chk_dir = tempfile.mkdtemp(prefix="stream_chk_")
     sink = f"stream_sink_{next(_SINK_IDS)}_{os.getpid()}"
+    track_sink(spark, sink)
     try:
         drop.write.mode("overwrite").parquet(drop_dir)
         reader = spark.readStream.schema(schema).format("parquet")

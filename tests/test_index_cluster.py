@@ -95,18 +95,18 @@ def test_kmeans_improves_sse_each_iteration(spark):
         .select(
             "vec_id",
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            .alias("emb"),
+            .alias("v"),
         )
     )
     seeds = vecs.filter(F.col("vec_id") < C.K).orderBy("vec_id").collect()
-    cents = [(int(r["vec_id"]), list(r["emb"])) for r in seeds]
+    cents = [(int(r["vec_id"]), list(r["v"])) for r in seeds]
 
     def sse(assigned):
         lut = {cid: vec for cid, vec in cents}
         return assigned.select(
             F.aggregate(
                 F.zip_with(
-                    "emb",
+                    "v",
                     F.array(*[
                         F.element_at(
                             F.map_from_arrays(
@@ -155,7 +155,7 @@ def test_kmeans_assignment_pass_has_no_join_or_shuffle(spark):
         .select(
             "vec_id",
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            .alias("emb"),
+            .alias("v"),
         )
     )
     cents = [(i, [float(i)] * C.DIM) for i in range(C.K)]

@@ -122,3 +122,27 @@ def test_stream_dedup_native_watermark_bounded(spark, tmp_path):
     q.awaitTermination()
     got = {(r["host"], r["fp"]) for r in spark.read.parquet(out).collect()}
     assert len(got) == 2  # alpha suppressed once, beta kept
+
+
+def test_release_persisted_drops_stream_sinks(spark):
+    """A streaming registry query drains into a memory sink whose rows
+    live in the driver: the sink views it leaves in the catalog must be
+    gone after release_persisted(), as its cached tables are."""
+    from docwire_spark.ops.common import release_persisted
+    from docwire_spark.ops.stream_extract import (
+        extract_stream_plain, stream_dedup_native,
+    )
+
+    def views():
+        return {t.name for t in spark.catalog.listTables()}
+
+    sf_dir = "/root/testdata/sf0.001"
+    release_persisted()
+    before = views()
+    for query in (extract_stream_plain, stream_dedup_native):
+        assert query(spark, sf_dir).count() > 0
+    sinks = views() - before
+    assert len(sinks) == 2, sinks
+    assert all(n.startswith("stream_sink_") for n in sinks), sinks
+    release_persisted()
+    assert not views() & sinks
