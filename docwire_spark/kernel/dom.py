@@ -1,9 +1,9 @@
-"""Lightweight HTML5 tokenizer + DOM tree builder + table fix-up.
+"""One-pass HTML5 tokenizer and tree builder that streams element events.
 
 A from-scratch, pragmatic subset of the WHATWG HTML5 parsing algorithm,
-built to produce the same DOM *shapes that matter for text extraction*
-as the reference's lexbor parse + ``fix_dom`` pass
-(reference: src/html_parser.cpp:208-328, 486-492):
+built to give the same event order as a walk of the reference's lexbor
+parse after its ``fix_dom`` pass (reference:
+src/html_parser.cpp:208-328, 486-492):
 
 - void elements, raw-text elements (script/style/...), RCDATA
   (title/textarea) with entity decoding
@@ -14,23 +14,16 @@ as the reference's lexbor parse + ``fix_dom`` pass
 - foster parenting: non-table content inside table context is moved
   before the table at build time (spec behavior), while
   style/script/template stay inside the table and are relocated by
-  :func:`fix_dom` afterwards — this two-stage split reproduces the
-  reference's event order (verified against its ``misplaced_tags``
-  unit test expectations)
-- :func:`fix_dom` replicates the reference's post-parse WHATWG
-  table-insertion-mode fix-up exactly (everything that is not
-  caption/thead/tbody/tfoot/tr/td/th is moved to just before the
-  table element, post-order)
+  :func:`fix_dom` afterwards (the reference's ``misplaced_tags`` order)
 
-The DOM is private to this module and ``html_extract``, and shaped for
-speed on the per-token path: elements are :class:`Node` objects, text
-children are plain ``str`` (adjacent text merges into one string, as
-sibling text nodes would), :func:`tokenize` matches attribute-free tags
-with one compiled regex, and :meth:`TreeBuilder.feed` runs the common
-in-body cases inline — text outside table context, start tags whose
-only effect is close-``p``-if-closer then append then push, and end
-tags matching the current node — calling the general handlers only for
-the rest.
+:meth:`TreeBuilder.feed` reads the tokenizer's regex matches inline and
+sends each element open, text run and close straight to one *emitter*
+(``html_extract``'s walk rules); no tree is built.  Only a table region
+(a ``table`` start outside any table, until that table is popped:
+foster parenting and :func:`fix_dom` move content there) and a head
+with a ``noscript``/``template`` in it are built as :class:`Node`
+subtrees, then walked through the same emitter.  Nodes hold no parent
+pointer, so a parse leaves no reference cycle.
 """
 
 from __future__ import annotations
@@ -40,29 +33,18 @@ import re
 
 
 class Node:
-    """An element; ``children`` holds Nodes and ``str`` text."""
+    """An element; ``children`` holds Nodes and ``str`` text (adjacent
+    text merges into one string, as sibling text nodes would)."""
 
-    __slots__ = ("name", "attrs", "children", "parent")
+    __slots__ = ("name", "attrs", "children")
 
-    def __init__(self, name, attrs, parent=None):
+    def __init__(self, name, attrs):
         self.name = name
         self.attrs = attrs
         self.children = []
-        self.parent = parent
-
-    def append(self, child):
-        if type(child) is not str:
-            child.parent = self
-        self.children.append(child)
 
     def insert_before(self, child, ref):
-        if type(child) is not str:
-            child.parent = self
         self.children.insert(self.children.index(ref), child)
-
-    def remove_child(self, child):
-        self.children.remove(child)
-        child.parent = None
 
     def text_content(self):
         out = []
@@ -75,9 +57,6 @@ class Node:
                 stack.extend(reversed(n.children))
         return "".join(out)
 
-    def __repr__(self):  # debugging aid
-        return f"<{self.name} {len(self.children)} children>"
-
 
 VOID_ELEMENTS = frozenset(
     "area base basefont bgsound br col embed frame hr img input keygen "
@@ -85,7 +64,11 @@ VOID_ELEMENTS = frozenset(
 )
 RAWTEXT_ELEMENTS = frozenset("script style xmp iframe noembed noframes".split())
 RCDATA_ELEMENTS = frozenset(("title", "textarea"))
-_RAW_OR_RCDATA = RAWTEXT_ELEMENTS | RCDATA_ELEMENTS
+#: raw-text / RCDATA element -> the regex of its end tag
+_RAW_CLOSE_RE = {
+    name: re.compile(r"</" + name + r"[\t\n\f\r />]", re.I)
+    for name in RAWTEXT_ELEMENTS | RCDATA_ELEMENTS
+}
 
 # start tags that close an open <p> (WHATWG in-body rules)
 P_CLOSERS = frozenset(
@@ -106,10 +89,26 @@ TABLE_ONLY_TAGS = frozenset(
 #: current-node names that put the builder in table context (the
 #: WHATWG condition for foster parenting)
 _TABLE_CONTEXT = frozenset(("table", "tr", "colgroup")) | TABLE_SECTIONS
+#: the elements ``fix_dom`` fixes, and the children they keep
+_TABLE_MODE = frozenset(("table", "tr")) | TABLE_SECTIONS
+_TABLE_MODE_KEEPS = frozenset(("caption", "td", "th", "tr")) | TABLE_SECTIONS
+#: elements that bound the scope of a ``p`` close
+_P_SCOPE = frozenset(("table", "td", "th", "caption"))
+#: head elements that can hold others open: one starts the head tree
+_HEAD_TREE_START = frozenset(("noscript", "template"))
 #: tags whose start or end is never a plain append/push or pop
 _ROOT_TAGS = frozenset(("html", "head", "body"))
-#: in-body start tags with a rule beyond close-p, append and push
-_IN_BODY_SPECIAL = TABLE_ONLY_TAGS | frozenset(("li", "dd", "dt", "a", "table"))
+#: start tags :meth:`TreeBuilder.feed` does not stream inline
+_START_SLOW = _ROOT_TAGS | TABLE_ONLY_TAGS | frozenset(("table",))
+_LIST_STOPS = frozenset("ul ol dl table td th caption html body div".split())
+#: start tag -> (names, stops): it first closes an open element of
+#: ``names`` nearer than any of ``stops`` (``a``: a crude adoption
+#: agency), so it streams inline while none of ``names`` is open
+_CLOSES_OPEN = {
+    "a": (("a",), frozenset("td th caption table html body div p".split())),
+    "li": (("li",), _LIST_STOPS), "dd": (("dd", "dt"), _LIST_STOPS),
+    "dt": (("dd", "dt"), _LIST_STOPS),
+}
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\f />]*")
 #: the next ``<``; groups 1-3 are set when it opens an attribute-free
@@ -119,186 +118,124 @@ _ATTR_RE = re.compile(
     r"""[\t\n\f\r /]*([^\t\n\f\r /><=][^\t\n\f\r /><=]*)"""
     r"""(?:[\t\n\f\r ]*=[\t\n\f\r ]*("[^"]*"|'[^']*'|[^\t\n\f\r >]*))?"""
 )
+_HTML_WS = " \t\n\r\f"
 
 
 def _unescape(s: str) -> str:
-    if "&" not in s:
-        return s
-    return _htmlmod.unescape(s)
+    return _htmlmod.unescape(s) if "&" in s else s
 
 
-#: token tuples (kind, value, attrs): TOK_TEXT -> (text, None),
-#: TOK_START -> (name, attrs dict), TOK_END -> (name, None).  Plain
-#: tuples with int kinds beat attribute-carrying objects on the
-#: ~100-tokens-per-page path.
-TOK_TEXT, TOK_START, TOK_END = 0, 1, 2
-
-
-_RAWTEXT_CLOSE_RE: dict = {}
-
-
-def tokenize(s: str):
-    """Yield (kind, value, attrs) token tuples; comments/doctypes/PIs
-    are skipped."""
-    i = 0
+def _attributes(s: str, j: int):
+    """Parse the attributes of a start tag from ``s[j:]``; returns the
+    attrs dict (first occurrence wins) and the index after the tag."""
     n = len(s)
-    text_start = 0
-    find = s.find
-    next_lt = _LT_RE.search
-    while i < n:
-        m = next_lt(s, i)
-        if m is None:
-            break
-        lt = m.start()
-        slash, name, gt = m.groups()
-        if gt is not None:
-            if lt > text_start:
-                yield (TOK_TEXT, _unescape(s[text_start:lt]), None)
-            i = text_start = m.end()
-            name = name.lower()
-            if slash:
-                yield (TOK_END, name, None)
-                continue
-            attrs = {}
+    attrs = {}
+    while j < n:
+        c = s[j]
+        if c == ">":
+            return attrs, j + 1
+        if c == "/" and s[j + 1 : j + 2] == ">":
+            return attrs, j + 2
+        am = _ATTR_RE.match(s, j)
+        if am and am.group(1):
+            aname = am.group(1).lower()
+            aval = am.group(2)
+            if aval is None:
+                aval = ""
+            elif aval[:1] in ('"', "'"):
+                aval = aval[1:-1]
+            if aname not in attrs:
+                attrs[aname] = _unescape(aval)
+            j = am.end()
         else:
-            nxt = s[lt + 1 : lt + 2]
-            if not (nxt.isalpha() or nxt in ("/", "!", "?")):
-                i = lt + 1
-                continue
-            if lt > text_start:
-                yield (TOK_TEXT, _unescape(s[text_start:lt]), None)
-            if nxt == "!":
-                if s.startswith("<!--", lt):
-                    end = find("-->", lt + 4)
-                    i = text_start = (end + 3) if end != -1 else n
-                else:
-                    end = find(">", lt + 2)
-                    i = text_start = (end + 1) if end != -1 else n
-                continue
-            if nxt == "?":
-                end = find(">", lt + 2)
-                i = text_start = (end + 1) if end != -1 else n
-                continue
-            if nxt == "/":
-                m = _TAG_NAME_RE.match(s, lt + 2)
-                if not m:
-                    # bogus comment
-                    end = find(">", lt + 2)
-                    i = text_start = (end + 1) if end != -1 else n
-                    continue
-                end = find(">", m.end())
-                i = text_start = (end + 1) if end != -1 else n
-                yield (TOK_END, m.group(0).lower(), None)
-                continue
-            # start tag with attributes, a self-closing slash, or an
-            # unterminated tail
-            m = _TAG_NAME_RE.match(s, lt + 1)
-            name = m.group(0).lower()
-            j = m.end()
-            attrs = {}
-            while j < n:
-                c = s[j]
-                if c == ">":
-                    j += 1
-                    break
-                if c == "/" and s[j + 1 : j + 2] == ">":
-                    j += 2
-                    break
-                am = _ATTR_RE.match(s, j)
-                if am and am.group(1):
-                    aname = am.group(1).lower()
-                    aval = am.group(2)
-                    if aval is None:
-                        aval = ""
-                    elif aval[:1] in ('"', "'"):
-                        aval = aval[1:-1]
-                    if aname not in attrs:
-                        attrs[aname] = _unescape(aval)
-                    j = am.end()
-                else:
-                    j += 1
-            else:
-                j = n
-            i = text_start = j
-        yield (TOK_START, name, attrs)
-        if name in _RAW_OR_RCDATA:
-            close = _RAWTEXT_CLOSE_RE.get(name)
-            if close is None:
-                close = _RAWTEXT_CLOSE_RE[name] = re.compile(
-                    r"</" + re.escape(name) + r"[\t\n\f\r />]", re.I
-                )
-            cm = close.search(s, i)
-            if cm:
-                raw = s[i : cm.start()]
-                gt = find(">", cm.start() + 1)
-                i = text_start = (gt + 1) if gt != -1 else n
-            else:
-                raw = s[i:]
-                i = text_start = n
-            if raw:
-                if name in RCDATA_ELEMENTS:
-                    raw = _unescape(raw)
-                yield (TOK_TEXT, raw, None)
-            yield (TOK_END, name, None)
-    if text_start < n:
-        yield (TOK_TEXT, _unescape(s[text_start:]), None)
+            j += 1
+    return attrs, n
 
 
 class TreeBuilder:
-    """Builds the DOM from tokens.  ``open`` is the stack of open
-    elements; ``open_counts`` holds per-name open counts, so unmatched
-    end tags short-circuit in O(1) instead of scanning the stack
-    (adversarial </x> floods on deep pages were O(n^2))."""
+    """Builds a page's element structure and sends it to ``emitter``:
+    ``open(name, attrs)``, ``text(str)`` and ``close(name)`` in document
+    order, ``walk(children)`` for a finished table region and
+    ``end_head(head=None)`` when the body opens.
 
-    def __init__(self):
-        self.html = Node("html", {})
-        self.head = Node("head", {})
-        self.body = Node("body", {})
-        self.html.append(self.head)
-        self.html.append(self.body)
-        self.open = [self.html]
+    ``open`` is the stack of open element names; ``open_counts`` holds
+    per-name open counts, so unmatched end tags short-circuit in O(1)
+    (adversarial </x> floods on deep pages were O(n^2)).  ``nodes`` is
+    None unless a subtree is built, else the Nodes of ``open[base:]``."""
+
+    def __init__(self, emitter):
+        self.emitter = emitter
+        self.open = ["html"]
         self.open_counts = {"html": 1}
         self._p_indices = []       # open <p> stack indices (lazy-pruned)
         self._pscope_indices = []  # table/td/th/caption scope boundaries
-        self.table_nodes = []      # document-order table-mode elements
         self.in_body_phase = False
-        self.saw_html = False
+        self.head = self.root = None
+        self.base = 0
+        self.nodes = None
+        self.table_nodes = []      # document-order table-mode elements
+        self.parents = {}
 
     # -- helpers -------------------------------------------------------
-    def _push(self, node):
+    def _push(self, name, node):
         c = self.open_counts
-        c[node.name] = c.get(node.name, 0) + 1
-        self.open.append(node)
+        c[name] = c.get(name, 0) + 1
+        self.open.append(name)
+        if node is not None:
+            self.nodes.append(node)
 
     def _truncate(self, idx):
+        names = self.open
+        if idx >= len(names):
+            return
         c = self.open_counts
-        for node in self.open[idx:]:
-            c[node.name] -= 1
-        del self.open[idx:]
+        nodes = self.nodes
+        if nodes is None:
+            close = self.emitter.close
+            for name in reversed(names[idx:]):
+                c[name] -= 1
+                close(name)
+            del names[idx:]
+            return
+        for name in names[idx:]:
+            c[name] -= 1
+        del names[idx:]
+        if idx > self.base:
+            del nodes[idx - self.base:]
+        else:  # the region's outermost table is popped
+            self._end_tree()
 
-    def _nearest_table(self):
-        for node in reversed(self.open):
-            if node.name == "table":
-                return node
-        return None
+    def _end_tree(self):
+        """Fix up the finished subtree and emit it: the table region
+        under ``root``, or the rest of the head; events stream again
+        after it."""
+        fix_dom(self.table_nodes, self.parents)
+        if self.base:
+            self.emitter.walk(self.root.children)
+        else:
+            self.emitter.end_head(self.head)
+        self.nodes = None
+        self.table_nodes = []
+        self.parents = {}
 
     def _foster_parent(self, node):
-        table = self._nearest_table()
-        if table is not None and table.parent is not None:
-            table.parent.insert_before(node, table)
-        else:
-            self.body.append(node)
+        names = self.open
+        for idx in range(len(names) - 1, -1, -1):
+            if names[idx] == "table":
+                table = self.nodes[idx - self.base]
+                self.parents[table].insert_before(node, table)
+                return
 
     def _pop_to(self, names, inclusive=False, stops=TABLE_SCOPE_STOPS):
         """Pop stack until top is one of ``names`` (then optionally pop
         it too). Returns True when found."""
         items = self.open
         for idx in range(len(items) - 1, 0, -1):
-            nm = items[idx].name
+            nm = items[idx]
             if nm in names:
                 self._truncate(idx + 1 if not inclusive else idx)
                 return True
-            if nm in stops and nm not in names:
+            if nm in stops:
                 return False
         return False
 
@@ -320,63 +257,77 @@ class TreeBuilder:
         if p_idx[-1] > last_b:
             self._truncate(p_idx.pop())
 
-    def _close_li_dd_dt(self, name):
-        group = ("li",) if name == "li" else ("dd", "dt")
-        items = self.open
-        for idx in range(len(items) - 1, 0, -1):
-            nm = items[idx].name
-            if nm in group:
-                self._truncate(idx)
-                return
-            if nm in ("ul", "ol", "dl", "table", "td", "th", "caption", "html", "body", "div"):
-                return
-
     def _insert(self, name, attrs, push=True):
-        node = Node(name, attrs)
-        self.open[-1].append(node)
-        if name == "table" or name == "tr" or name in TABLE_SECTIONS:
-            self.table_nodes.append(node)
+        """Append an element to the current node: streamed, or built
+        into the subtree (a ``table`` outside one starts a region)."""
+        nodes = self.nodes
+        node = None
+        if nodes is None and name != "table":
+            self.emitter.open(name, attrs)
+        else:
+            if nodes is None:
+                self.root = parent = Node("", None)
+                self.base = len(self.open)
+                self.nodes = nodes = []
+            else:
+                parent = nodes[-1]
+            node = Node(name, attrs)
+            parent.children.append(node)
+            if name in _TABLE_MODE:
+                self.table_nodes.append(node)
+                self.parents[node] = parent
         if push and name not in VOID_ELEMENTS:
-            if name in ("table", "td", "th", "caption"):
+            if name == "p":
+                self._p_indices.append(len(self.open))
+            elif name in _P_SCOPE:
                 self._pscope_indices.append(len(self.open))
-            self._push(node)
+            self._push(name, node)
 
     def _ensure_body_phase(self):
         if not self.in_body_phase:
             self.in_body_phase = True
             if len(self.open) == 1:
-                self._push(self.body)
+                if self.nodes is None:
+                    self.emitter.end_head()
+                else:
+                    self._end_tree()
+                self._insert("body", {})
 
-    # -- general token handlers (everything feed does not inline) ------
+    # -- token handlers (feed inlines the streaming cases) -------------
     def start_tag(self, name, attrs):
         """Root tags, head-phase content and table context; returns
         True when the tag is consumed, False when it is left to the
-        in-body insertion rules in :meth:`feed`."""
-        if name == "html":
-            if not self.saw_html:
-                self.saw_html = True
-                self.html.attrs.update(attrs)
-            return True
-        if name == "head":
+        in-body insertion rules of :meth:`start`."""
+        if name == "html" or name == "head":
             return True
         if name == "body":
-            self.body.attrs.update(attrs)
             self._ensure_body_phase()
             return True
         if not self.in_body_phase and name in HEAD_CONTENT:
-            node = Node(name, attrs)
-            self.head.append(node)
+            if self.nodes is None and name in _HEAD_TREE_START:
+                # later head elements are its siblings, not children
+                # (the event order the digests pin): build the rest of
+                # the head under <html>; what lands in <html> itself
+                # (after the body opens inside it) is dropped
+                self.root, self.head = Node("html", {}), Node("head", {})
+                self.nodes = [self.root]
+            node = None
+            if self.nodes is None:
+                self.emitter.open(name, attrs)
+            else:
+                node = Node(name, attrs)
+                self.head.children.append(node)
             if name not in VOID_ELEMENTS:
-                self._push(node)
+                self._push(name, node)
             return True
         self._ensure_body_phase()
 
-        if self.open[-1].name not in _TABLE_CONTEXT:
+        if self.open[-1] not in _TABLE_CONTEXT:
             return False
         if name == "caption" or name == "colgroup" or name in TABLE_SECTIONS:
             self._pop_to(("table",))
         elif name == "col":
-            if self.open[-1].name != "colgroup":
+            if self.open[-1] != "colgroup":
                 self._pop_to(("table",))
                 self._insert("colgroup", {})
         elif name == "tr":
@@ -400,36 +351,28 @@ class TreeBuilder:
             node = Node(name, attrs)
             self._foster_parent(node)
             if name not in VOID_ELEMENTS:
-                self._push(node)
+                self._push(name, node)
             return True
         self._insert(name, attrs)
         return True
 
-    def start_in_body_special(self, name, attrs):
-        """In-body start tags of ``_IN_BODY_SPECIAL`` (after the
-        close-p step :meth:`feed` has applied)."""
+    def start(self, name, attrs):
+        if self.start_tag(name, attrs):
+            return
+        # in-body insertion
+        if self._p_indices and name in P_CLOSERS:
+            self._close_p()
         if name in TABLE_ONLY_TAGS:
             return  # spec: ignore stray table tags in body
-        if name == "li" or name == "dd" or name == "dt":
-            self._close_li_dd_dt(name)
-        elif name == "a":
-            # crude adoption-agency: close an open <a> first (spec)
-            items = self.open
-            for idx in range(len(items) - 1, 0, -1):
-                nm = items[idx].name
-                if nm == "a":
-                    self._truncate(idx)
-                    break
-                if nm in ("td", "th", "caption", "table", "html", "body", "div", "p"):
-                    break
+        if name in _CLOSES_OPEN:
+            names, stops = _CLOSES_OPEN[name]
+            self._pop_to(names, inclusive=True, stops=stops)
         self._insert(name, attrs)
 
     def end_tag(self, name):
         if name == "br":
             self._ensure_body_phase()
             self._insert("br", {}, push=False)
-            return
-        if name in _ROOT_TAGS:
             return
         if name == "table":
             self._pop_to(("table",), inclusive=True, stops=("html",))
@@ -442,137 +385,175 @@ class TreeBuilder:
             return  # O(1) rejection of unmatched end tags
         items = self.open
         for idx in range(len(items) - 1, 0, -1):
-            node = items[idx]
-            if node.name == name:
+            nm = items[idx]
+            if nm == name:
                 self._truncate(idx)
                 return
-            if node.name in TABLE_SCOPE_STOPS:
+            if nm in TABLE_SCOPE_STOPS:
                 return
 
     def text(self, text):
-        """Text before the body phase or in table context; returns
-        True when consumed, False when it belongs to the current node
-        (appended by :meth:`feed`)."""
-        if not self.in_body_phase:
-            if self.open[-1] is not self.html:
-                # inside an explicit head element (title/style/script/...)
-                return False
-            if text.strip(" \t\n\r\f") == "":
-                return True
-            self._ensure_body_phase()
-        if (self.open[-1].name in _TABLE_CONTEXT
-                and text.strip(" \t\n\r\f") != ""):
+        top = self.open[-1]
+        if not self.in_body_phase and top == "html":
+            if text.strip(_HTML_WS) == "":
+                return
+            self._ensure_body_phase()  # opens the body: streams
+        if self.nodes is None:
+            self.emitter.text(text)
+            return
+        if top in _TABLE_CONTEXT and text.strip(_HTML_WS) != "":
             self._foster_parent(text)
-            return True
-        return False
-
-    def feed(self, tokens):
-        """Build the tree from ``tokens``.  In the body phase outside
-        table context, text and plain start/end tags are handled here
-        inline; everything else goes through the general handlers."""
-        items = self.open
-        p_indices = self._p_indices
-        in_body = self.in_body_phase
-        for kind, value, attrs in tokens:
-            if kind == TOK_TEXT:
-                top = items[-1]
-                if not in_body or top.name in _TABLE_CONTEXT:
-                    consumed = self.text(value)
-                    in_body = self.in_body_phase
-                    if consumed:
-                        continue
-                    top = items[-1]
-                children = top.children
-                if children and type(children[-1]) is str:
-                    children[-1] += value
-                else:
-                    children.append(value)
-            elif kind == TOK_START:
-                if (not in_body or value in _ROOT_TAGS
-                        or items[-1].name in _TABLE_CONTEXT):
-                    consumed = self.start_tag(value, attrs)
-                    in_body = self.in_body_phase
-                    if consumed:
-                        continue
-                # in-body insertion
-                if p_indices and value in P_CLOSERS:
-                    self._close_p()
-                if value in _IN_BODY_SPECIAL:
-                    self.start_in_body_special(value, attrs)
-                    continue
-                # a plain element: _insert without its table/scope
-                # bookkeeping, which no plain name needs
-                top = items[-1]
-                node = Node(value, attrs, top)
-                top.children.append(node)
-                if value not in VOID_ELEMENTS:
-                    if value == "p":
-                        p_indices.append(len(items))
-                    self._push(node)
-            else:
-                if items[-1].name == value and value not in _ROOT_TAGS:
-                    self._truncate(len(items) - 1)
-                else:
-                    self.end_tag(value)
-                    in_body = self.in_body_phase
-
-
-# ---------------------------------------------------------------------------
-# fix_dom: reference src/html_parser.cpp:208-328 replicated exactly
-# ---------------------------------------------------------------------------
-
-_TBODY_OK = frozenset(("tr", "th", "td"))
-_TR_OK = frozenset(("th", "td"))
-
-
-def _fix_in_table_mode(node, child):
-    name = child.name
-    if name in ("caption", "tbody", "tfoot", "thead", "td", "th", "tr"):
-        return False
-    # style/script/template and anything else: move before the table
-    node.remove_child(child)
-    node.parent.insert_before(child, node)
-    return True
-
-
-def _fix_in_table_body_mode(node, child):
-    if child.name in _TBODY_OK:
-        return False
-    return _fix_in_table_mode(node, child)
-
-
-def _fix_in_table_row_mode(node, child):
-    if child.name in _TR_OK:
-        return False
-    return _fix_in_table_mode(node, child)
-
-
-def fix_dom(table_nodes):
-    """Post-order WHATWG table-mode fix-up (reference fix_dom).
-
-    Only table-mode elements (table / thead / tbody / tfoot / tr) can
-    be fixed, so the builder's document-order list of exactly those
-    nodes is processed in reverse (children precede parents in reverse
-    document order — the same order a post-order walk fixes them)."""
-    for node in reversed(table_nodes):
-        name = node.name
-        if name == "table":
-            fixer = _fix_in_table_mode
-        elif name == "tr":
-            fixer = _fix_in_table_row_mode
+            return
+        children = self.nodes[-1].children
+        if children and type(children[-1]) is str:
+            children[-1] += text
         else:
-            fixer = _fix_in_table_body_mode
-        for child in list(node.children):
-            if type(child) is not str:
-                fixer(node, child)
+            children.append(text)
+
+    def feed(self, s):
+        """Parse all of ``s`` (comments, doctypes and PIs are skipped);
+        while events stream, text and plain start/end tags go to the
+        emitter inline, everything else through the handlers above."""
+        names = self.open
+        counts = self.open_counts
+        p_indices = self._p_indices
+        emitter = self.emitter
+        emit_text = emitter.text
+        emit_open = emitter.open
+        emit_close = emitter.close
+        fast = False  # events stream inline: body phase, no tree
+        i = text_start = 0
+        n = len(s)
+        find = s.find
+        next_lt = _LT_RE.search
+        while True:
+            m = next_lt(s, i)
+            if m is None:
+                break
+            lt = m.start()
+            slash, name, gt = m.groups()
+            if gt is None:
+                nxt = s[lt + 1 : lt + 2]
+                if not (nxt.isalpha() or nxt in ("/", "!", "?")):
+                    i = lt + 1
+                    continue
+            if lt > text_start:
+                value = s[text_start:lt]
+                if "&" in value:
+                    value = _htmlmod.unescape(value)
+                if fast:
+                    emit_text(value)
+                else:
+                    self.text(value)
+                    fast = self.in_body_phase and self.nodes is None
+            if gt is not None:
+                i = text_start = m.end()
+                name = name.lower()
+                attrs = {}
+            elif nxt == "!" and s.startswith("<!--", lt):
+                end = find("-->", lt + 4)
+                i = text_start = (end + 3) if end != -1 else n
+                continue
+            elif nxt == "!" or nxt == "?":
+                end = find(">", lt + 2)
+                i = text_start = (end + 1) if end != -1 else n
+                continue
+            elif nxt == "/":
+                m = _TAG_NAME_RE.match(s, lt + 2)
+                end = find(">", m.end() if m else lt + 2)
+                i = text_start = (end + 1) if end != -1 else n
+                if not m:
+                    continue  # bogus comment
+                slash = "/"
+                name = m.group(0).lower()
+            else:
+                # start tag with attributes, a self-closing slash, or
+                # an unterminated tail
+                m = _TAG_NAME_RE.match(s, lt + 1)
+                name = m.group(0).lower()
+                attrs, i = _attributes(s, m.end())
+                text_start = i
+            if slash:
+                if name in _ROOT_TAGS:
+                    continue  # ignored
+                if fast and names[-1] == name:
+                    counts[name] -= 1
+                    names.pop()
+                    emit_close(name)
+                else:
+                    self.end_tag(name)
+                    fast = self.in_body_phase and self.nodes is None
+                continue
+            if fast and name not in _START_SLOW and (
+                    name not in _CLOSES_OPEN
+                    or not any(map(counts.get, _CLOSES_OPEN[name][0]))):
+                if p_indices and name in P_CLOSERS:
+                    while p_indices and p_indices[-1] >= len(names):
+                        p_indices.pop()  # the lazy prune of _close_p
+                    if p_indices:
+                        self._close_p()
+                emit_open(name, attrs)
+                if name not in VOID_ELEMENTS:
+                    if name == "p":
+                        p_indices.append(len(names))
+                    counts[name] = counts.get(name, 0) + 1
+                    names.append(name)
+            else:
+                self.start(name, attrs)
+                fast = self.in_body_phase and self.nodes is None
+            close_re = _RAW_CLOSE_RE.get(name)
+            if close_re is not None:
+                cm = close_re.search(s, i)
+                if cm:
+                    raw = s[i : cm.start()]
+                    gt = find(">", cm.start() + 1)
+                    i = text_start = (gt + 1) if gt != -1 else n
+                else:
+                    raw = s[i:]
+                    i = text_start = n
+                if raw and name in RCDATA_ELEMENTS:
+                    raw = _unescape(raw)
+                if fast:  # the element is the current node
+                    if raw:
+                        emit_text(raw)
+                    counts[name] -= 1
+                    names.pop()
+                    emit_close(name)
+                else:
+                    if raw:
+                        self.text(raw)
+                    self.end_tag(name)
+                    fast = self.in_body_phase and self.nodes is None
+        if text_start < n:
+            self.text(_unescape(s[text_start:]))
+        self.close()
+
+    def close(self):
+        """End of input: emit the open subtree, close open elements."""
+        names = self.open
+        if self.nodes is not None:
+            base = self.base
+            self._end_tree()
+            if not base:  # the head tree holds the rest of the page
+                return
+            del names[base:]
+        close = self.emitter.close
+        for name in reversed(names[1:]):
+            close(name)
 
 
-def parse_html(text: str):
-    """Parse HTML text into a DOM, apply the table fix-up and return
-    the (head, body) elements.  They are the first ``head`` and
-    ``body`` in document order: the builder never creates another
-    element of either name."""
-    builder = TreeBuilder()
-    builder.feed(tokenize(text))
-    fix_dom(builder.table_nodes)
-    return builder.head, builder.body
+def fix_dom(table_nodes, parents):
+    """Post-order WHATWG table-mode fix-up (reference fix_dom,
+    src/html_parser.cpp:208-328): every element child of a table-mode
+    element (table / thead / tbody / tfoot / tr) that is not
+    caption/thead/tbody/tfoot/tr/td/th moves to just before it.  (The
+    reference's table-body and table-row modes defer to table mode for
+    the children they reject, so all three keep the same set.)  The
+    builder's document-order list of table-mode nodes is processed in
+    reverse: the order a post-order walk fixes them."""
+    for node in reversed(table_nodes):
+        children = node.children
+        for child in list(children):
+            if type(child) is not str and child.name not in _TABLE_MODE_KEEPS:
+                children.remove(child)
+                parents[node].insert_before(child, node)

@@ -1,4 +1,4 @@
-"""HTML DOM -> document-element event stream.
+"""HTML text -> document-element event stream.
 
 Replicates the reference's DOM walk and whitespace state machine
 (reference: src/html_parser.cpp:406-871) byte-for-byte:
@@ -14,11 +14,10 @@ Replicates the reference's DOM walk and whitespace state machine
   content suppressed; CSS ``list-style: none`` on ol/ul/li disables
   list enumeration (the LibreOffice export quirk)
 
-The walk runs over ``dom``'s private DOM (elements are ``dom.Node``,
-text children plain ``str``) in one loop with its state in locals;
-payload-free closes and (kind, styling) opens come from lookup tables,
-and only links, lists, images, line breaks, meta and the suppressing
-elements take named branches.
+These rules live in one emitter, :class:`_Emitter`: ``dom.TreeBuilder``
+calls its ``open`` / ``text`` / ``close`` from the tokenizer loop and
+walks each table region through them once built, so every event goes
+through the same ``buffered`` / ``last_char`` state in document order.
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ import re
 
 from docwire_spark.kernel import events as E
 from docwire_spark.kernel.dates import parse_iso8601_or_legacy
-from docwire_spark.kernel.dom import parse_html
+from docwire_spark.kernel.dom import TreeBuilder
 
 #: runs of ASCII whitespace other than a lone space (collapsing a lone
 #: space to a space is a no-op, and skipping those matches makes the
@@ -175,15 +174,11 @@ def _image_event(attrs):
 
 
 def _list_event(name, attrs, turn_off_ul, turn_off_ol):
-    style_type_none = False
     style_attr = attrs.get("style")
     if style_attr is not None:
-        if "list-style: none" in style_attr:
-            style_type_none = True
-    elif name == "ol" and turn_off_ol:
-        style_type_none = True
-    elif name == "ul" and turn_off_ul:
-        style_type_none = True
+        style_type_none = "list-style: none" in style_attr
+    else:
+        style_type_none = turn_off_ol if name == "ol" else turn_off_ul
     list_type = "none" if style_type_none else ("decimal" if name == "ol" else "disc")
     return (E.LIST, (list_type, _styling(attrs)))
 
@@ -195,6 +190,8 @@ _OPEN_KINDS = {
     "caption": E.CAPTION, "tr": E.TABLE_ROW, "td": E.TABLE_CELL,
     "th": E.TABLE_CELL, "li": E.LIST_ITEM, "b": E.BOLD, "u": E.UNDERLINE,
 }
+#: their attribute-free opening events (shared tuples)
+_OPEN_EVENTS = {name: (kind, None) for name, kind in _OPEN_KINDS.items()}
 #: elements whose closing is one payload-free event (shared tuples)
 _CLOSE_EVENTS = {
     name: (kind, None)
@@ -214,115 +211,136 @@ _BLOCK_FLUSH = BLOCK_LEVEL | TABLE_ELEMENTS
 #: inline formatting context is empty)
 _LSTRIP_AFTER = _ASCII_WS + "\0"
 
-# walk markers: the children of the innermost open element are done /
-# the walk leaves <head>
-_CLOSE = object()
-_END_HEAD = object()
+
+class _Emitter:
+    """The DOM walk's rules as an event sink.  ``mute`` counts the open
+    elements whose text is not rendered (the head, title, script,
+    iframe, style); style text is kept for its STYLE event, and all
+    head text for its CSS (``head_text``, None once the body opens)."""
+
+    __slots__ = ("events", "emit", "meta", "buffered", "last_char", "mute",
+                 "in_style", "style_text", "head_text", "turn_off_ul",
+                 "turn_off_ol")
+
+    def __init__(self):
+        self.events = [(E.DOCUMENT, None)]
+        self.emit = self.events.append
+        self.meta = {}
+        self.buffered, self.last_char, self.mute = "", "\0", 1
+        self.in_style, self.style_text, self.head_text = False, [], []
+        self.turn_off_ul = self.turn_off_ol = False
+
+    def text(self, cur):
+        if self.mute:
+            if self.in_style:
+                self.style_text.append(cur)
+            if self.head_text is not None:
+                self.head_text.append(cur)
+            return
+        if self.last_char in _LSTRIP_AFTER:
+            cur = cur.lstrip(_ASCII_WS)
+        if not cur:
+            # trimmed away, or "" from a char ref to an invalid code point
+            return
+        # the substitution scans at every space; the ``in`` scans run
+        # at C speed and leave it only a trailing run of spaces to fold
+        core = cur.rstrip(" ")
+        if ("  " in core or "\n" in core or "\t" in core or "\r" in core
+                or "\f" in core or "\v" in core):
+            cur = _ASCII_WS_RUN.sub(" ", cur)
+        elif len(core) < len(cur) - 1:
+            cur = core + " "
+        self.last_char = cur[-1]
+        self.buffered += cur
+
+    def _flush(self, name):
+        buffered = self.buffered
+        if name in _BLOCK_FLUSH:
+            buffered = buffered.rstrip(_ASCII_WS)
+            self.last_char = "\0"
+        if buffered:
+            self.emit((E.TEXT, buffered))
+        self.buffered = ""
+
+    def open(self, name, attrs):
+        if self.buffered:
+            self._flush(name)
+        kind = _OPEN_KINDS.get(name)
+        if kind is not None:
+            self.emit((kind, _styling(attrs)) if attrs else _OPEN_EVENTS[name])
+        elif name == "a":
+            self.emit(_link_event(attrs))
+        elif name == "br":
+            self.last_char = "\0"
+            self.emit((E.BREAK_LINE, _styling(attrs) if attrs else None))
+        elif name == "ul" or name == "ol":
+            self.emit(_list_event(name, attrs, self.turn_off_ul,
+                                  self.turn_off_ol))
+        elif name == "img":
+            self.emit(_image_event(attrs))
+        elif name == "style":
+            self.in_style = True
+            self.mute += 1
+        elif name == "title" or name == "script" or name == "iframe":
+            self.mute += 1
+        elif name == "meta":
+            _handle_meta(self.meta, attrs)
+
+    def close(self, name):
+        if self.buffered:
+            self._flush(name)
+        ev = _CLOSE_EVENTS.get(name)
+        if ev is not None:
+            self.emit(ev)
+        elif name == "style":
+            self.in_style = False
+            self.mute -= 1
+            self.emit((E.STYLE, "".join(self.style_text)))
+            self.style_text = []
+        elif name == "title" or name == "script" or name == "iframe":
+            self.mute -= 1
+
+    def walk(self, children):
+        """Emit finished subtrees.  Iterative (a stack of children
+        iterators): crawl pages nest thousands of elements deep, far
+        past Python's recursion limit."""
+        text, open_, close = self.text, self.open, self.close
+        stack = []
+        it = iter(children)
+        while True:
+            for cur in it:
+                if type(cur) is str:
+                    text(cur)
+                else:
+                    open_(cur.name, cur.attrs)
+                    stack.append((it, cur.name))
+                    it = iter(cur.children)
+                    break
+            else:
+                if not stack:
+                    return
+                it, name = stack.pop()
+                close(name)
+
+    def end_head(self, head=None):
+        """The head is complete (``head``: its built part, if any): its
+        text (its CSS) decides list enumeration for the whole page."""
+        head_text = "".join(self.head_text)
+        if head is not None:
+            head_text += head.text_content()
+        if head_text:
+            self.turn_off_ul, self.turn_off_ol = parse_css_list_style(head_text)
+        self.head_text = None
+        if head is not None:
+            self.walk((head,))
+        self.mute -= 1
 
 
 def html_to_events(text: str):
-    """Parse HTML (already UTF-8 text) and return (events, meta dict).
-
-    Event stream mirrors reference html_parser::parse:
-    document ... close_document.  The DOM walk is iterative (a stack
-    of children iterators): crawl pages nest thousands of elements
-    deep, far past Python's recursion limit — the reference's lexbor
-    walk is iterative too.  Walk state lives in locals, and simple
-    open/close events dispatch from the tables above.
-    """
-    head, body = parse_html(text)
-    turn_off_ul = turn_off_ol = False
-    head_text = head.text_content()
-    if head_text:
-        turn_off_ul, turn_off_ol = parse_css_list_style(head_text)
-
-    events = [(E.DOCUMENT, None)]
-    emit = events.append
-    meta = {}
-    in_head = True
-    in_title = in_script = in_style = False
-    style_text = []
-    buffered = ""
-    last_char = "\0"
-    open_names = []
-    parents = []  # children iterators of the open elements
-    children = iter((head, _END_HEAD, body))
-    while True:
-        for cur in children:
-            if type(cur) is str:
-                if in_title or in_script:
-                    continue
-                if in_style:
-                    style_text.append(cur)
-                    continue
-                if in_head:
-                    continue
-                if last_char in _LSTRIP_AFTER:
-                    cur = cur.lstrip(_ASCII_WS)
-                if not cur:
-                    # empty after the trim, or empty from the start
-                    # (a char ref to an invalid code point unescapes
-                    # to "")
-                    continue
-                cur = _ASCII_WS_RUN.sub(" ", cur)
-                last_char = cur[-1]
-                buffered += cur
-            elif cur is _END_HEAD:
-                in_head = False
-            else:
-                break
-        else:
-            cur = _CLOSE
-        if cur is _CLOSE:
-            if not parents:
-                break
-            children = parents.pop()
-            name = open_names.pop()
-        else:
-            name = cur.name
-        if buffered:
-            if name in _BLOCK_FLUSH:
-                buffered = buffered.rstrip(_ASCII_WS)
-                last_char = "\0"
-            if buffered:
-                emit((E.TEXT, buffered))
-                buffered = ""
-        if cur is _CLOSE:
-            ev = _CLOSE_EVENTS.get(name)
-            if ev is not None:
-                emit(ev)
-            elif name == "style":
-                in_style = False
-                emit((E.STYLE, "".join(style_text)))
-                style_text = []
-            elif name == "title":
-                in_title = False
-            elif name == "script" or name == "iframe":
-                in_script = False
-            continue
-        attrs = cur.attrs
-        kind = _OPEN_KINDS.get(name)
-        if kind is not None:
-            emit((kind, _styling(attrs) if attrs else None))
-        elif name == "a":
-            emit(_link_event(attrs))
-        elif name == "br":
-            last_char = "\0"
-            emit((E.BREAK_LINE, _styling(attrs) if attrs else None))
-        elif name == "ul" or name == "ol":
-            emit(_list_event(name, attrs, turn_off_ul, turn_off_ol))
-        elif name == "img":
-            emit(_image_event(attrs))
-        elif name == "style":
-            in_style = True
-        elif name == "title":
-            in_title = True
-        elif name == "script" or name == "iframe":
-            in_script = True
-        elif name == "meta":
-            _handle_meta(meta, attrs)
-        open_names.append(name)
-        parents.append(children)
-        children = iter(cur.children)
-    emit((E.CLOSE_DOCUMENT, None))
-    return events, meta
+    """Parse HTML (already UTF-8 text) in one pass; returns (events,
+    meta dict), the events as reference html_parser::parse gives them:
+    document ... close_document."""
+    emitter = _Emitter()
+    TreeBuilder(emitter).feed(text)
+    emitter.emit((E.CLOSE_DOCUMENT, None))
+    return emitter.events, emitter.meta

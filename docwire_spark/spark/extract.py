@@ -120,9 +120,13 @@ def _make_extract_batches(
     schema = _result_schema(with_binary, with_main_content, exports)
 
     def _extract_batches(iterator):
+        import pyarrow as pa
         from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_type
 
         from docwire_spark.kernel.api import extract
+
+        span_type = to_arrow_type(SPAN_TYPE)
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
@@ -134,6 +138,9 @@ def _make_extract_batches(
             out = {f.name: [] for f in schema.fields}
             out["url"] = batch.column("url")
             out["partition_id"] = [pid] * n
+            # spans as flat columns: no per-span dict
+            span_offsets = [0]
+            span_cols = ([], [], [])
             for url, html in zip(urls, htmls):
                 data = html if html is not None else b""
                 res = extract(
@@ -156,12 +163,9 @@ def _make_extract_batches(
                     )
                 if with_binary:
                     out["extracted_bytes"].append(res.text)
-                out["spans"].append(
-                    [
-                        {"start": s, "end": e, "kind": k}
-                        for s, e, k in res.spans
-                    ]
-                )
+                for col, values in zip(span_cols, zip(*res.spans)):
+                    col.extend(values)
+                span_offsets.append(len(span_cols[0]))
                 out["meta_json"].append(
                     json.dumps(res.meta, default=str, sort_keys=True)
                     if res.meta
@@ -170,6 +174,13 @@ def _make_extract_batches(
                 out["error"].append(res.error)
                 out["n_events"].append(res.n_events)
                 out["bytes_in"].append(len(data))
+            item = span_type.value_type
+            out["spans"] = pa.ListArray.from_arrays(
+                pa.array(span_offsets, pa.int32()),
+                pa.StructArray.from_arrays(
+                    [pa.array(c, f.type) for c, f in zip(span_cols, item)],
+                    fields=list(item)),
+                type=span_type)
             if counters is not None:  # one update per Arrow batch
                 counters["docs"].add(n)
                 counters["bytes"].add(sum(out["bytes_in"]))

@@ -210,3 +210,92 @@ def test_char_ref_to_invalid_code_point_is_empty_text():
         res = extract(html, url="t.html")
         assert res.error is None
         assert res.text == text
+
+
+def test_table_region_boundaries():
+    """Events across the edges of a table region (built as a subtree,
+    then emitted through the same whitespace state as the streamed
+    text around it); expectations taken from the tree-then-walk
+    kernel."""
+    cases = {
+        b"before <table><tr><td>cell</td></tr></table> after": [
+            E.DOCUMENT, (E.TEXT, "before"),
+            E.TABLE, E.TABLE_ROW,
+            E.TABLE_CELL, (E.TEXT, "cell"), E.CLOSE_TABLE_CELL,
+            E.CLOSE_TABLE_ROW, E.CLOSE_TABLE,
+            (E.TEXT, "after"), E.CLOSE_DOCUMENT,
+        ],
+        # the <table> start closes the open <p>
+        b"<p>para<table><tr><td>c</td></tr></table>after</p>": [
+            E.DOCUMENT, E.PARAGRAPH, (E.TEXT, "para"), E.CLOSE_PARAGRAPH,
+            E.TABLE, E.TABLE_ROW,
+            E.TABLE_CELL, (E.TEXT, "c"), E.CLOSE_TABLE_CELL,
+            E.CLOSE_TABLE_ROW, E.CLOSE_TABLE,
+            (E.TEXT, "after"), E.CLOSE_DOCUMENT,
+        ],
+        # an <a> open across the whole table
+        b'<a href="/x">in<table><tr><td>cell</td></tr></table>out</a>tail': [
+            E.DOCUMENT, (E.LINK, "/x"), (E.TEXT, "in"),
+            E.TABLE, E.TABLE_ROW,
+            E.TABLE_CELL, (E.TEXT, "cell"), E.CLOSE_TABLE_CELL,
+            E.CLOSE_TABLE_ROW, E.CLOSE_TABLE,
+            (E.TEXT, "out"), E.CLOSE_LINK, (E.TEXT, "tail"),
+            E.CLOSE_DOCUMENT,
+        ],
+        # a region still open at the end of input
+        b"<p>x</p><table><tr><td>open<b>bold": [
+            E.DOCUMENT, E.PARAGRAPH, (E.TEXT, "x"), E.CLOSE_PARAGRAPH,
+            E.TABLE, E.TABLE_ROW, E.TABLE_CELL, (E.TEXT, "open"),
+            E.BOLD, (E.TEXT, "bold"), E.CLOSE_BOLD,
+            E.CLOSE_TABLE_CELL, E.CLOSE_TABLE_ROW, E.CLOSE_TABLE,
+            E.CLOSE_DOCUMENT,
+        ],
+        # foster-parented text and elements, inner and outer table
+        b"<table><tr><td>c1<table>foster<div>d</div><tr><td>in</td>"
+        b"<span>s</span></table>out</td></tr>text<i>i</i></table>": [
+            E.DOCUMENT, (E.TEXT, "text"), (E.TEXT, "i"),
+            E.TABLE, E.TABLE_ROW, E.TABLE_CELL, (E.TEXT, "c1foster"),
+            E.SECTION, (E.TEXT, "d"), E.CLOSE_SECTION,
+            E.SPAN, (E.TEXT, "s"), E.CLOSE_SPAN,
+            E.TABLE, E.TABLE_ROW,
+            E.TABLE_CELL, (E.TEXT, "in"), E.CLOSE_TABLE_CELL,
+            E.CLOSE_TABLE_ROW, E.CLOSE_TABLE,
+            (E.TEXT, "out"), E.CLOSE_TABLE_CELL, E.CLOSE_TABLE_ROW,
+            E.CLOSE_TABLE, E.CLOSE_DOCUMENT,
+        ],
+        # the head's CSS turns off <ul> enumeration in the body
+        b"<html><head><style>ul { list-style: none; }</style></head>"
+        b"<body><ul><li>a</li></ul><ol><li>b</li></ol></body></html>": [
+            E.DOCUMENT, (E.STYLE, "ul { list-style: none; }"),
+            (E.LIST, "none"), E.LIST_ITEM, (E.TEXT, "a"),
+            E.CLOSE_LIST_ITEM, E.CLOSE_LIST,
+            (E.LIST, "decimal"), E.LIST_ITEM, (E.TEXT, "b"),
+            E.CLOSE_LIST_ITEM, E.CLOSE_LIST,
+            E.CLOSE_DOCUMENT,
+        ],
+    }
+    for html, expected in cases.items():
+        assert kinds_and_texts(events_of(html)) == expected, html
+
+
+def test_head_with_noscript_keeps_walk_order():
+    """A ``noscript`` in the head: later head elements sit beside it,
+    and a body opened inside it is all head (muted, its lists styled
+    by CSS that comes after them); expectations taken from the
+    tree-then-walk kernel."""
+    cases = {
+        b"<head><noscript><style>a</style></noscript><style>b</style>"
+        b"<noscript>c</noscript></head><p>d": [
+            E.DOCUMENT, (E.STYLE, "a"), (E.STYLE, "b"),
+            E.PARAGRAPH, (E.TEXT, "d"), E.CLOSE_PARAGRAPH, E.CLOSE_DOCUMENT,
+        ],
+        b"<head><noscript><ul><li></li></ul>"
+        b"<style>ul {list-style: none;}</style></noscript></head>"
+        b"<p>dropped</p>": [
+            E.DOCUMENT, (E.LIST, "none"), E.LIST_ITEM, E.CLOSE_LIST_ITEM,
+            E.CLOSE_LIST, (E.STYLE, "ul {list-style: none;}"),
+            E.CLOSE_DOCUMENT,
+        ],
+    }
+    for html, expected in cases.items():
+        assert kinds_and_texts(events_of(html)) == expected, html

@@ -1,4 +1,5 @@
-"""Interleaved A/B timing of two docwire_spark kernel trees in one process.
+"""Interleaved A/B timing of two docwire_spark kernel trees, one child
+process per tree.
 
 Usage:
     python tools/kernel_ab.py OLD_TREE NEW_TREE [--input crawl_html]
@@ -6,14 +7,18 @@ Usage:
 
 Each tree is a directory holding a ``docwire_spark`` package (for
 example a ``git archive`` of the parent commit, and this checkout).
-Both are imported into this process under their own ``sys.modules``
-snapshot, then timed on the same documents in alternating chunks of
-``--chunk`` documents (the order flips every chunk), so box-speed
-drift between runs falls on both trees alike: back-to-back runs of one
-kernel in separate processes differ by far more than the changes being
-measured.  Every document's plain-text extraction must digest equal
-in both trees (``tests/kernel_inputs.digest``: text, spans, n_events,
-meta, mime, error), or the tool exits 1.
+Each tree runs in its own child process, so the two trees share no
+heap and no garbage collector: a tree that leaves cyclic garbage pays
+for its collections itself.  The children are timed on the same
+documents in alternating chunks of ``--chunk`` documents (one child
+runs while the other waits, and the order flips every chunk), so
+box-speed drift falls on both trees alike: back-to-back runs of one
+kernel differ by far more than the changes being measured.  Each child
+first extracts every input once, untimed, so first-use imports (one
+per document format) fall outside the timed chunks.  Every
+document's plain-text extraction must digest equal in both trees
+(``tests/kernel_inputs.digest``: text, spans, n_events, meta, mime,
+error), or the tool exits 1.
 
 Inputs (``--input``):
 - ``crawl_html``: the benchmark's crawl pages (``perfbench.inputs``
@@ -23,66 +28,29 @@ Inputs (``--input``):
   every tag);
 - ``digest``: every input of the digest gate.
 
-It also prints, per tree, the share of text / start-tag / end-tag
-tokens the tree builder handles without calling any of its general
-handlers (``_GENERAL_HANDLERS``), i.e. in the inline fast branches of
-``TreeBuilder.feed``, on the HTML documents of the input.
-
 Output: one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
-import importlib
 import json
 import os
+import pickle
 import statistics
+import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-PKG = "docwire_spark"
 
 from tests import kernel_inputs as K  # noqa: E402  (imports no docwire_spark)
 
 
-def _pkg_modules() -> dict:
-    return {k: m for k, m in sys.modules.items()
-            if k == PKG or k.startswith(PKG + ".")}
-
-
-class Tree:
-    """One kernel tree, importable alongside another: its modules live
-    in ``sys.modules`` only while it is active."""
-
-    def __init__(self, root: str):
-        self.root = os.path.abspath(root)
-        self.mods: dict = {}
-        self.activate()
-        from docwire_spark.kernel import api
-
-        if not api.__file__.startswith(self.root + os.sep):
-            sys.exit(f"{api.__file__} is not under {self.root}")
-        self.api = api
-        self.deactivate()
-
-    def activate(self):
-        for k in _pkg_modules():
-            del sys.modules[k]
-        sys.modules.update(self.mods)
-        sys.path.insert(0, self.root)
-        importlib.invalidate_caches()
-
-    def deactivate(self):
-        self.mods = _pkg_modules()
-        sys.path.remove(self.root)
-
-
 def _rows(args) -> list:
-    """(url, bytes) inputs; imported from this checkout before either
-    tree is activated (activation drops these modules again)."""
+    """(url, bytes) inputs, built from this checkout."""
     if args.input == "crawl_html":
         from perfbench.inputs import _crawl_rows
 
@@ -94,69 +62,66 @@ def _rows(args) -> list:
     return list(K.all_rows())
 
 
-#: TreeBuilder methods outside the inline fast branches of ``feed``
-_GENERAL_HANDLERS = ("text", "start_tag", "start_in_body_special", "end_tag")
+def child(tree: str, rows_path: str) -> None:
+    """Serve timing requests for one tree: each stdin line names a
+    chunk ``start end digest``; the reply is one JSON line with the
+    seconds ``extract`` took over it (and the digests when asked)."""
+    sys.path.insert(0, os.path.abspath(tree))
+    from docwire_spark.kernel.api import extract
 
-
-def fast_shares(tree: Tree, rows: list) -> dict:
-    """Share of tokens per kind that never reach the builder's general
-    handlers (wrapped on the instance, so the tree's code is unchanged)."""
-    tree.activate()
-    try:
-        from docwire_spark.kernel import dom
-        from docwire_spark.kernel.charset import ensure_html_utf8
-
-        api = tree.api
-        total = {"text": 0, "start": 0, "end": 0}
-        general = dict.fromkeys(total, 0)
-        kinds = {dom.TOK_TEXT: "text", dom.TOK_START: "start",
-                 dom.TOK_END: "end"}
-        reached = []
-        for url, data in rows:
-            mime, _ = api.detect_mime(data[:api.SNIFF_PREFIX_BYTES], url)
-            if mime not in api.HTML_MIMES:
-                continue
-            builder = dom.TreeBuilder()
-            for attr in _GENERAL_HANDLERS:
-                if hasattr(builder, attr):
-                    def counted(*a, _f=getattr(builder, attr)):
-                        reached.append(True)
-                        return _f(*a)
-                    setattr(builder, attr, counted)
-            for tok in dom.tokenize(ensure_html_utf8(data)):
-                kind = kinds[tok[0]]
-                total[kind] += 1
-                reached.clear()
-                builder.feed([tok])  # builder state lives on the instance
-                general[kind] += bool(reached)
-        return {k: round(1 - general[k] / total[k], 4) if total[k] else None
-                for k in total} | {"tokens": sum(total.values())}
-    finally:
-        tree.deactivate()
+    if not extract.__code__.co_filename.startswith(os.path.abspath(tree)):
+        sys.exit(f"{extract.__code__.co_filename} is not under {tree}")
+    with open(rows_path, "rb") as f:
+        rows = pickle.load(f)
+    for url, data in rows:  # untimed: first-use imports happen here
+        extract(data, url=url)
+    for line in sys.stdin:
+        start, end, want = map(int, line.split())
+        chunk = rows[start:end]
+        out = []
+        t0 = time.perf_counter()
+        for url, data in chunk:
+            out.append(extract(data, url=url))
+        took = time.perf_counter() - t0
+        digests = ({url: K.digest(res) for (url, _), res in zip(chunk, out)}
+                   if want else None)
+        print(json.dumps({"s": took, "digests": digests}), flush=True)
 
 
 def run(args) -> dict:
     rows = _rows(args)
-    trees = [Tree(args.old), Tree(args.new)]
-    took = [[], []]
-    digests = [{}, {}]
-    for rnd in range(args.rounds):
-        for c, start in enumerate(range(0, len(rows), args.chunk)):
-            chunk = rows[start:start + args.chunk]
-            order = (0, 1) if (c + rnd) % 2 == 0 else (1, 0)
-            for t in order:
-                tree = trees[t]
-                tree.activate()
-                extract = tree.api.extract
-                out = []
-                t0 = time.perf_counter()
-                for url, data in chunk:
-                    out.append(extract(data, url=url))
-                took[t].append(time.perf_counter() - t0)
-                tree.deactivate()
-                if rnd == 0:
-                    for (url, _), res in zip(chunk, out):
-                        digests[t][url] = K.digest(res)
+    with tempfile.TemporaryDirectory() as tmp:
+        rows_path = os.path.join(tmp, "rows.pickle")
+        with open(rows_path, "wb") as f:
+            pickle.dump(rows, f)
+        procs = [
+            subprocess.Popen(
+                [sys.executable, os.path.abspath(__file__), "--child", tree,
+                 rows_path],
+                stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True)
+            for tree in (args.old, args.new)
+        ]
+        took = [[], []]
+        digests = [{}, {}]
+        try:
+            for rnd in range(args.rounds):
+                for c, start in enumerate(range(0, len(rows), args.chunk)):
+                    order = (0, 1) if (c + rnd) % 2 == 0 else (1, 0)
+                    for t in order:
+                        procs[t].stdin.write(
+                            f"{start} {start + args.chunk} {int(rnd == 0)}\n")
+                        procs[t].stdin.flush()
+                        reply = procs[t].stdout.readline()
+                        if not reply:
+                            sys.exit(f"the child for {(args.old, args.new)[t]} "
+                                     "exited")
+                        reply = json.loads(reply)
+                        took[t].append(reply["s"])
+                        digests[t].update(reply["digests"] or {})
+        finally:
+            for p in procs:
+                p.stdin.close()
+                p.wait()
     mismatched = sorted(u for u in digests[0] if digests[0][u] != digests[1][u])
     secs = [sum(t) / args.rounds for t in took]
     n_chunks = len(took[0]) // args.rounds
@@ -174,12 +139,14 @@ def run(args) -> dict:
             a / b for a, b in zip(*took)), 4),
         "digests_equal": not mismatched,
         "mismatched": mismatched[:10],
-        "old_fast_share": fast_shares(trees[0], rows),
-        "new_fast_share": fast_shares(trees[1], rows),
     }
 
 
 def main(argv=None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv[:1] == ["--child"]:
+        child(*argv[1:])
+        return 0
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("old")
     p.add_argument("new")
