@@ -18,10 +18,10 @@ src/html_parser.cpp:208-328, 486-492):
 
 :meth:`TreeBuilder.feed` reads the tokenizer's regex matches inline and
 sends each element open, text run and close straight to one *emitter*
-(``html_extract``'s walk rules); no tree is built.  Only a table region
-(a ``table`` start outside any table, until that table is popped:
-foster parenting and :func:`fix_dom` move content there) and a head
-with a ``noscript``/``template`` in it are built as :class:`Node`
+(``html_extract``'s walk rules); no tree is built for the body.  Only
+the head (until the body opens) and a table region (a ``table`` start
+outside any table, until that table is popped: foster parenting and
+:func:`fix_dom` move content there) are built as :class:`Node`
 subtrees, then walked through the same emitter.  Nodes hold no parent
 pointer, so a parse leaves no reference cycle.
 """
@@ -94,8 +94,6 @@ _TABLE_MODE = frozenset(("table", "tr")) | TABLE_SECTIONS
 _TABLE_MODE_KEEPS = frozenset(("caption", "td", "th", "tr")) | TABLE_SECTIONS
 #: elements that bound the scope of a ``p`` close
 _P_SCOPE = frozenset(("table", "td", "th", "caption"))
-#: head elements that can hold others open: one starts the head tree
-_HEAD_TREE_START = frozenset(("noscript", "template"))
 #: tags whose start or end is never a plain append/push or pop
 _ROOT_TAGS = frozenset(("html", "head", "body"))
 #: start tags :meth:`TreeBuilder.feed` does not stream inline
@@ -156,12 +154,13 @@ class TreeBuilder:
     """Builds a page's element structure and sends it to ``emitter``:
     ``open(name, attrs)``, ``text(str)`` and ``close(name)`` in document
     order, ``walk(children)`` for a finished table region and
-    ``end_head(head=None)`` when the body opens.
+    ``end_head(head)`` for the head when the body opens.
 
     ``open`` is the stack of open element names; ``open_counts`` holds
     per-name open counts, so unmatched end tags short-circuit in O(1)
     (adversarial </x> floods on deep pages were O(n^2)).  ``nodes`` is
-    None unless a subtree is built, else the Nodes of ``open[base:]``."""
+    None unless a subtree is built, else the Nodes of ``open[base:]``:
+    the head tree under ``<html>`` (``base`` 0) until the body opens."""
 
     def __init__(self, emitter):
         self.emitter = emitter
@@ -170,9 +169,9 @@ class TreeBuilder:
         self._p_indices = []       # open <p> stack indices (lazy-pruned)
         self._pscope_indices = []  # table/td/th/caption scope boundaries
         self.in_body_phase = False
-        self.head = self.root = None
+        self.root, self.head = Node("html", {}), Node("head", {})
         self.base = 0
-        self.nodes = None
+        self.nodes = [self.root]
         self.table_nodes = []      # document-order table-mode elements
         self.parents = {}
 
@@ -207,8 +206,7 @@ class TreeBuilder:
 
     def _end_tree(self):
         """Fix up the finished subtree and emit it: the table region
-        under ``root``, or the rest of the head; events stream again
-        after it."""
+        under ``root``, or the head; events stream again after it."""
         fix_dom(self.table_nodes, self.parents)
         if self.base:
             self.emitter.walk(self.root.children)
@@ -287,10 +285,7 @@ class TreeBuilder:
         if not self.in_body_phase:
             self.in_body_phase = True
             if len(self.open) == 1:
-                if self.nodes is None:
-                    self.emitter.end_head()
-                else:
-                    self._end_tree()
+                self._end_tree()
                 self._insert("body", {})
 
     # -- token handlers (feed inlines the streaming cases) -------------
@@ -304,19 +299,12 @@ class TreeBuilder:
             self._ensure_body_phase()
             return True
         if not self.in_body_phase and name in HEAD_CONTENT:
-            if self.nodes is None and name in _HEAD_TREE_START:
-                # later head elements are its siblings, not children
-                # (the event order the digests pin): build the rest of
-                # the head under <html>; what lands in <html> itself
-                # (after the body opens inside it) is dropped
-                self.root, self.head = Node("html", {}), Node("head", {})
-                self.nodes = [self.root]
-            node = None
-            if self.nodes is None:
-                self.emitter.open(name, attrs)
-            else:
-                node = Node(name, attrs)
-                self.head.children.append(node)
+            # head elements are the head's children, also inside a
+            # noscript/template (the event order the digests pin); what
+            # lands in <html> itself (after the body opens inside one)
+            # is dropped
+            node = Node(name, attrs)
+            self.head.children.append(node)
             if name not in VOID_ELEMENTS:
                 self._push(name, node)
             return True

@@ -16,8 +16,9 @@ Replicates the reference's DOM walk and whitespace state machine
 
 These rules live in one emitter, :class:`_Emitter`: ``dom.TreeBuilder``
 calls its ``open`` / ``text`` / ``close`` from the tokenizer loop and
-walks each table region through them once built, so every event goes
-through the same ``buffered`` / ``last_char`` state in document order.
+walks the head and each table region through them once built, so every
+event goes through the same ``buffered`` / ``last_char`` state in
+document order.
 """
 
 from __future__ import annotations
@@ -215,35 +216,33 @@ _LSTRIP_AFTER = _ASCII_WS + "\0"
 class _Emitter:
     """The DOM walk's rules as an event sink.  ``mute`` counts the open
     elements whose text is not rendered (the head, title, script,
-    iframe, style); style text is kept for its STYLE event, and all
-    head text for its CSS (``head_text``, None once the body opens)."""
+    iframe, style); style text is kept for its STYLE event."""
 
     __slots__ = ("events", "emit", "meta", "buffered", "last_char", "mute",
-                 "in_style", "style_text", "head_text", "turn_off_ul",
-                 "turn_off_ol")
+                 "in_style", "style_text", "turn_off_ul", "turn_off_ol")
 
     def __init__(self):
         self.events = [(E.DOCUMENT, None)]
         self.emit = self.events.append
         self.meta = {}
         self.buffered, self.last_char, self.mute = "", "\0", 1
-        self.in_style, self.style_text, self.head_text = False, [], []
+        self.in_style, self.style_text = False, []
         self.turn_off_ul = self.turn_off_ol = False
 
     def text(self, cur):
         if self.mute:
             if self.in_style:
                 self.style_text.append(cur)
-            if self.head_text is not None:
-                self.head_text.append(cur)
             return
         if self.last_char in _LSTRIP_AFTER:
             cur = cur.lstrip(_ASCII_WS)
         if not cur:
             # trimmed away, or "" from a char ref to an invalid code point
             return
-        # the substitution scans at every space; the ``in`` scans run
-        # at C speed and leave it only a trailing run of spaces to fold
+        # the substitution stops at every space, so a run whose only
+        # foldable whitespace is its trailing spaces ("  text  </p>",
+        # most crawl text runs and nearly all their characters) folds
+        # them without it: ~16% of the kernel on the benchmark pages
         core = cur.rstrip(" ")
         if ("  " in core or "\n" in core or "\t" in core or "\r" in core
                 or "\f" in core or "\v" in core):
@@ -322,17 +321,13 @@ class _Emitter:
                 it, name = stack.pop()
                 close(name)
 
-    def end_head(self, head=None):
-        """The head is complete (``head``: its built part, if any): its
-        text (its CSS) decides list enumeration for the whole page."""
-        head_text = "".join(self.head_text)
-        if head is not None:
-            head_text += head.text_content()
+    def end_head(self, head):
+        """The head is complete: its text (its CSS) decides list
+        enumeration for the whole page, then its elements are walked."""
+        head_text = head.text_content()
         if head_text:
             self.turn_off_ul, self.turn_off_ol = parse_css_list_style(head_text)
-        self.head_text = None
-        if head is not None:
-            self.walk((head,))
+        self.walk((head,))
         self.mute -= 1
 
 

@@ -719,19 +719,22 @@ EMB_N_BANDS = 24       # 96 planes total
 
 #: Validity guard shared by EVERY embeddings scan (Spark + oracle): a
 #: 10^12-row embedding table WILL carry NULL, wrong-dimension and
-#: NULL-element rows (failed encoder calls, schema drift), and a single
-#: one must be dropped — not kill the job (numpy kernels crash on
-#: ragged input, codegen indexes past the array) or skew the math (a
-#: NULL element makes Spark's norms NaN or NULL, while DuckDB's
-#: list_sum skips it).  Both engines filter with the same predicate so
-#: row counts stay oracle-true.
+#: NULL-element and NaN/inf-element rows (failed encoder calls, schema
+#: drift), and a single one must be dropped — not kill the job (numpy
+#: kernels crash on ragged input, codegen indexes past the array) or
+#: skew the math (a NULL element makes Spark's norms NaN or NULL, while
+#: DuckDB's list_sum skips it; a NaN or inf element makes the row's
+#: norm and cosines NaN, on which the two engines' results differ).
+#: Both engines filter with the same predicate so row counts stay
+#: oracle-true.
 EMB_VALID_SQL = (
     f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
-    " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
+    " AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0"
 )
 _EMB_VALID_EXPR = (
     f"embedding IS NOT NULL AND size(embedding) = {EMB_DIM}"
-    " AND size(filter(embedding, x -> x IS NULL)) = 0"
+    " AND size(filter(embedding, x -> x IS NULL OR isnan(x)"
+    " OR abs(x) = double('Infinity'))) = 0"
 )
 
 

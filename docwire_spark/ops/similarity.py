@@ -198,19 +198,13 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         vn.filter(F.col("vec_id") < K_CENTROIDS).toDF("cid", "cv", "cnorm")
     )
     csim = vn.crossJoin(cents).withColumn("c_sim", F.expr(_COS_CENT))
-    # argmax centroid per vector (max c_sim, a NULL lowest; tie -> min
-    # cid) as the max of one bigint: the rounded c_sim shifted above 0
-    # (NULL -> 0), then K - 1 - cid.  A fixed-width buffer hash-
-    # aggregates (a struct max sorts all n x K rows), and the partial
-    # agg collapses the K rows per vector map-side
-    last = K_CENTROIDS - 1
-    key = F.coalesce(
-        F.round(F.col("c_sim") * 1e6).cast("bigint") + 1_000_001, F.lit(0)
-    ) * K_CENTROIDS + (last - F.col("cid"))
-    assign = csim.groupBy("vec_id").agg(F.max(key).alias("m")).select(
-        "vec_id",
-        (last - F.col("m") % K_CENTROIDS)
-        .cast(csim.schema["cid"].dataType).alias("cid"),
+    # argmax centroid per vector: max(struct(c_sim, -cid)) ==
+    # (max c_sim, tie -> min cid); partial agg collapses the K rows
+    # per vector map-side, so the shuffle is one slim row per vector
+    assign = (
+        csim.groupBy("vec_id")
+        .agg(F.max(F.struct("c_sim", (-F.col("cid")).alias("neg"))).alias("m"))
+        .select("vec_id", (-F.col("m.neg")).alias("cid"))
     )
     w_probe = Window.partitionBy("vec_id").orderBy(
         F.col("c_sim").desc(), F.col("cid")

@@ -64,9 +64,13 @@ def hostile_dir(spark, tmp_path_factory):
     # degenerate embedding rows a 10^12-row table WILL contain: failed
     # encoder call (NULL), empty array, wrong dimension, a NULL element
     # (41 is vector 0 with its first element NULL: a near-dup of 0 in
-    # DuckDB, whose list_sum skips the NULL, and a NaN norm in Spark)
+    # DuckDB, whose list_sum skips the NULL, and a NaN norm in Spark),
+    # a NaN element and an inf element (42, 43: vector 1 so salted, a
+    # NaN cosine against every vector in both engines)
     vecs += [(37, None, 1), (38, [], 2), (39, [1.0, 2.0], 3),
-             (40, [None] + [0.5] * 63, 4), (41, [None] + vecs[0][1][1:], 5)]
+             (40, [None] + [0.5] * 63, 4), (41, [None] + vecs[0][1][1:], 5),
+             (42, [float("nan")] + vecs[1][1][1:], 6),
+             (43, [float("inf")] + vecs[1][1][1:], 7)]
     spark.createDataFrame(
         vecs, "vec_id bigint, embedding array<float>, label int"
     ).coalesce(1).write.parquet(os.path.join(d, "embeddings.parquet"))
@@ -83,7 +87,7 @@ def test_all_corpus_ops_match_oracles_on_hostile_rows(spark, hostile_dir):
     on NULL/wrong-dimension vectors before the shared validity guard.
 
     Embedding rows that are NULL / empty / mis-dimensioned or hold a
-    NULL element must be DROPPED identically by both engines
+    NULL, NaN or inf element must be DROPPED identically by both engines
     (dedup.EMB_VALID_SQL); token ops must agree on
     NULL/empty/whitespace-only text."""
     import __spark_entry__ as entry
